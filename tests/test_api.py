@@ -184,6 +184,9 @@ def test_node_files_routes(engine, tmp_path):
     code, env = api.dispatch(engine, "POST", "/api/nodes/999/files",
                              files=[("x", b"y")])
     assert code == 404
+    # an unknown node is 404 even with no file parts (404 before 400)
+    code, env = api.dispatch(engine, "POST", "/api/nodes/999/files", files=[])
+    assert code == 404 and "999" in env["message"]
     code, env = api.dispatch(engine, "POST", "/api/nodes/1/files", files=[])
     assert (code, env) == (400, {"status": "error",
                                  "message": "No files provided"})
@@ -233,6 +236,19 @@ def test_generate_tags_route(engine):
     assert code == 404
 
 
+def test_generate_tags_ignore_bank_row_order(spark, engine):
+    """The tagger keeps at most 5 vocabulary hits: with more hits than that,
+    the chosen tags must not depend on the bank's physical row order."""
+    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "theta"]
+    nid = api.create_node(engine, {"title": " ".join(words), "author": "a",
+                                   "subject": "s"})["nodeId"]
+    engine.tag_bank = spark.createDataFrame([(w,) for w in reversed(words)],
+                                            "tag string")
+    code, env = api.dispatch(engine, "POST", f"/api/nodes/{nid}/tags")
+    assert code == 200 and env["newTagsAdded"] == []
+    assert env["tags"] == sorted(words)[:5]
+
+
 def test_tag_bank_and_nodes_by_tag_routes(engine):
     """GET /api/tags + GET /api/tags/:tag/nodes (main.cpp:619-659)."""
     engine.add_tags_to_bank(["spark", "intro"])
@@ -278,3 +294,64 @@ def test_link_all_and_clusters_routes(engine):
     assert (single["id"], single["nodes"], single["sharedTags"]) == (2, [3], [])
     code, env = api.dispatch(engine, "POST", "/api/clusters")
     assert code == 405
+
+
+def test_similar_error_precedence(engine):
+    """similar: unknown id -> 404; a node whose embedding is NULL or [] ->
+    400; a negative k -> 400 through dispatch, never an escaped Spark
+    error."""
+    from pyspark.sql import functions as F
+
+    code, env = api.dispatch(engine, "GET", "/api/nodes/999/similar")
+    assert code == 404 and "999" in env["message"]
+    code, env = api.dispatch(engine, "GET", "/api/nodes/1/similar")
+    assert code == 400 and env["status"] == "error"   # NULL embedding
+    engine.nodes = engine.nodes.withColumn(
+        "embedding", F.when(F.col("id") == 2, F.array().cast("array<float>"))
+        .otherwise(F.col("embedding")))
+    assert api.get_node(engine, 2)["node"].get("embedding") is None
+    code, env = api.dispatch(engine, "GET", "/api/nodes/2/similar")
+    assert code == 400                                 # [] embedding
+    api.dispatch(engine, "POST", "/api/nodes/3/embedding")
+    code, env = api.dispatch(engine, "GET", "/api/nodes/3/similar",
+                             query={"k": "-3"})
+    assert (code, env) == (400, {"status": "error",
+                                 "message": "k must be non-negative"})
+    code, env = api.dispatch(engine, "GET", "/api/nodes/3/similar",
+                             query={"k": "0"})
+    assert (code, env["count"]) == (200, 0)
+
+
+def _jobs_of(spark, group: str, fn) -> int:
+    """Spark jobs ``fn`` starts, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_point_request_job_budget(spark, engine, tmp_path):
+    """Request-path probes are single CollectLimit actions: on a loaded and
+    checkpointed graph, exists and get cost one Spark job each, listing a
+    node's files after an upload two (probe + read), and generating an
+    embedding one (the lookup that also decides the 404)."""
+    engine.save(str(tmp_path / "db"))
+    eng = GraphEngine.load(spark, str(tmp_path / "db"))
+    eng.checkpoint()
+    eng.add_file(1, "notes.txt", b"x")
+    budget = {
+        "exists": (lambda: eng.exists(2), 1),
+        "get": (lambda: api.dispatch(eng, "GET", "/api/nodes/2"), 1),
+        "files": (lambda: api.dispatch(eng, "GET", "/api/nodes/1/files"), 2),
+        "gen_embedding": (
+            lambda: api.dispatch(eng, "POST", "/api/nodes/3/embedding"), 1),
+    }
+    got = {k: _jobs_of(spark, f"budget-{k}", fn)
+           for k, (fn, _) in budget.items()}
+    assert got == {k: want for k, (_, want) in budget.items()}
+    assert api.dispatch(eng, "GET", "/api/nodes/1/files")[1]["files"] == \
+        ["notes.txt"]

@@ -391,3 +391,38 @@ def test_zorder_by_survives_colliding_column_names(spark):
     assert set(out.columns) == {"x", "y", "lo1", "_z"}
     rows = sorted((r["x"], r["lo1"], r["_z"]) for r in out.collect())
     assert rows == [(i, "keep-%d" % i, i + 100) for i in range(20)]
+
+
+def test_next_id_reuses_a_deleted_highest_id(engine):
+    """next_id is max(id)+1 over the live nodes: a gap below the maximum is
+    never refilled, but deleting the highest id hands it to the next
+    create."""
+    ids = [engine.ingest_node({"title": t, "author": "a", "subject": "s"})
+           for t in ("a", "b", "c")]
+    assert ids == [1, 2, 3]
+    engine.delete_node(2)
+    assert engine.ingest_node({"title": "d", "author": "a", "subject": "s"}) == 4
+    engine.delete_node(4)
+    assert engine.ingest_node({"title": "e", "author": "a", "subject": "s"}) == 4
+
+
+def test_writes_leave_no_python_rdd_leaf(engine, tmp_path):
+    """Write deltas are JVM literal relations: after creates, uploads, tag
+    bank additions and id-list deletes, no state table's plan reads a
+    Python RDD (whose every scan would start Python workers)."""
+    from thewhisperdb_spark.schemas import NODE_SCHEMA
+
+    a = engine.ingest_node({"title": "A", "author": "x", "subject": "s"},
+                           files=[("a.txt", b"1"), ("b.txt", b"2")],
+                           storage_root=str(tmp_path))
+    b = engine.ingest_node({"title": "B", "author": "x", "subject": "s"})
+    engine.add_file(b, "c.txt", b"3")
+    engine.add_tags_to_bank(["t1", "t2"])
+    engine.merge_nodes(engine.nodes.filter("id < 0").select(
+        *[f.name for f in NODE_SCHEMA.fields]), delete_ids=[b])
+    for df in (engine.nodes, engine.node_files, engine.tag_bank):
+        assert "LogicalRDD" not in df._jdf.queryExecution().analyzed().toString()
+    assert [r["id"] for r in engine.nodes.collect()] == [a]
+    # the first upload of a new node is its storage_path (M4)
+    assert engine.find(a)["storage_path"].rsplit("/", 1)[1].startswith("a_")
+    assert engine.node_files.filter(f"node_id = {a}").count() == 2

@@ -496,7 +496,6 @@ PLAN_LINT_ALLOWLIST: dict[str, set[str]] = {
     "domain_mixture_weights": {"global (single-partition) window"},
     "mixture_epoch_schedule": {"global (single-partition) window"},
     "funnel_time_to_convert": {"global (single-partition) window"},
-    "jaccard_threshold_join": {"global (single-partition) window"},
     "monthly_revenue_trend": {"global (single-partition) window"},
     # ntile over the CUSTOMER DIMENSION is the documented tradeoff in the
     # key itself; the fact-scale path is order_price_deciles

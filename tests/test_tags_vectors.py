@@ -34,6 +34,50 @@ def test_jaccard_partners_threshold(nodes_df):
     assert set(got) == {6}
 
 
+def _random_tagged_graph(spark, seed: int, n: int, vocab: int):
+    """Seeded graph of n nodes with 1-7 tags drawn from ``vocab`` tags, with
+    duplicate tags inside nodes, copies of one tag set, and untagged nodes
+    (empty and NULL arrays)."""
+    import random
+
+    rng = random.Random(seed)
+    words = [f"t{i:03d}" for i in range(vocab)]
+    rows = []
+    for i in range(1, n + 1):
+        tags = rng.choices(words, k=rng.randint(1, 7))  # may repeat a tag
+        rows.append((i, tags))
+    rows[1] = (2, list(rows[0][1]) + rows[0][1][:1])   # same set as node 1
+    rows[2] = (3, list(reversed(rows[0][1])))           # same set, reordered
+    rows[3] = (4, [])
+    rows[4] = (5, None)
+    used = {t for _, ts in rows for t in (ts or [])}
+    return spark.createDataFrame(rows, "id long, tags array<string>"), len(used)
+
+
+@pytest.mark.parametrize("vocab", [12, 200])
+def test_jaccard_partners_matches_all_pairs(spark, vocab):
+    """The one-row probe returns exactly the partners and scores of the
+    all-pairs join filtered to the node, on both jaccard_pairs branches
+    (bitmask for <= 64 distinct tags, prefix filter above)."""
+    nodes, used = _random_tagged_graph(spark, seed=vocab, n=70, vocab=vocab)
+    assert (used <= 64) == (vocab == 12)
+    nodes = nodes.localCheckpoint(eager=True)
+    probes = [1, 2, 4, 5, 17, 42, 70]
+    for th in (0.0, 0.3, 1.0):
+        pairs = TG.jaccard_pairs(nodes, threshold=th).collect()
+        for nid in probes:
+            want = {(r["b"] if r["a"] == nid else r["a"]): r["jaccard"]
+                    for r in pairs if nid in (r["a"], r["b"])}
+            got = {r["id"]: r["jaccard"] for r in
+                   TG.jaccard_partners(nodes, nid, threshold=th).collect()}
+            assert got == want, (vocab, th, nid)
+            if nid in (4, 5):  # untagged probe: no partners
+                assert got == {}
+        if th == 1.0:  # identical sets, duplicates and order ignored
+            assert {r["id"] for r in TG.jaccard_partners(
+                nodes, 1, threshold=th).collect()} >= {2, 3}
+
+
 def test_cosine_edge_rules(spark):
     df = spark.createDataFrame(
         [([1.0, 0.0], [1.0, 0.0]), ([1.0, 0.0], [0.0, 1.0]),

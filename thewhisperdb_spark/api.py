@@ -176,12 +176,16 @@ def similar_nodes(engine: GraphEngine, node_id: Any, k: Any = 10) -> dict:
 
     nid = _parse_int(node_id, "id")
     k_i = _parse_int(k, "k")
-    if not engine.exists(nid):
+    if k_i < 0:
+        raise ApiError(400, "k must be non-negative")
+    # one probe decides both errors: no row -> 404, no embedding -> 400
+    probe = (engine.nodes.filter(F.col("id") == nid)
+             .select("embedding").take(1))
+    if not probe:
         raise ApiError(404, f"node {nid} not found")
-    embedded = engine.nodes.filter(has_embedding("embedding"))
-    probe = embedded.filter(F.col("id") == nid)
-    if not probe.limit(1).count():
+    if not probe[0]["embedding"]:
         raise ApiError(400, f"node {nid} has no embedding")
+    embedded = engine.nodes.filter(has_embedding("embedding"))
     top = topk_similar(embedded.select("id", "embedding"), nid, k=k_i,
                        id_col="id")
     sims = {r["id"]: r["similarity"] for r in top.collect()}
@@ -232,15 +236,26 @@ def add_files_to_node(engine: GraphEngine, node_id: Any,
                       storage_root: str | None = None) -> dict:
     """POST /api/nodes/:id/files (``src/main.cpp:350-389``): 404 on unknown
     node, 400 "No files provided" when the multipart carried no file parts,
-    else add every part (M4) and return the stored paths (201 envelope)."""
+    else add every part (M4) and return the stored paths (201 envelope).
+    The node is probed once: by ``add_files``, or here when there are no
+    files to add."""
     nid = _parse_int(node_id, "id")
-    if not engine.exists(nid):
-        raise ApiError(404, f"Node not found: {nid}")
     if not files:
+        if not engine.exists(nid):
+            raise ApiError(404, f"Node not found: {nid}")
         raise ApiError(400, "No files provided")
-    added = [engine.add_file(nid, name, data, storage_root)
-             for name, data in files]
+    try:
+        added = engine.add_files(nid, files, storage_root)
+    except KeyError:
+        raise ApiError(404, f"Node not found: {nid}") from None
     return {"status": "success", "nodeId": nid, "addedFiles": added}
+
+
+def _find_or_404(engine: GraphEngine, nid: int) -> dict:
+    try:
+        return engine.find(nid)
+    except KeyError:
+        raise ApiError(404, f"Node not found: {nid}") from None
 
 
 def _node_text(node: dict) -> str:
@@ -261,9 +276,8 @@ def generate_node_embedding(engine: GraphEngine, node_id: Any,
     from thewhisperdb_spark.functions.llm import hash_embedder
 
     nid = _parse_int(node_id, "id")
-    if not engine.exists(nid):
-        raise ApiError(404, f"Node not found: {nid}")
-    emb = (embedder or hash_embedder(dim))([_node_text(engine.find(nid))])[0]
+    node = _find_or_404(engine, nid)
+    emb = (embedder or hash_embedder(dim))([_node_text(node)])[0]
     vec = F.array(*[F.lit(float(v)).cast("float") for v in emb])
     engine.nodes = engine.nodes.withColumn(
         "embedding",
@@ -283,12 +297,12 @@ def generate_node_tags(engine: GraphEngine, node_id: Any,
     from thewhisperdb_spark.operators.tags import jaccard_partners
 
     nid = _parse_int(node_id, "id")
-    if not engine.exists(nid):
-        raise ApiError(404, f"Node not found: {nid}")
-    content = _node_text(engine.find(nid)).strip()
+    content = _node_text(_find_or_404(engine, nid)).strip()
     if not content:
         raise ApiError(500, "No content to generate tags from")
-    bank = [r["tag"] for r in engine.tag_bank.collect()]
+    # sorted: the tagger keeps vocabulary hits in bank order and truncates,
+    # so an unsorted bank would make the tags depend on its row order
+    bank = sorted(r["tag"] for r in engine.tag_bank.collect())
     if tagger is None:  # deterministic stand-in honoring TagClient's contract
         tagger = keyword_tagger(bank)
     tags = list(tagger([content])[0])
@@ -332,7 +346,10 @@ def tag_nodes(engine: GraphEngine, tag: str) -> dict:
     envelopes for every node carrying the tag (J1 + F9 projection)."""
     from thewhisperdb_spark.operators.tags import nodes_by_tag
 
-    rows = _node_rows(nodes_by_tag(engine.nodes, tag).orderBy("id"))
+    # id order is set on the driver: the page is already collected, and a
+    # Spark orderBy would add a shuffle to the request
+    rows = sorted(_node_rows(nodes_by_tag(engine.nodes, tag)),
+                  key=lambda d: d["id"])
     return {"status": "success", "tag": tag, "nodes": rows,
             "count": len(rows)}
 

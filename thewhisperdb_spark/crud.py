@@ -21,7 +21,13 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, MapType
+from pyspark.sql.types import (
+    ArrayType,
+    LongType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 from thewhisperdb_spark.schemas import (
     NODE_FILES_SCHEMA,
@@ -31,12 +37,27 @@ from thewhisperdb_spark.schemas import (
 )
 
 _TABLES = ("nodes", "node_files", "tag_bank")
+_ID_SCHEMA = StructType([StructField("id", LongType(), False)])
 
 # Patch-field type validators mirroring the reference's partial-update rules
 # (``src/core/GNode.cpp:148-205``): a field is applied only when present AND
 # type-valid; invalid-typed fields are silently skipped, not errors.
 _STRING_FIELDS = ("title", "author", "subject", "description", "date",
                   "storage_path")
+
+
+def _literal_rows(spark: SparkSession, schema: StructType,
+                  rows: list[tuple]) -> DataFrame:
+    """``rows`` (tuples in ``schema`` field order) as a one-partition JVM
+    literal relation cast to ``schema``. ``spark.createDataFrame(list)``
+    would leave a Python-RDD leaf in every later plan over the table, so
+    each scan of it would start Python workers; a literal over
+    ``spark.range`` is planned and read in the JVM alone."""
+    structs = [F.struct(*[F.lit(v).cast(f.dataType).alias(f.name)
+                          for v, f in zip(row, schema.fields)])
+               for row in rows]
+    return spark.range(1, numPartitions=1).select(
+        F.inline(F.array(*structs).cast(ArrayType(schema))))
 
 
 def _valid_course(v: Any) -> int | None:
@@ -76,11 +97,11 @@ class GraphEngine:
                  tag_bank: DataFrame | None = None):
         self.spark = spark
         self.nodes = nodes if nodes is not None else \
-            spark.createDataFrame([], NODE_SCHEMA)
+            _literal_rows(spark, NODE_SCHEMA, [])
         self.node_files = node_files if node_files is not None else \
-            spark.createDataFrame([], NODE_FILES_SCHEMA)
+            _literal_rows(spark, NODE_FILES_SCHEMA, [])
         self.tag_bank = tag_bank if tag_bank is not None else \
-            spark.createDataFrame([], TAG_BANK_SCHEMA)
+            _literal_rows(spark, TAG_BANK_SCHEMA, [])
 
     # ---- S1-S3 persistence -------------------------------------------------
 
@@ -192,21 +213,23 @@ class GraphEngine:
         return rows[0].asDict()
 
     def exists(self, node_id: int) -> bool:
-        """F8 (``GraphDB.cpp:40-43``)."""
-        return bool(self.nodes.filter(F.col("id") == node_id).limit(1).count())
+        """F8 (``GraphDB.cpp:40-43``): one CollectLimit probe."""
+        return _any_row(self.nodes, "id", node_id)
 
     def count(self) -> int:
         """A1 (``GraphDB.cpp:195-197``)."""
         return self.nodes.count()
 
     def next_id(self) -> int:
-        """M1 id generation: ``max(id) + 1`` — one scalar aggregate,
-        single-writer. Intentional divergence from the reference
-        (``GraphDB.cpp:485-491``): its static counter restarts at 1 per
-        process and re-fills gaps left by deletions after a restart; here
-        ids of deleted nodes are NEVER reused (monotone over the life of the
-        stored snapshot), which is the safer contract when ids leak into
-        edges, files, and external references."""
+        """M1 id generation: ``max(id) + 1`` over the live nodes — one
+        scalar aggregate, single-writer. Ids in a gap (a deleted node below
+        the current maximum) are never handed out again, but deleting the
+        node that holds the highest id frees that id: the next create gets
+        it back. The reference (``GraphDB.cpp:485-491``) differs the other
+        way: its static counter restarts at 1 per process and re-fills
+        every gap after a restart. Callers that keep ids in external
+        references must not delete the newest node and expect its id to
+        stay retired."""
         row = self.nodes.agg(F.max("id").alias("m")).collect()[0]
         return int(row["m"] or 0) + 1
 
@@ -231,24 +254,17 @@ class GraphEngine:
 
             date = _dt.datetime.now().strftime("%Y-%m-%d %H:%M:%S")
         new_id = self.next_id()
-        row = {
-            "id": new_id,
-            "title": meta["title"],
-            "author": meta["author"],
-            "subject": meta["subject"],
-            "course": course if course is not None else 0,
-            "description": meta.get("description", "") if
-            isinstance(meta.get("description", ""), str) else "",
-            "date": date,
-            "tags": tags if tags is not None else [],
-            "storage_path": None,
-            "linked_nodes": [],
-            "embedding": None,
-        }
-        new_df = self.spark.createDataFrame([row], NODE_SCHEMA)
-        self.nodes = self.nodes.unionByName(new_df)
-        for orig_name, content in (files or []):
-            self.add_file(new_id, orig_name, content, storage_root)
+        # a node created here has no files yet: the first upload becomes its
+        # storage_path (M4) in the new row itself, with no has-files probe
+        paths = self._store_files(new_id, files or [], storage_root)
+        description = meta.get("description", "")
+        row = (new_id, meta["title"], meta["author"], meta["subject"],
+               course if course is not None else 0,
+               description if isinstance(description, str) else "",
+               date, tags if tags is not None else [],
+               paths[0] if paths else None, [], None)
+        self.nodes = self.nodes.unionByName(
+            _literal_rows(self.spark, NODE_SCHEMA, [row]))
         return new_id
 
     # ---- M2 partial update -------------------------------------------------
@@ -341,8 +357,8 @@ class GraphEngine:
                 dels = delete_ids.select(
                     F.col(delete_ids.columns[0]).cast("long").alias("id"))
             else:
-                dels = self.spark.createDataFrame(
-                    [(int(i),) for i in delete_ids], "id long")
+                dels = _literal_rows(self.spark, _ID_SCHEMA,
+                                     [(int(i),) for i in delete_ids])
             merged = merged.join(dels, "id", "left_anti")
         self.nodes = merged
 
@@ -364,25 +380,38 @@ class GraphEngine:
 
     def add_file(self, node_id: int, orig_name: str, content: bytes,
                  storage_root: str | None = None) -> str:
-        """M4 (``GraphDB.cpp:416-448``): save bytes (S5), append path row,
-        first file sets ``storage_path``."""
+        """M4 (``GraphDB.cpp:416-448``) for one file; see ``add_files``."""
+        return self.add_files(node_id, [(orig_name, content)], storage_root)[0]
+
+    def add_files(self, node_id: int, files: list[tuple[str, bytes]],
+                  storage_root: str | None = None) -> list[str]:
+        """M4 (``GraphDB.cpp:416-448``): save each file's bytes (S5), append
+        their path rows in order, and let the first file of a node that had
+        none set its ``storage_path``. Raises KeyError if the node is absent.
+        Returns the stored paths."""
         if not self.exists(node_id):
             raise KeyError(node_id)
-        from thewhisperdb_spark.storage import save_file
-
-        rel_path = save_file(storage_root, orig_name, content) if storage_root \
-            else orig_name
-        new_row = self.spark.createDataFrame(
-            [(node_id, rel_path)], NODE_FILES_SCHEMA)
-        had_files = bool(
-            self.node_files.filter(F.col("node_id") == node_id).limit(1).count())
-        self.node_files = self.node_files.unionByName(new_row)
-        if not had_files:
+        had_files = _any_row(self.node_files, "node_id", node_id)
+        paths = self._store_files(node_id, files, storage_root)
+        if paths and not had_files:
             self.nodes = self.nodes.withColumn(
                 "storage_path",
-                F.when(F.col("id") == node_id, F.lit(rel_path))
+                F.when(F.col("id") == node_id, F.lit(paths[0]))
                 .otherwise(F.col("storage_path")))
-        return rel_path
+        return paths
+
+    def _store_files(self, node_id: int, files: list[tuple[str, bytes]],
+                     storage_root: str | None) -> list[str]:
+        """Save the files (S5) and append their ``node_files`` rows as one
+        literal delta; ``nodes`` is left to the caller."""
+        from thewhisperdb_spark.storage import save_file
+
+        paths = [save_file(storage_root, name, content) if storage_root
+                 else name for name, content in files]
+        if paths:
+            self.node_files = self.node_files.unionByName(_literal_rows(
+                self.spark, NODE_FILES_SCHEMA, [(node_id, p) for p in paths]))
+        return paths
 
     def remove_file(self, node_id: int, rel_path: str,
                     storage_root: str | None = None) -> None:
@@ -397,9 +426,7 @@ class GraphEngine:
             delete_file(storage_root, rel_path)
         self.node_files = self.node_files.filter(
             ~((F.col("node_id") == node_id) & (F.col("file_path") == rel_path)))
-        has_files = bool(
-            self.node_files.filter(F.col("node_id") == node_id).limit(1).count())
-        if not has_files:
+        if not _any_row(self.node_files, "node_id", node_id):
             self.nodes = self.nodes.withColumn(
                 "storage_path",
                 F.when(F.col("id") == node_id, F.lit(None).cast("string"))
@@ -418,7 +445,7 @@ class GraphEngine:
         """A8 (``GraphDB.cpp:499-506``)."""
         from thewhisperdb_spark.operators.tags import tag_bank_union
 
-        new = self.spark.createDataFrame([(t,) for t in tags], TAG_BANK_SCHEMA)
+        new = _literal_rows(self.spark, TAG_BANK_SCHEMA, [(t,) for t in tags])
         self.tag_bank = tag_bank_union(self.tag_bank, new)
 
     def checkpoint(self) -> None:
@@ -490,6 +517,13 @@ class GraphEngine:
                 # swallowing it would silently drop data from the read
                 dfs[t] = spark.read.parquet(tdir)
         return cls(spark, dfs["nodes"], dfs["node_files"], dfs["tag_bank"])
+
+
+def _any_row(df: DataFrame, key: str, value: int) -> bool:
+    """Whether any row of ``df`` has ``key == value``: one CollectLimit
+    action that stops at the first hit (``limit(1).count()`` would add a
+    shuffle and a second job)."""
+    return bool(df.filter(F.col(key) == value).select(key).take(1))
 
 
 # ---- versioned snapshots (time travel) -------------------------------------

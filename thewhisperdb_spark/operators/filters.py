@@ -81,5 +81,6 @@ def point_lookup(df: DataFrame, node_id: int, id_col: str = "id") -> DataFrame:
 
 
 def exists(df: DataFrame, node_id: int, id_col: str = "id") -> bool:
-    """Id presence test (F8 — ``src/core/GraphDB.cpp:40-43``)."""
-    return bool(df.filter(F.col(id_col) == F.lit(node_id)).limit(1).count())
+    """Id presence test (F8 — ``src/core/GraphDB.cpp:40-43``): one
+    CollectLimit action that stops at the first hit."""
+    return bool(df.filter(F.col(id_col) == F.lit(node_id)).select(id_col).take(1))

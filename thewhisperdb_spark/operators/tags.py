@@ -190,11 +190,29 @@ def jaccard_partners(nodes: DataFrame, node_id: int, threshold: float = 0.3,
                      id_col: str = "id", tags_col: str = "tags") -> DataFrame:
     """J4 ``findSimilarNodesByTags`` (``src/core/GraphDB.cpp:576-603``, default
     θ=0.3 ``include/core/GraphDB.hpp:51``): partners of one node with
-    Jaccard >= θ. Returns (id, jaccard)."""
-    pairs = jaccard_pairs(nodes, id_col, tags_col, threshold)
-    mine = pairs.filter((F.col("a") == node_id) | (F.col("b") == node_id))
-    partner = F.when(F.col("a") == node_id, F.col("b")).otherwise(F.col("a"))
-    return mine.select(partner.alias("id"), "jaccard")
+    Jaccard >= θ. Returns (id, jaccard).
+
+    A one-row probe, not the all-pairs join: the node's distinct sorted tag
+    set is broadcast and every other tagged node is scored against it in one
+    scan, so the cost is O(n) per call. The arithmetic is ``jaccard_pairs``'
+    (distinct tag sets, ``inter.cast("double") / union``, ``inter > 0``), so
+    both return the same partners and scores. An untagged node has none."""
+    def tag_set(c: str):
+        return F.array_sort(F.array_distinct(F.col(c)))
+
+    probe = nodes.filter(F.col(id_col) == node_id).select(
+        tag_set(tags_col).alias("_pts"))
+    others = nodes.filter((F.col(id_col) != node_id)
+                          & (F.size(F.col(tags_col)) > 0)).select(
+        F.col(id_col).alias("id"), tag_set(tags_col).alias("_ts"))
+    inter = F.size(F.array_intersect(F.col("_ts"), F.col("_pts")))
+    union = F.size(F.col("_ts")) + F.size(F.col("_pts")) - inter
+    return (others.join(F.broadcast(probe),
+                        F.arrays_overlap(F.col("_ts"), F.col("_pts")))
+            .select("id", inter.alias("_inter"),
+                    (inter.cast("double") / union).alias("jaccard"))
+            .filter((F.col("_inter") > 0) & (F.col("jaccard") >= threshold))
+            .select("id", "jaccard"))
 
 
 def tag_bank_union(bank: DataFrame, new_tags: DataFrame) -> DataFrame:
