@@ -66,6 +66,28 @@ def test_get_update_delete_errors(engine):
     assert e.value.status == 404
 
 
+@pytest.mark.parametrize("field,value,stored", [
+    ("linked_nodes", ["x"], None),
+    ("linked_nodes", [None], None),
+    ("linked_nodes", [1, "3"], [1, 3]),
+    ("embedding", ["a"], None),
+    ("embedding", [None], None),
+    ("embedding", [0.5, 1], [0.5, 1.0]),
+])
+def test_update_skips_invalid_array_elements(engine, field, value, stored):
+    """An array patch field with any element that fails int()/float() is
+    skipped like any other type-invalid field (GNode.cpp:148-205); the
+    valid fields of the same patch still apply. stored=None: skipped."""
+    before = api.get_node(engine, 1)["node"]
+    code, env = api.dispatch(engine, "PUT", "/api/nodes/1",
+                             body={field: value, "title": "Patched"})
+    assert (code, env) == (200, {"status": "success", "nodeId": 1})
+    expected = {**before, "title": "Patched"}
+    if stored is not None:
+        expected[field] = stored
+    assert api.get_node(engine, 1)["node"] == expected
+
+
 @pytest.mark.slow  # crash/replay marathon: CI-tier
 def test_similar_and_cluster_job(engine):
     # no embedding yet -> 400 (src/main.cpp:539-546 error path)

@@ -426,3 +426,20 @@ def test_writes_leave_no_python_rdd_leaf(engine, tmp_path):
     # the first upload of a new node is its storage_path (M4)
     assert engine.find(a)["storage_path"].rsplit("/", 1)[1].startswith("a_")
     assert engine.node_files.filter(f"node_id = {a}").count() == 2
+
+
+def test_one_write_adds_one_plan_node(engine):
+    """A single-row write is one Project over engine.nodes whatever its
+    field count, so request lineage grows by one node per write."""
+    nid = engine.ingest_node({"title": "A", "author": "x", "subject": "s"})
+    engine.checkpoint()
+
+    def plan_nodes() -> int:
+        plan = engine.nodes._jdf.queryExecution().analyzed()
+        return sum(1 for ln in plan.treeString().splitlines() if ln.strip())
+
+    before = plan_nodes()
+    engine.update_node(nid, {"title": "B", "course": "7", "tags": "p, q"})
+    assert plan_nodes() == before + 1
+    node = engine.find(nid)
+    assert (node["title"], node["course"], node["tags"]) == ("B", 7, ["p", "q"])

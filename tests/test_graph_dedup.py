@@ -966,3 +966,44 @@ def test_claim_cannot_unblind_readers_onto_torn_state(spark, tmp_path):
     assert D.lsh_index_probe(
         spark, path, docs.filter(F.col("doc_id") < 5),
         threshold=0.99).count() > 0
+
+
+def test_meta_fast_path_honours_default_fs(spark, tmp_path):
+    """A scheme-less meta path is read driver-side only when Hadoop's
+    fs.defaultFS is file:; under another default filesystem Spark resolves
+    it there, so the pyarrow fast path must not read a local directory of
+    the same name."""
+    from thewhisperdb_spark.operators.indexmeta import (
+        parquet_row_count, read_meta_rows, write_meta_row)
+
+    meta_dir = str(tmp_path / "meta")
+    write_meta_row(spark, meta_dir, "format_version int", [3])
+    spark_reads = []
+
+    class SparkSpy:
+        """The session's Hadoop conf, with the Spark reader replaced by a
+        recorder, so no read ever contacts the default filesystem."""
+        _jsc = spark._jsc
+
+        class read:
+            @staticmethod
+            def parquet(path):
+                spark_reads.append(path)
+                raise RuntimeError("spark reader")
+
+    conf = spark._jsc.hadoopConfiguration()
+    old = conf.get("fs.defaultFS")
+    try:
+        conf.set("fs.defaultFS", "hdfs://127.0.0.1:9")
+        for read in (read_meta_rows, parquet_row_count):
+            with pytest.raises(RuntimeError, match="spark reader"):
+                read(SparkSpy, meta_dir)
+        assert spark_reads == [meta_dir, meta_dir]
+        # an explicit file: scheme is local whatever the default
+        assert read_meta_rows(SparkSpy, "file://" + meta_dir) == [
+            {"format_version": 3}]
+    finally:
+        conf.set("fs.defaultFS", old)
+    assert read_meta_rows(SparkSpy, meta_dir) == [{"format_version": 3}]
+    assert parquet_row_count(SparkSpy, meta_dir) == 1
+    assert spark_reads == [meta_dir, meta_dir]

@@ -258,3 +258,20 @@ def test_snapshot_drift_report_psi_semantics(spark):
     assert all(v is not None for r in rows.values() for v in r)
     # total PSI flags the shift direction-insensitively
     assert sum(r["psi"] for r in rows.values()) > 0.25
+
+
+def test_table_cache_keeps_one_entry_per_table_file(spark, tmp_path):
+    """Rewriting a testdata file replaces its load_table cache entry
+    instead of adding a second one beside the stale plan."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from thewhisperdb_spark import catalog
+
+    path = str(tmp_path / "region.parquet")
+    for n in (1, 2, 3):
+        pq.write_table(pa.table({"r_regionkey": list(range(n))}), path)
+        assert catalog.load_table(spark, str(tmp_path), "region").count() == n
+        assert catalog.load_table(spark, str(tmp_path), "region").count() == n
+    assert [k for k in catalog._TABLE_CACHE if k[1] == path] == [
+        (spark, path, "region")]

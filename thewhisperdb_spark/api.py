@@ -37,17 +37,8 @@ from typing import Any
 from pyspark.sql import functions as F
 
 from thewhisperdb_spark.crud import GraphEngine
-from thewhisperdb_spark.operators.filters import (
-    conjunction,
-    contains_filter,
-    eq_filter,
-    has_embedding,
-    tag_filter,
-)
+from thewhisperdb_spark.operators.filters import find_nodes, has_embedding
 from thewhisperdb_spark.operators.sorting import paginate, sort_nodes
-
-# whitelisted filter keys (``src/main.cpp:72-78``)
-FILTER_KEYS = ("subject", "author", "course", "title", "tag")
 
 
 class ApiError(Exception):
@@ -76,39 +67,18 @@ def _parse_int(value: Any, name: str) -> int:
         raise ApiError(400, f"invalid integer for {name}: {value!r}") from None
 
 
-def _build_predicate(filters: dict[str, str]):
-    preds = []
-    for k, v in filters.items():
-        if k not in FILTER_KEYS:
-            continue  # unknown filter keys are ignored (whitelist semantics)
-        if k == "title":
-            preds.append(contains_filter("title", v))        # F4 substring
-        elif k == "tag":
-            preds.append(tag_filter(v))                      # F5 membership
-        elif k == "course":
-            try:
-                preds.append(eq_filter("course", int(v)))    # F3 parse
-            except ValueError:
-                preds.append(F.lit(False))  # unparseable course excludes all
-        else:
-            preds.append(eq_filter(k, v))                    # F1/F2 equality
-    return conjunction(*preds) if preds else None
-
-
 def list_nodes(engine: GraphEngine, filters: dict[str, str] | None = None,
                sort: str = "id", order: str = "asc",
                limit: Any = 0, offset: Any = 0) -> dict:
-    """GET /api/nodes: filter conjunction -> sort -> offset/limit -> envelope
+    """GET /api/nodes: filter conjunction (``find_nodes``, unknown keys
+    ignored) -> sort -> offset/limit -> envelope
     {status, count, nodes[, limit, offset]}."""
     limit_i = _parse_int(limit, "limit")
     offset_i = _parse_int(offset, "offset")
     if order not in ("asc", "desc"):
         order = "asc"
-    df = engine.nodes
-    pred = _build_predicate(filters or {})
-    if pred is not None:
-        df = df.filter(pred)
-    df = sort_nodes(df, sort, ascending=(order == "asc"))
+    df = sort_nodes(find_nodes(engine.nodes, filters or {}), sort,
+                    ascending=(order == "asc"))
     if offset_i < 0 or limit_i < 0:
         raise ApiError(400, "limit/offset must be non-negative")
     page = paginate(df, offset=offset_i, limit=limit_i)
@@ -143,7 +113,6 @@ def create_node(engine: GraphEngine, meta: dict,
 
 def update_node(engine: GraphEngine, node_id: Any, patch: dict) -> dict:
     nid = _parse_int(node_id, "id")
-    patch = {k: v for k, v in patch.items() if k != "id"}  # id immutable
     try:
         engine.update_node(nid, patch)
     except KeyError:
@@ -162,11 +131,8 @@ def delete_node(engine: GraphEngine, node_id: Any,
 
 
 def count_nodes(engine: GraphEngine, filters: dict[str, str] | None = None) -> dict:
-    df = engine.nodes
-    pred = _build_predicate(filters or {})
-    if pred is not None:
-        df = df.filter(pred)
-    return {"status": "success", "count": df.count()}
+    return {"status": "success",
+            "count": find_nodes(engine.nodes, filters or {}).count()}
 
 
 def similar_nodes(engine: GraphEngine, node_id: Any, k: Any = 10) -> dict:
@@ -278,10 +244,7 @@ def generate_node_embedding(engine: GraphEngine, node_id: Any,
     nid = _parse_int(node_id, "id")
     node = _find_or_404(engine, nid)
     emb = (embedder or hash_embedder(dim))([_node_text(node)])[0]
-    vec = F.array(*[F.lit(float(v)).cast("float") for v in emb])
-    engine.nodes = engine.nodes.withColumn(
-        "embedding",
-        F.when(F.col("id") == nid, vec).otherwise(F.col("embedding")))
+    engine.set_fields(nid, {"embedding": [float(v) for v in emb]})
     return {"status": "success", "message": "Embedding generated",
             "nodeId": nid}
 
@@ -309,28 +272,11 @@ def generate_node_tags(engine: GraphEngine, node_id: Any,
     new_tags = [t for t in tags if t not in set(bank)]
     if new_tags:
         engine.add_tags_to_bank(new_tags)
-    engine.nodes = engine.nodes.withColumn(
-        "tags", F.when(F.col("id") == nid,
-                       F.array(*[F.lit(t) for t in tags]) if tags
-                       else F.array().cast("array<string>"))
-        .otherwise(F.col("tags")))
-    # updateLinksForNode(nid, 0.3): partner set is per-node-k-sized (metadata
-    # scale) — the array surgery stays JVM-side.
+    engine.set_fields(nid, {"tags": tags})
+    # updateLinksForNode(nid, 0.3)
     partners = [r["id"] for r in
                 jaccard_partners(engine.nodes, nid, threshold=0.3).collect()]
-    if partners:
-        mine = F.array(*[F.lit(int(p)).cast("long") for p in partners])
-        engine.nodes = engine.nodes.withColumn(
-            "linked_nodes",
-            F.when(F.col("id") == nid,
-                   F.array_union(F.coalesce(F.col("linked_nodes"),
-                                            F.array().cast("array<long>")),
-                                 mine))
-            .when(F.col("id").isin(partners),
-                  F.array_union(F.coalesce(F.col("linked_nodes"),
-                                           F.array().cast("array<long>")),
-                                F.array(F.lit(int(nid)).cast("long"))))
-            .otherwise(F.col("linked_nodes")))
+    engine.link(nid, partners)
     return {"status": "success", "nodeId": nid, "tags": tags,
             "newTagsAdded": new_tags, "linkedNodes": sorted(partners)}
 
@@ -433,9 +379,6 @@ _ROUTES: list[tuple[str, str]] = [
     ("POST", "/api/cluster"),
 ]
 
-_LIST_PARAMS = ("sort", "order", "limit", "offset")
-
-
 def _match(pattern: str, path: str) -> dict[str, str] | None:
     pseg = pattern.strip("/").split("/")
     seg = path.strip("/").split("/")
@@ -503,8 +446,7 @@ def dispatch(engine: GraphEngine, method: str, path: str,
             return 200, {"status": "ok", "service": "TheWhisperDB",
                          "nodes_count": engine.count()}
         if pattern == "/api/nodes/count":
-            filters = {k: v for k, v in query.items() if k in FILTER_KEYS}
-            return 200, count_nodes(engine, filters)
+            return 200, count_nodes(engine, query)
         if pattern == "/api/nodes/:id/similar":
             return 200, similar_nodes(engine, params["id"],
                                       k=query.get("k", 10))
@@ -537,9 +479,8 @@ def dispatch(engine: GraphEngine, method: str, path: str,
             return 200, delete_node(engine, params["id"], storage_root)
         if pattern == "/api/nodes":
             if method == "GET":
-                filters = {k: v for k, v in query.items() if k in FILTER_KEYS}
                 return 200, list_nodes(
-                    engine, filters,
+                    engine, query,
                     sort=query.get("sort", "id"),
                     order=query.get("order", "asc"),
                     limit=query.get("limit", 0),

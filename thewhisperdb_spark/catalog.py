@@ -53,7 +53,7 @@ def _read_parquet_nanos_safe(spark: SparkSession, path: str) -> DataFrame:
         return spark.read.parquet(path)
 
 
-# Per-(session, sf_dir, table) DataFrame cache (optimization r12, guide
+# Per-(session, table path) DataFrame cache (optimization r12, guide
 # §6 "file listing caches"): load_table re-read the parquet footer and
 # rebuilt the scan relation on every call — driver-side work that
 # repeats inside the timed region of every query run (most queries call
@@ -63,32 +63,33 @@ def _read_parquet_nanos_safe(spark: SparkSession, path: str) -> DataFrame:
 # cache the optimization guide recommends
 # (spark.sql.hive.filesourcePartitionFileCacheSize). State tables (the
 # engine's own mutable snapshots) do not go through this loader and are
-# never cached.
+# never cached. Each entry is (file identity, DataFrame): a rewritten
+# file replaces its entry instead of adding one beside a stale plan.
 _TABLE_CACHE: dict = {}
 
 
-def _table_file_key(sf_dir: str, name: str):
-    """File-identity component of the cache key (ADVICE r12): mtime+size
-    of the parquet path, like the PSL cache — a regenerated sf_dir in the
-    same process must not serve a stale file listing. One os.stat per
-    load_table call; the testdata files are single-file tables."""
-    path = os.path.join(os.path.abspath(sf_dir), f"{name}.parquet")
+def _file_identity(path: str):
+    """mtime+size of the table's parquet path, like the PSL cache
+    (ADVICE r12): a regenerated sf_dir in the same process must not serve
+    a stale file listing. One os.stat per load_table call; the testdata
+    files are single-file tables."""
     try:
         st = os.stat(path)
-        return (path, st.st_mtime_ns, st.st_size)
+        return (st.st_mtime_ns, st.st_size)
     except OSError:
-        return (path, None, None)
+        return None
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown testdata table: {name}")
-    key = (spark, _table_file_key(sf_dir, name), name)
+    path = os.path.join(os.path.abspath(sf_dir), f"{name}.parquet")
+    key, ident = (spark, path, name), _file_identity(path)
     hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
+    if hit is not None and hit[0] == ident:
+        return hit[1]
     df = _load_table_uncached(spark, sf_dir, name)
-    _TABLE_CACHE[key] = df
+    _TABLE_CACHE[key] = (ident, df)
     return df
 
 

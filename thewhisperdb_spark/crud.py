@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from thewhisperdb_spark.operators.filters import exists
+from thewhisperdb_spark.operators.graph import links_view
 from thewhisperdb_spark.schemas import (
     NODE_FILES_SCHEMA,
     NODE_SCHEMA,
@@ -36,14 +38,20 @@ from thewhisperdb_spark.schemas import (
     TAG_BANK_SCHEMA,
 )
 
-_TABLES = ("nodes", "node_files", "tag_bank")
+# state tables in constructor order, with the schema JSON is read under
+_TABLES = {"nodes": NODE_SCHEMA, "node_files": NODE_FILES_SCHEMA,
+           "tag_bank": TAG_BANK_SCHEMA}
 _ID_SCHEMA = StructType([StructField("id", LongType(), False)])
+_NODE_TYPES = {f.name: f.dataType for f in NODE_SCHEMA.fields}
 
-# Patch-field type validators mirroring the reference's partial-update rules
-# (``src/core/GNode.cpp:148-205``): a field is applied only when present AND
-# type-valid; invalid-typed fields are silently skipped, not errors.
-_STRING_FIELDS = ("title", "author", "subject", "description", "date",
-                  "storage_path")
+
+def _read_table(spark: SparkSession, path: str, table: str,
+                fmt: str) -> DataFrame:
+    """One state table of a snapshot directory: parquet is self-describing,
+    JSON is read under the declared schema (no inference)."""
+    if fmt == "json":
+        return spark.read.schema(_TABLES[table]).json(os.path.join(path, table))
+    return spark.read.parquet(os.path.join(path, table))
 
 
 def _literal_rows(spark: SparkSession, schema: StructType,
@@ -85,6 +93,36 @@ def _valid_tags(v: Any) -> list[str] | None:
     return None
 
 
+def _valid_str(v: Any) -> str | None:
+    return v if isinstance(v, str) else None
+
+
+def _list_of(cast):
+    """Validator for an array field: a list whose every element passes
+    ``cast``, converted; anything else is None (skip)."""
+    def valid(v: Any) -> list | None:
+        if not isinstance(v, list):
+            return None
+        try:
+            return [cast(x) for x in v]
+        except (TypeError, ValueError, OverflowError):
+            return None
+    return valid
+
+
+# Partial-update rules (``src/core/GNode.cpp:148-205``): a patch field is
+# applied only when present AND type-valid; a validator returning None skips
+# the field, it is not an error. ``id`` has no rule, so it is never patched.
+_PATCH_RULES = {
+    **{f: _valid_str for f in ("title", "author", "subject", "description",
+                               "date", "storage_path")},
+    "course": _valid_course,
+    "tags": _valid_tags,
+    "linked_nodes": _list_of(int),
+    "embedding": _list_of(float),
+}
+
+
 class GraphEngine:
     """State tables as DataFrames + snapshot-transform mutations.
 
@@ -108,14 +146,27 @@ class GraphEngine:
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "GraphEngine":
         """S1 with the corrupt-fallback semantics of ``GraphDB.cpp:247-301``:
-        unreadable/absent state -> fresh empty DB."""
-        dfs = {}
-        for t in _TABLES:
+        an unreadable/absent table -> that table starts empty."""
+        def read(t: str) -> DataFrame | None:
             try:
-                dfs[t] = spark.read.parquet(os.path.join(path, t))
+                return _read_table(spark, path, t, "parquet")
             except Exception:
-                dfs[t] = None
-        return cls(spark, dfs["nodes"], dfs["node_files"], dfs["tag_bank"])
+                return None
+
+        return cls(spark, *map(read, _TABLES))
+
+    def _write_tables(self, path: str, fmt: str, mode: str) -> None:
+        """Write every state table under ``path``, nodes ordered by id."""
+        for t, df in (("nodes", self.nodes.orderBy("id")),
+                      ("node_files", self.node_files),
+                      ("tag_bank", self.tag_bank)):
+            df.write.mode(mode).format(fmt).save(os.path.join(path, t))
+
+    def _open(self, path: str, fmt: str) -> None:
+        """Re-point the in-memory state at the snapshot just written, so no
+        lineage references the files a save replaced."""
+        self.nodes, self.node_files, self.tag_bank = (
+            _read_table(self.spark, path, t, fmt) for t in _TABLES)
 
     def _save_atomic(self, path: str, fmt: str) -> None:
         """Write-temp-then-rename snapshot save.
@@ -133,12 +184,8 @@ class GraphEngine:
 
         os.makedirs(path, exist_ok=True)
         tmp = os.path.join(path, f".tmp-{_uuid.uuid4().hex[:8]}")
-        ordered = {"nodes": self.nodes.orderBy("id"),
-                   "node_files": self.node_files,
-                   "tag_bank": self.tag_bank}
         try:
-            for t, df in ordered.items():
-                getattr(df.write.mode("overwrite"), fmt)(os.path.join(tmp, t))
+            self._write_tables(tmp, fmt, "overwrite")
             for t in _TABLES:
                 final = os.path.join(path, t)
                 old = final + ".old"
@@ -149,21 +196,7 @@ class GraphEngine:
                 shutil.rmtree(old, ignore_errors=True)
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
-        # re-point state at the snapshot just written (schemas preserved:
-        # parquet is self-describing; json re-reads under the declared schema)
-        if fmt == "parquet":
-            self.nodes = self.spark.read.parquet(os.path.join(path, "nodes"))
-            self.node_files = self.spark.read.parquet(
-                os.path.join(path, "node_files"))
-            self.tag_bank = self.spark.read.parquet(
-                os.path.join(path, "tag_bank"))
-        else:
-            self.nodes = self.spark.read.schema(NODE_SCHEMA).json(
-                os.path.join(path, "nodes"))
-            self.node_files = self.spark.read.schema(NODE_FILES_SCHEMA).json(
-                os.path.join(path, "node_files"))
-            self.tag_bank = self.spark.read.schema(TAG_BANK_SCHEMA).json(
-                os.path.join(path, "tag_bank"))
+        self._open(path, fmt)
 
     def save(self, path: str) -> None:
         """S2: snapshot write, nodes ordered by id (``GraphDB.cpp:326-374``).
@@ -182,21 +215,17 @@ class GraphEngine:
     @classmethod
     def load_json(cls, spark: SparkSession, path: str) -> "GraphEngine":
         """S1 JSON load with declared schemas (no inference — the lenient
-        coercions happen at ingest, not at rest) and the corrupt-fallback."""
-        from pyspark.sql.types import StructType as _St
-
-        def rd(sub: str, schema: _St):
+        coercions happen at ingest, not at rest) and the corrupt-fallback;
+        ``first()`` forces each table's read errors here."""
+        def read(t: str) -> DataFrame | None:
             try:
-                df = spark.read.schema(schema).json(os.path.join(path, sub))
+                df = _read_table(spark, path, t, "json")
                 df.first()
                 return df
             except Exception:
                 return None
 
-        return cls(spark,
-                   rd("nodes", NODE_SCHEMA),
-                   rd("node_files", NODE_FILES_SCHEMA),
-                   rd("tag_bank", TAG_BANK_SCHEMA))
+        return cls(spark, *map(read, _TABLES))
 
     def serialize(self) -> list[str]:
         """S4 ``serialize`` (``GraphDB.cpp:232-245``): JSON rows ordered by id.
@@ -214,7 +243,7 @@ class GraphEngine:
 
     def exists(self, node_id: int) -> bool:
         """F8 (``GraphDB.cpp:40-43``): one CollectLimit probe."""
-        return _any_row(self.nodes, "id", node_id)
+        return exists(self.nodes, node_id)
 
     def count(self) -> int:
         """A1 (``GraphDB.cpp:195-197``)."""
@@ -270,49 +299,48 @@ class GraphEngine:
     # ---- M2 partial update -------------------------------------------------
 
     def update_node(self, node_id: int, patch: dict[str, Any]) -> None:
-        """M2: patch only present-and-type-valid fields; id immutable
-        (stripped at the API layer, ``src/main.cpp:275``; field rules
-        ``src/core/GNode.cpp:148-205``). Raises KeyError if absent."""
+        """M2: patch only present-and-type-valid fields (``_PATCH_RULES``);
+        id immutable (``src/main.cpp:275``). An empty embedding is stored as
+        no embedding. Raises KeyError if absent."""
         if not self.exists(node_id):
             raise KeyError(node_id)
-        df = self.nodes
+        values = {}
+        for fld, valid in _PATCH_RULES.items():
+            v = valid(patch[fld]) if fld in patch else None
+            if v is not None:
+                values[fld] = v
+        if values.get("embedding") == []:
+            values["embedding"] = None
+        self.set_fields(node_id, values)
+
+    def set_fields(self, node_id: int, values: dict[str, Any]) -> None:
+        """Write already-validated ``values`` (column -> Python value, None
+        for NULL) into the row ``node_id``: one ``select`` over every
+        column, so a write adds one Project to the plan whatever its field
+        count. The single-row write path of every handler."""
+        if not values:
+            return
         hit = F.col("id") == node_id
+        self.nodes = self.nodes.select(*[
+            F.when(hit, F.lit(values[c]).cast(_NODE_TYPES[c]))
+            .otherwise(F.col(c)).alias(c) if c in values else F.col(c)
+            for c in self.nodes.columns])
 
-        def apply(col: str, value) -> None:
-            nonlocal df
-            field_type = dict((f.name, f.dataType) for f in NODE_SCHEMA.fields)[col]
-            df = df.withColumn(
-                col, F.when(hit, F.lit(value).cast(field_type)).otherwise(F.col(col)))
-
-        for fld in _STRING_FIELDS:
-            if fld in patch and isinstance(patch[fld], str):
-                apply(fld, patch[fld])
-        if "course" in patch:
-            c = _valid_course(patch["course"])
-            if c is not None:
-                apply("course", c)
-        if "tags" in patch:
-            t = _valid_tags(patch["tags"])
-            if t is not None:
-                df = df.withColumn(
-                    "tags", F.when(hit, F.array(*[F.lit(x) for x in t])
-                                   if t else F.array().cast("array<string>"))
-                    .otherwise(F.col("tags")))
-        if "linked_nodes" in patch and isinstance(patch["linked_nodes"], list):
-            ln = [int(x) for x in patch["linked_nodes"]]
-            df = df.withColumn(
-                "linked_nodes",
-                F.when(hit, F.array(*[F.lit(x).cast("long") for x in ln])
-                       if ln else F.array().cast("array<long>"))
-                .otherwise(F.col("linked_nodes")))
-        if "embedding" in patch and isinstance(patch["embedding"], list):
-            emb = [float(x) for x in patch["embedding"]]
-            df = df.withColumn(
-                "embedding",
-                F.when(hit, F.array(*[F.lit(x).cast("float") for x in emb])
-                       if emb else F.lit(None).cast("array<float>"))
-                .otherwise(F.col("embedding")))
-        self.nodes = df
+    def link(self, node_id: int, partners: list[int]) -> None:
+        """Merge-link ``node_id`` with ``partners`` on both sides,
+        append-if-absent (``TagService.cpp:107-151``): the node's
+        ``linked_nodes`` gains every partner, each partner's gains the
+        node."""
+        if not partners:
+            return
+        links = F.coalesce(F.col("linked_nodes"), F.array().cast("array<long>"))
+        self.nodes = self.nodes.withColumn(
+            "linked_nodes",
+            F.when(F.col("id") == node_id,
+                   F.array_union(links, F.lit(partners).cast("array<long>")))
+            .when(F.col("id").isin(partners),
+                  F.array_union(links, F.lit([node_id]).cast("array<long>")))
+            .otherwise(F.col("linked_nodes")))
 
     def merge_nodes(self, updates, delete_ids=None) -> None:
         """Batch MERGE INTO: one full-outer join on id — matched rows are
@@ -391,13 +419,10 @@ class GraphEngine:
         Returns the stored paths."""
         if not self.exists(node_id):
             raise KeyError(node_id)
-        had_files = _any_row(self.node_files, "node_id", node_id)
+        had_files = exists(self.node_files, node_id, id_col="node_id")
         paths = self._store_files(node_id, files, storage_root)
         if paths and not had_files:
-            self.nodes = self.nodes.withColumn(
-                "storage_path",
-                F.when(F.col("id") == node_id, F.lit(paths[0]))
-                .otherwise(F.col("storage_path")))
+            self.set_fields(node_id, {"storage_path": paths[0]})
         return paths
 
     def _store_files(self, node_id: int, files: list[tuple[str, bytes]],
@@ -426,20 +451,14 @@ class GraphEngine:
             delete_file(storage_root, rel_path)
         self.node_files = self.node_files.filter(
             ~((F.col("node_id") == node_id) & (F.col("file_path") == rel_path)))
-        if not _any_row(self.node_files, "node_id", node_id):
-            self.nodes = self.nodes.withColumn(
-                "storage_path",
-                F.when(F.col("id") == node_id, F.lit(None).cast("string"))
-                .otherwise(F.col("storage_path")))
+        if not exists(self.node_files, node_id, id_col="node_id"):
+            self.set_fields(node_id, {"storage_path": None})
 
     # ---- edges / tag bank --------------------------------------------------
 
     def edges(self) -> DataFrame:
         """Normalized undirected edge view of ``linked_nodes``."""
-        return (self.nodes
-                .select(F.col("id").alias("src"),
-                        F.explode_outer("linked_nodes").alias("dst"))
-                .filter(F.col("dst").isNotNull()))
+        return links_view(self.nodes)
 
     def add_tags_to_bank(self, tags: list[str]) -> None:
         """A8 (``GraphDB.cpp:499-506``)."""
@@ -470,20 +489,12 @@ class GraphEngine:
         vs = _version_dirs(path)
         n = (vs[-1] + 1) if vs else 1
         vdir = os.path.join(path, f"v={n}")
-        ordered = {"nodes": self.nodes.orderBy("id"),
-                   "node_files": self.node_files,
-                   "tag_bank": self.tag_bank}
-        for t, df in ordered.items():
-            df.write.mode("errorifexists").parquet(os.path.join(vdir, t))
+        self._write_tables(vdir, "parquet", "errorifexists")
         tmp = os.path.join(path, f"._LATEST.{n}")
         with open(tmp, "w") as f:
             f.write(str(n))
         os.replace(tmp, os.path.join(path, "_LATEST"))
-        # re-point in-memory state at the immutable snapshot just written
-        self.nodes = self.spark.read.parquet(os.path.join(vdir, "nodes"))
-        self.node_files = self.spark.read.parquet(
-            os.path.join(vdir, "node_files"))
-        self.tag_bank = self.spark.read.parquet(os.path.join(vdir, "tag_bank"))
+        self._open(vdir, "parquet")
         return n
 
     @classmethod
@@ -507,23 +518,12 @@ class GraphEngine:
         if not os.path.isdir(vdir):
             raise FileNotFoundError(
                 f"snapshot version {version} not found under {path}")
-        dfs = {}
-        for t in _TABLES:
-            tdir = os.path.join(vdir, t)
-            if not os.path.exists(tdir):
-                dfs[t] = None  # table legitimately absent in this snapshot
-            else:
-                # corrupt/unreadable table in an existing snapshot -> raise;
-                # swallowing it would silently drop data from the read
-                dfs[t] = spark.read.parquet(tdir)
-        return cls(spark, dfs["nodes"], dfs["node_files"], dfs["tag_bank"])
-
-
-def _any_row(df: DataFrame, key: str, value: int) -> bool:
-    """Whether any row of ``df`` has ``key == value``: one CollectLimit
-    action that stops at the first hit (``limit(1).count()`` would add a
-    shuffle and a second job)."""
-    return bool(df.filter(F.col(key) == value).select(key).take(1))
+        # a table absent from the snapshot starts empty; a corrupt one
+        # raises, since swallowing it would silently drop data from the read
+        return cls(spark, *[
+            _read_table(spark, vdir, t, "parquet")
+            if os.path.exists(os.path.join(vdir, t)) else None
+            for t in _TABLES])
 
 
 # ---- versioned snapshots (time travel) -------------------------------------

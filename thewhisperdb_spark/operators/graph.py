@@ -37,6 +37,14 @@ def undirect(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
             .filter(F.col("src") != F.col("dst")).distinct())
 
 
+def links_view(nodes: DataFrame, id_col: str = "id") -> DataFrame:
+    """(src, dst) directed edges of the adjacency arrays embedded in
+    ``linked_nodes``; NULL or empty arrays contribute no rows."""
+    return (nodes.select(F.col(id_col).alias("src"),
+                         F.explode_outer("linked_nodes").alias("dst"))
+            .filter(F.col("dst").isNotNull()))
+
+
 def adjacency_lists(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """G1 ``buildAdjacencyList`` (``src/embedding/Clustering.cpp:55-66``):
     (id, neighbors sorted array) from an undirected edge set."""

@@ -112,11 +112,25 @@ class ClaimLostError(ValueError):
     writer has written NOTHING and must not touch the sentinel."""
 
 
+def _local_base(spark, path: str) -> str | None:
+    """The driver-local directory ``path`` names, or None when Spark would
+    read it from another filesystem. A scheme-less path resolves against
+    Hadoop's ``fs.defaultFS``, so it is local only when that is ``file:``."""
+    from urllib.parse import urlparse
+
+    parsed = urlparse(path)
+    if parsed.scheme:
+        return parsed.path if parsed.scheme == "file" else None
+    default_fs = spark._jsc.hadoopConfiguration().get("fs.defaultFS")
+    return path if urlparse(default_fs or "file:///").scheme == "file" else None
+
+
 def read_meta_rows(spark, meta_dir: str) -> list[dict]:
     """All rows of a (1-row) meta/sentinel parquet directory, as dicts.
 
-    Local paths (no scheme, or file:) are read DRIVER-SIDE via pyarrow —
-    no Spark job (optimization r13): the claim protocol re-reads the
+    Local paths (file:, or no scheme under a file: ``fs.defaultFS``) are
+    read DRIVER-SIDE via pyarrow — no Spark job (optimization r13): the
+    claim protocol re-reads the
     sentinel up to four times per mutation and the probes/appends read it
     once more each, and every ``spark.read...collect()`` of a 1-row file
     costs a whole ~100ms scheduled job; at 100 TB the meta is still one
@@ -126,11 +140,9 @@ def read_meta_rows(spark, meta_dir: str) -> list[dict]:
     missing dir, the real cause for corruption) is exactly the old one.
     """
     import glob as _glob
-    from urllib.parse import urlparse
 
-    parsed = urlparse(meta_dir)
-    if parsed.scheme in ("", "file"):
-        base = parsed.path if parsed.scheme == "file" else meta_dir
+    base = _local_base(spark, meta_dir)
+    if base is not None:
         parts = sorted(_glob.glob(os.path.join(base, "*.parquet")))
         if parts:
             try:
@@ -153,11 +165,9 @@ def parquet_row_count(spark, path: str) -> int:
     AnalysisException via the Spark path for a missing directory (same
     errors as before, optimization r13)."""
     import glob as _glob
-    from urllib.parse import urlparse
 
-    parsed = urlparse(path)
-    if parsed.scheme in ("", "file"):
-        base = parsed.path if parsed.scheme == "file" else path
+    base = _local_base(spark, path)
+    if base is not None:
         parts = _glob.glob(os.path.join(base, "*.parquet"))
         if parts:
             try:

@@ -19,22 +19,34 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from thewhisperdb_spark.functions.llm import Embedder, embed_missing
-from thewhisperdb_spark.operators.graph import clusters_from_pairs, undirect
+from thewhisperdb_spark.operators.graph import (
+    clusters_from_pairs,
+    links_view,
+    undirect,
+)
 from thewhisperdb_spark.operators.tags import jaccard_pairs
 from thewhisperdb_spark.operators.vectors import similar_pairs
-
-
-def _links_view(nodes: DataFrame, id_col: str = "id") -> DataFrame:
-    """(id, linked) exploded edge view of the embedded adjacency arrays."""
-    return (nodes.select(F.col(id_col).alias("src"),
-                         F.explode_outer("linked_nodes").alias("dst"))
-            .filter(F.col("dst").isNotNull()))
 
 
 def _collect_links(edges: DataFrame) -> DataFrame:
     """(id, linked_nodes sorted array) from a directed edge set."""
     return (edges.groupBy(F.col("src").alias("id"))
             .agg(F.array_sort(F.collect_set("dst")).alias("linked_nodes")))
+
+
+def _merge_pairs(nodes: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
+    """MERGE the (a, b) pairs into ``linked_nodes`` both ways: union-distinct
+    with the existing links (U1), sorted; a node with no link gets []."""
+    new_edges = undirect(pairs.select(F.col("a").alias("src"),
+                                      F.col("b").alias("dst")))
+    all_edges = links_view(nodes, id_col).union(new_edges).distinct()
+    return (nodes.alias("n")
+            .join(_collect_links(all_edges).alias("a"),
+                  F.col("n." + id_col) == F.col("a.id"), "left")
+            .select(*[F.col("n." + c) for c in nodes.columns if c != "linked_nodes"],
+                    F.coalesce(F.col("a.linked_nodes"),
+                               F.array().cast("array<long>"))
+                    .alias("linked_nodes")))
 
 
 def run_clustering(nodes: DataFrame, threshold: float = 0.75,
@@ -97,16 +109,7 @@ def relink_by_embedding(nodes: DataFrame, threshold: float = 0.75,
         F.col("embedding").isNotNull() & (F.size("embedding") > 0))
     pairs = similar_pairs(embedded, threshold, id_col=id_col,
                           vec_col="embedding")
-    new_edges = undirect(pairs.select(F.col("a").alias("src"),
-                                      F.col("b").alias("dst")))
-    all_edges = _links_view(nodes, id_col).union(new_edges).distinct()
-    new_adj = _collect_links(all_edges)
-    return (nodes.alias("n")
-            .join(new_adj.alias("a"), F.col("n." + id_col) == F.col("a.id"), "left")
-            .select(*[F.col("n." + c) for c in nodes.columns if c != "linked_nodes"],
-                    F.coalesce(F.col("a.linked_nodes"),
-                               F.array().cast("array<long>"))
-                    .alias("linked_nodes")))
+    return _merge_pairs(nodes, pairs, id_col)
 
 
 def relink_by_tags(nodes: DataFrame, threshold: float = 0.3,
@@ -119,13 +122,4 @@ def relink_by_tags(nodes: DataFrame, threshold: float = 0.3,
     Returns the new nodes DataFrame."""
     pairs = jaccard_pairs(nodes, id_col=id_col, tags_col="tags",
                           threshold=threshold)
-    new_edges = undirect(pairs.select(F.col("a").alias("src"),
-                                      F.col("b").alias("dst")))
-    all_edges = _links_view(nodes, id_col).union(new_edges).distinct()
-    new_adj = _collect_links(all_edges)
-    return (nodes.alias("n")
-            .join(new_adj.alias("a"), F.col("n." + id_col) == F.col("a.id"), "left")
-            .select(*[F.col("n." + c) for c in nodes.columns if c != "linked_nodes"],
-                    F.coalesce(F.col("a.linked_nodes"),
-                               F.array().cast("array<long>"))
-                    .alias("linked_nodes")))
+    return _merge_pairs(nodes, pairs, id_col)
