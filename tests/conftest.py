@@ -16,6 +16,38 @@ def spark():
     yield s
 
 
+@pytest.fixture()
+def jobs_of(spark):
+    """``jobs_of(group, fn)``: the Spark jobs ``fn`` starts, counted
+    through a job group."""
+    sc = spark.sparkContext
+
+    def count(group: str, fn) -> int:
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    return count
+
+
+@pytest.fixture(params=["local", "distributed"])
+def cc_path(request, spark):
+    """Runs a connected-components test once per path: the driver-side
+    finish (small edge lists fit the broadcast budget) and the distributed
+    rounds, forced by disabling broadcasts."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if request.param == "distributed":
+        spark.conf.set(key, "-1")
+    try:
+        yield request.param
+    finally:
+        spark.conf.set(key, old)
+
+
 @pytest.fixture(scope="session")
 def nodes_df(spark):
     """Reference-parity fixture rows (FIXTURES.md §1): includes the mandated

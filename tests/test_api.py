@@ -344,19 +344,7 @@ def test_similar_error_precedence(engine):
     assert (code, env["count"]) == (200, 0)
 
 
-def _jobs_of(spark, group: str, fn) -> int:
-    """Spark jobs ``fn`` starts, counted through a job group."""
-    sc = spark.sparkContext
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_point_request_job_budget(spark, engine, tmp_path):
+def test_point_request_job_budget(spark, engine, tmp_path, jobs_of):
     """Request-path probes are single CollectLimit actions: on a loaded and
     checkpointed graph, exists and get cost one Spark job each, listing a
     node's files after an upload two (probe + read), and generating an
@@ -372,7 +360,7 @@ def test_point_request_job_budget(spark, engine, tmp_path):
         "gen_embedding": (
             lambda: api.dispatch(eng, "POST", "/api/nodes/3/embedding"), 1),
     }
-    got = {k: _jobs_of(spark, f"budget-{k}", fn)
+    got = {k: jobs_of(f"budget-{k}", fn)
            for k, (fn, _) in budget.items()}
     assert got == {k: want for k, (_, want) in budget.items()}
     assert api.dispatch(eng, "GET", "/api/nodes/1/files")[1]["files"] == \

@@ -1,11 +1,14 @@
+from types import SimpleNamespace
+
 import pytest
 from pyspark.sql import functions as F
 
+from thewhisperdb_spark.operators import broadcast_budget
 from thewhisperdb_spark.operators import dedup as D
 from thewhisperdb_spark.operators import graph as G
 
 
-def test_connected_components_with_singletons(spark):
+def test_connected_components_with_singletons(spark, cc_path):
     vertices = spark.createDataFrame([(i,) for i in range(8)], "id long")
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (3, 4), (6, 6)], "src long, dst long")
@@ -14,7 +17,7 @@ def test_connected_components_with_singletons(spark):
     assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5, 6: 6, 7: 7}
 
 
-def test_connected_components_chain_converges(spark):
+def test_connected_components_chain_converges(spark, cc_path):
     # a long path graph exercises multi-round propagation
     n = 30
     vertices = spark.createDataFrame([(i,) for i in range(n)], "id long")
@@ -22,6 +25,33 @@ def test_connected_components_chain_converges(spark):
                                   "src long, dst long")
     got = G.connected_components(vertices, edges).collect()
     assert all(r["component"] == 0 for r in got)
+
+
+@pytest.mark.parametrize("id_type,edges,want", [
+    ("bigint", [], [(i, i) for i in range(6)]),        # empty edge set
+    ("int", [(4, 1), (1, 3)],
+     [(0, 0), (1, 1), (2, 2), (3, 1), (4, 1), (5, 5)]),
+])
+def test_connected_components_keeps_id_type(spark, cc_path, id_type, edges,
+                                            want):
+    vertices = spark.createDataFrame([(i,) for i in range(6)], f"id {id_type}")
+    edges = spark.createDataFrame(edges, f"src {id_type}, dst {id_type}")
+    out = G.connected_components(vertices, edges)
+    assert out.schema.simpleString() == (
+        f"struct<id:{id_type},component:bigint>")
+    assert sorted(tuple(r) for r in out.collect()) == want
+
+
+@pytest.mark.parametrize("raw,budget", [
+    ("-1", 0),                       # broadcasts disabled: never
+    ("10MB", 10 << 20),              # size suffix, Spark's own parser
+    ("not-a-size", 32 << 20),        # unparseable: the historical rule
+    (str(1 << 30), 32 << 20),        # capped at 32 MB
+])
+def test_broadcast_budget(spark, raw, budget):
+    conf = SimpleNamespace(get=lambda key, default=None: raw)
+    stub = SimpleNamespace(conf=conf, _jvm=spark._jvm)
+    assert broadcast_budget(stub) == budget
 
 
 def test_adjacency_lists(spark):

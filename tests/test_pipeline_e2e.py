@@ -42,3 +42,28 @@ def test_pipeline_train_split_is_clean(spark):
     # packing accounted for every surviving train document
     n_docs_binned = (res["bins"].agg(F.sum("n_docs")).collect()[0][0])
     assert n_docs_binned == train.count()
+
+
+def test_near_dedup_job_budget(spark, jobs_of):
+    """Near-dedup's connected components finishes on the driver when the
+    pair graph is small, and each pipeline stage count rides the job that
+    materializes its stage. With distributed rounds only and a separate
+    count per stage, connected components ran 30-31 Spark jobs on this
+    8-vertex graph and the pipeline 65."""
+    from thewhisperdb_spark.operators import graph as G
+
+    vertices = spark.createDataFrame([(i,) for i in range(8)], "id long")
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (3, 4), (6, 6)], "src long, dst long")
+    assert jobs_of("budget-cc", lambda: G.connected_components(
+        vertices, edges).collect()) <= 7
+
+    docs = load_table(spark, SF_DIR, "documents")
+    res = {}
+    n_jobs = jobs_of("budget-pipeline", lambda: res.update(
+        run_pretraining_pipeline(docs)))
+    assert res["stages"] == [
+        ("ingest", 500), ("quality_filter", 349), ("language_filter", 123),
+        ("exact_dedup", 123), ("near_dedup", 118), ("train_split", 97),
+        ("decontaminated_train", 97), ("packed_bins", 23)]
+    assert n_jobs <= 30

@@ -389,7 +389,7 @@ def _random_edges(draw):
 @given(_random_edges())
 @settings(max_examples=20, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_connected_components_match_union_find(spark, graph):
+def test_connected_components_match_union_find(spark, cc_path, graph):
     from thewhisperdb_spark.operators import graph as G
 
     n, edges = graph

@@ -315,7 +315,8 @@ def minhash_lsh_pairs(df: DataFrame, n_hashes: int = 64, bands: int = 16,
     # shingle+minhash computation at every reference. The broadcast-
     # decision row count rides the checkpoint job (optimization r13 —
     # was a separate count job over the cached blocks).
-    from thewhisperdb_spark.operators import checkpoint_counted
+    from thewhisperdb_spark.operators import (broadcast_budget,
+                                              checkpoint_counted)
     sig, n_sig_rows = checkpoint_counted(sig)
     banded = sig.select(
         "id", "sig",
@@ -349,26 +350,10 @@ def minhash_lsh_pairs(df: DataFrame, n_hashes: int = 64, bands: int = 16,
         .groupBy("a", "b").agg(F.count(F.lit(1)).alias("_nb"))
         .filter(F.col("_nb") >= min_bands).drop("_nb")
     )
-    # ≈ 8 bytes × n_hashes per row; the cap honors the DEPLOYMENT'S
-    # broadcast budget (spark.sql.autoBroadcastJoinThreshold, floored at
-    # our historical 32 MB rule) instead of a hardcoded constant — the r9
-    # spill probe showed a small-memory executor (tiny execution pool,
-    # threshold tuned down to match) being handed a forced 12.8 MB-row /
-    # ~100 MB-materialized broadcast build by the old rule and dying with
-    # notEnoughMemoryToBuildAndBroadcastTable instead of shuffling.
-    # threshold <= 0 (operator disabled broadcasts) => never hint.
-    spark = sig.sparkSession
-    raw_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        conf_thr = int(raw_thr)
-    except ValueError:  # size-suffixed form, e.g. "10MB" / "8388608b"
-        try:
-            conf_thr = int(spark._jvm.org.apache.spark.util.Utils
-                           .byteStringAsBytes(raw_thr))
-        except Exception:
-            conf_thr = 32 << 20
-    budget = min(32 << 20, conf_thr)
-    broadcast_sig_max_rows = max(0, budget) // (8 * n_hashes)
+    # ≈ 8 bytes × n_hashes per row, within the deployment's broadcast
+    # budget (0 when broadcasts are disabled => never hint)
+    broadcast_sig_max_rows = (broadcast_budget(sig.sparkSession)
+                              // (8 * n_hashes))
     small_sig = (broadcast_sig_max_rows > 0
                  and n_sig_rows <= broadcast_sig_max_rows)
     sig_a = sig.select(F.col("id").alias("a"), F.col("sig").alias("siga"))

@@ -10,12 +10,26 @@ large-star/small-star would give O(log n) — diameter is small for similarity
 graphs, so the simple kernel wins on constant factors). ``localCheckpoint``
 cuts lineage each round so plans don't grow unboundedly — the standard
 iterative-DataFrame pattern.
+
+Connected components finishes on the driver when the symmetrized edge list
+fits the deployment's broadcast budget (``operators.broadcast_budget``, at
+16 bytes per directed edge): the edges are collected once and the same
+min-label propagation with pointer jumping runs over numpy arrays to the
+fixpoint. Near-dup pair graphs are usually tiny next to the corpus they
+come from, and there every distributed round is per-job overhead, not
+data (Pregelix, VLDB 2014, makes the same point for small and shrinking
+graphs on a dataflow engine). Larger edge lists, or a deployment with
+broadcasts disabled, take the distributed rounds.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from thewhisperdb_spark.operators import broadcast_budget, checkpoint_counted
 
 
 def undirect(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -59,13 +73,63 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     ``src/tagging/TagService.cpp:169-255``): returns (id, component) where
     component = min vertex id in the component. Vertices with no edges are
     singleton components (reference includes them:
-    ``src/embedding/Clustering.cpp:97-105``).
+    ``src/embedding/Clustering.cpp:97-105``). ``id`` keeps the edge id
+    type; ``component`` is long.
 
-    Pure-DataFrame iterative min-label propagation; each iteration is one
-    shuffle on the edge key. Convergence check is an aggregate (changed-count),
-    not a collect of data rows.
+    Min-label propagation with pointer jumping. The symmetrized edge list
+    is materialized once, its row count riding that job. When it fits the
+    broadcast budget (16 bytes per directed edge against
+    ``operators.broadcast_budget``; a budget of 0 means never) it is
+    collected once and the rounds run on the driver to the fixpoint,
+    returned as a local relation. Otherwise each round is one shuffle on
+    the edge key and the convergence check is an aggregate (label sum),
+    not a collect of data rows. ``max_iter`` bounds only the distributed
+    rounds; the local finish always reaches the fixpoint.
     """
-    und = undirect(edges).localCheckpoint(eager=True)
+    und, n_edges = checkpoint_counted(undirect(edges))
+    budget = broadcast_budget(und.sparkSession)
+    if 0 < budget and n_edges * 16 <= budget:
+        labels = _components_local(und)
+    else:
+        labels = _components_distributed(und, max_iter)
+
+    # singletons: vertices with no edges keep their own id as component
+    singles = (vertices.select(F.col(id_col).alias("id"))
+               .join(labels.select("id"), "id", "left_anti")
+               .select("id", F.col("id").cast("long").alias("component")))
+    return labels.unionByName(singles)
+
+
+def _components_local(und: DataFrame) -> DataFrame:
+    """(id, component) over the vertices of a materialized symmetric edge
+    list, computed on the driver from one collect: labels are indices into
+    the sorted vertex array, so the minimum index is the minimum id."""
+    import pyarrow as pa
+
+    tbl = und.toArrow()
+    src = tbl.column("src").to_numpy()
+    dst = tbl.column("dst").to_numpy()
+    verts = np.unique(src)       # symmetric: every endpoint is some src
+    s = np.searchsorted(verts, src)
+    d = np.searchsorted(verts, dst)
+    lab = np.arange(len(verts))
+    while True:
+        prev = lab.copy()
+        np.minimum.at(lab, d, lab[s])
+        lab = lab[lab]
+        if np.array_equal(lab, prev):
+            break
+    schema = T.StructType([
+        T.StructField("id", und.schema["src"].dataType, False),
+        T.StructField("component", T.LongType(), False)])
+    return und.sparkSession.createDataFrame(
+        pa.table({"id": verts, "component": verts[lab].astype(np.int64)}),
+        schema)
+
+
+def _components_distributed(und: DataFrame, max_iter: int) -> DataFrame:
+    """(id, component) over the vertices of a materialized symmetric edge
+    list, by distributed rounds."""
     # Iterate ONLY over edge-touched vertices: isolated vertices can never
     # change label, and at scale they are the vast majority (most documents
     # match nothing above threshold). They rejoin as singletons at the end.
@@ -130,12 +194,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
         if s == prev_sum:
             break
         prev_sum = s
-
-    # singletons: vertices with no edges keep their own id as component
-    singles = (vertices.select(F.col(id_col).alias("id"))
-               .join(touched, "id", "left_anti")
-               .select("id", F.col("id").cast("long").alias("component")))
-    return labels.unionByName(singles)
+    return labels
 
 
 def bfs_levels(edges: DataFrame, source: int, max_iter: int = 20,

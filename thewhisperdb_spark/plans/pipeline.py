@@ -7,9 +7,11 @@ Each stage is one of the already-tested operators (quality features,
 drop_exact_duplicates, drop_near_duplicates, three_way_split,
 cross_split_contamination, pack_sequences); this module adds only the
 composition and per-stage accounting. Scale posture is inherited: every stage
-is scan- or equi-join-shaped, the only iteration is the near-dup connected
-components, and nothing collects to the driver except the per-stage counts
-(one long each).
+is scan- or equi-join-shaped and the only iteration is the near-dup connected
+components. Two things reach the driver: the per-stage counts (one long
+each, collected as metrics of the jobs that materialize the stages) and,
+when the near-dup pair graph fits the broadcast budget, its edge list,
+which connected components finishes locally.
 
 The reference has no such pipeline (its only composite is the clustering job,
 ``src/embedding/EmbeddingService.cpp:140-193``); this is north-star §2.11
@@ -18,9 +20,10 @@ surface built from the same composition machinery as plans/jobs.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from thewhisperdb_spark.operators import checkpoint_counted
 from thewhisperdb_spark.operators import dedup as D
 from thewhisperdb_spark.operators import packing as PK
 from thewhisperdb_spark.operators import sampling as SM
@@ -55,38 +58,43 @@ def run_pretraining_pipeline(docs: DataFrame, *, lang: str = "en",
     - ``bins``: the packed training-bin occupancy table.
 
     Stage boundaries materialize once each: every counted stage is
-    localCheckpoint'ed first, so its count AND the next stage read the
-    materialized rows instead of replaying the whole upstream pipeline per
-    action (on a real cluster, swap localCheckpoint for persist(DISK_ONLY) /
-    reliable checkpoint — same shape, spill-safe).
+    localCheckpoint'ed, its count an ``observe`` metric of that same job
+    (``ingest`` and ``train_split`` ride the jobs that materialize the
+    stage after them), so the next stage reads the materialized rows
+    instead of replaying the whole upstream pipeline per action. Only
+    ``packed_bins`` pays its own count (on a real cluster, swap
+    localCheckpoint for persist(DISK_ONLY) / reliable checkpoint — same
+    shape, spill-safe).
     """
-    stages: list[tuple[str, int]] = [("ingest", docs.count())]
+    ingest, train_rows = Observation(), Observation()
+    quality, n_quality = checkpoint_counted(
+        docs.observe(ingest, F.count(F.lit(1)).alias("n"))
+        .filter(_quality_pred(text_col, "n_chars")))
+    stages: list[tuple[str, int]] = [("ingest", int(ingest.get["n"])),
+                                     ("quality_filter", n_quality)]
 
-    quality = (docs.filter(_quality_pred(text_col, "n_chars"))
-               .localCheckpoint(eager=True))
-    stages.append(("quality_filter", quality.count()))
+    langf, n = checkpoint_counted(quality.filter(F.col("lang") == lang))
+    stages.append(("language_filter", n))
 
-    langf = quality.filter(F.col("lang") == lang).localCheckpoint(eager=True)
-    stages.append(("language_filter", langf.count()))
+    exact, n = checkpoint_counted(
+        D.drop_exact_duplicates(langf, id_col=id_col, text_col=text_col))
+    stages.append(("exact_dedup", n))
 
-    exact = (D.drop_exact_duplicates(langf, id_col=id_col, text_col=text_col)
-             .localCheckpoint(eager=True))
-    stages.append(("exact_dedup", exact.count()))
-
-    near = D.drop_near_duplicates(exact, id_col=id_col, text_col=text_col)
-    near = near.localCheckpoint(eager=True)  # cut the CC-iteration lineage
-    stages.append(("near_dedup", near.count()))
+    # the checkpoint also cuts the connected-components lineage
+    near, n = checkpoint_counted(
+        D.drop_near_duplicates(exact, id_col=id_col, text_col=text_col))
+    stages.append(("near_dedup", n))
 
     split = SM.three_way_split(near, id_col=id_col)
     train = split.filter(F.col("split") == "train")
-    stages.append(("train_split", train.count()))
-
     leaked = D.cross_split_contamination(
         split, F.col("split") == "train", n=decontam_ngram,
         id_col=id_col, text_col=text_col)
-    clean_train = (train.join(leaked, id_col, "left_anti")
-                   .localCheckpoint(eager=True))
-    stages.append(("decontaminated_train", clean_train.count()))
+    clean_train, n = checkpoint_counted(
+        train.observe(train_rows, F.count(F.lit(1)).alias("n"))
+        .join(leaked, id_col, "left_anti"))
+    stages += [("train_split", int(train_rows.get["n"])),
+               ("decontaminated_train", n)]
 
     # privacy scrub: per-row transform (row count unchanged, so no stage
     # boundary) — rides the same scan as the join output
