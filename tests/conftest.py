@@ -16,6 +16,36 @@ def spark():
     yield s
 
 
+def _minhash_oracle(shingles, n_hashes, elem_hash=None):
+    """One MinHash signature by the definition, in pure Python: element
+    hash md5 -> first 15 hex digits -> mod p (or ``elem_hash``), affine
+    family (a, b) from ``random.Random(42)``, minimum per hash. None for
+    a NULL array (no row); NULL elements are skipped."""
+    import hashlib
+    import random
+
+    p = (1 << 31) - 1
+    rnd = random.Random(42)
+    coeffs = [(rnd.randrange(1, p), rnd.randrange(0, p))
+              for _ in range(n_hashes)]
+    if shingles is None:
+        return None
+    if elem_hash is None:
+        def elem_hash(s):
+            return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % p
+    hs = [elem_hash(s) for s in shingles if s is not None]
+    if shingles and not hs:
+        return [None] * n_hashes
+    return [min([(a * h + b) % p for h in hs], default=p) for a, b in coeffs]
+
+
+@pytest.fixture(scope="session")
+def minhash_oracle():
+    """``minhash_oracle(shingles, n_hashes, elem_hash=None)``: the
+    pure-Python MinHash reference for ``dedup.minhash_signatures_df``."""
+    return _minhash_oracle
+
+
 @pytest.fixture()
 def jobs_of(spark):
     """``jobs_of(group, fn)``: the Spark jobs ``fn`` starts, counted

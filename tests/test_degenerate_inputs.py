@@ -209,8 +209,9 @@ def test_kmeans_empty_and_all_null_corpus(spark):
 
 def test_lsh_index_empty_corpus_and_batch(spark, tmp_path):
     """Index cold starts: an empty corpus builds a valid (empty) index that
-    probes cleanly; probing an empty batch returns no rows; degenerate
-    docs (empty/NULL text) in the corpus mint no signatures and no pairs."""
+    probes and deletes cleanly; probing an empty batch returns no rows;
+    degenerate docs (empty/NULL text) in the corpus mint no signatures and
+    no pairs."""
     from thewhisperdb_spark.operators import dedup as D
 
     empty = spark.createDataFrame([], "doc_id long, text string")
@@ -222,6 +223,10 @@ def test_lsh_index_empty_corpus_and_batch(spark, tmp_path):
         "doc_id long, text string")
     assert D.lsh_index_probe(spark, path, batch).count() == 0
     assert D.lsh_index_probe(spark, path, empty).count() == 0
+    # delete's bands × signatures == bucket rows check reads 0 bucket rows
+    # from the part-less partitioned directory an empty build leaves
+    D.lsh_index_delete(spark, path, batch)
+    assert D.lsh_index_stats(spark, path).collect()[0]["n_docs"] == 0
     # degenerate corpus: token-less docs (empty/whitespace/NULL) all reduce
     # to the single clamp shingle, so they are mutual exact-dups of the
     # empty document (est 1.0) — the same semantics as the online operator

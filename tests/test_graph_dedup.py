@@ -93,6 +93,52 @@ def test_minhash_lsh_finds_exact_dups(spark):
     assert not any(3 in p for p in got)
 
 
+@pytest.mark.parametrize("portable", [True, False])
+def test_minhash_signatures_match_oracle(spark, minhash_oracle, portable):
+    """The signature kernel equals the pure-Python definition, value for
+    value, on both hash families: md5 against hashlib, xxhash64 against
+    Spark's per-element hash with the affine minimum in Python. Edge rows:
+    an empty array ([p]*k), [NULL] (k NULLs), a NULL array (no row), NULL
+    elements among real ones (skipped), a duplicate element, string ids,
+    and a row longer than one kernel chunk."""
+    p = (1 << 31) - 1
+    rows = [("dup", ["x", "yz", "x"]), ("empty", []), ("nulls", [None]),
+            ("absent", None), ("mixed", ["q", None, "r"]),
+            ("long", [f"s{i}" for i in range(20_000)])]
+    rows += [(f"w{i}", [f"t{j}" for j in range(i, i + 40)])
+             for i in range(0, 400, 7)]
+    df = spark.createDataFrame(rows, "id string, sh array<string>")
+    k = 32
+    sig = D.minhash_signatures_df(df, k, portable=portable)
+    assert sig.schema["id"].dataType.simpleString() == "string"
+    got = {r["id"]: r["sig"] for r in sig.collect()}
+    elem_hash = None
+    if not portable:
+        shingles = sorted({s for _, sh in rows for s in sh or [] if s})
+        elem_hash = {
+            r["s"]: r["h"] for r in spark.createDataFrame(
+                [(s,) for s in shingles], "s string")
+            .select("s", F.pmod(F.xxhash64("s"), F.lit(p)).alias("h"))
+            .collect()}.__getitem__
+    want = {i: minhash_oracle(sh, k, elem_hash) for i, sh in rows
+            if sh is not None}
+    assert got == want
+    assert got["empty"] == [p] * k and got["nulls"] == [None] * k
+
+
+@pytest.mark.parametrize("portable", [True, False])
+def test_minhash_lsh_null_text_pairs_with_nothing(spark, portable):
+    """A NULL text shingles to [NULL], whose signature is k NULLs: it
+    pairs with nothing in either hash family, while two empty texts still
+    pair at 1.0. (xxhash64 of a NULL is its seed, 42, not NULL, so the
+    xxhash64 family once paired NULL texts at 1.0.)"""
+    df = spark.createDataFrame([(1, None), (2, None), (3, ""), (4, "")],
+                               "doc_id long, text string")
+    got = {(r["a"], r["b"]): r["est_jaccard"] for r in
+           D.minhash_lsh_pairs(df, portable=portable).collect()}
+    assert got == {(3, 4): 1.0}
+
+
 def test_simhash_collides_on_identical_sets(spark):
     df = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "gamma beta alpha"), (3, "delta epsilon")],
@@ -792,6 +838,44 @@ def test_lsh_index_delete_takedown(spark, tmp_path):
             spark.createDataFrame([("x",)], "doc_id string"))
 
 
+def test_lsh_index_delete_refuses_inconsistent_index(spark, tmp_path):
+    """Delete re-derives the buckets from the signatures, so it first
+    checks bands × signatures == bucket rows from the parquet footers. An
+    index with one extra bucket file is refused with ValueError: the
+    claim is released, nothing is written, and the index still probes
+    exactly as before."""
+    import glob
+    import os
+    import shutil
+
+    from thewhisperdb_spark.catalog import load_table
+    from thewhisperdb_spark.operators.indexmeta import (
+        claims_dir_for, parquet_row_count, read_meta_rows)
+
+    docs = load_table(spark, "/root/testdata/sf0.001", "documents") \
+        .select("doc_id", "text").filter(F.col("doc_id") < 30)
+    path = str(tmp_path / "lsh_bad")
+    D.lsh_index_build(docs, path, n_hashes=16, bands=4, shingle_n=5)
+    assert parquet_row_count(spark, f"{path}/buckets") == 30 * 4
+
+    def probe():
+        return {(r["batch_id"], r["index_id"], r["est_jaccard"]) for r in
+                D.lsh_index_probe(spark, path, docs, threshold=0.5).collect()}
+
+    before = probe()
+    part = sorted(glob.glob(f"{path}/buckets/band=0/*.parquet"))[0]
+    shutil.copy(part, part.replace("part-", "part-extra-"))
+    files = sorted(glob.glob(f"{path}/**/*.parquet", recursive=True))
+    kill = spark.createDataFrame([(5,)], "doc_id long")
+    with pytest.raises(ValueError, match="bands × signatures"):
+        D.lsh_index_delete(spark, path, kill)
+    assert sorted(glob.glob(f"{path}/**/*.parquet", recursive=True)) == files
+    assert read_meta_rows(spark, f"{path}/meta")[0]["format_version"] == 1
+    claims = claims_dir_for(f"{path}/meta")
+    assert not os.path.isdir(claims) or not os.listdir(claims)
+    assert probe() == before
+
+
 def test_near_dup_groups_string_id_fails_loudly(spark):
     """The LSH INDEX accepts string doc ids, but duplicate-GROUP
     resolution (CC min-label) is a long-label kernel: a string id must
@@ -1037,3 +1121,35 @@ def test_meta_fast_path_honours_default_fs(spark, tmp_path):
     assert read_meta_rows(SparkSpy, meta_dir) == [{"format_version": 3}]
     assert parquet_row_count(SparkSpy, meta_dir) == 1
     assert spark_reads == [meta_dir, meta_dir]
+
+
+def test_parquet_row_count_of_partless_directory(spark, tmp_path):
+    """An empty partitioned write leaves a directory with no parquet parts
+    (the buckets of an index built from an empty corpus): it holds 0 rows
+    on the driver-side footer path and on the Spark fallback, which cannot
+    infer a schema there. A missing directory still raises."""
+    from pyspark.errors import AnalysisException
+
+    from thewhisperdb_spark.operators.indexmeta import parquet_row_count
+
+    empty = str(tmp_path / "buckets")
+    (spark.createDataFrame([], "id long, band int").write
+     .partitionBy("band").parquet(empty))
+
+    class RemoteSpark:
+        """The session's reader under a non-file default filesystem, so
+        scheme-less paths skip the footer path; reads still go local."""
+        class _jsc:
+            @staticmethod
+            def hadoopConfiguration():
+                return {"fs.defaultFS": "hdfs://127.0.0.1:9"}
+
+        class read:
+            @staticmethod
+            def parquet(path):
+                return spark.read.parquet("file://" + path)
+
+    for session in (spark, RemoteSpark):
+        assert parquet_row_count(session, empty) == 0
+        with pytest.raises(AnalysisException):
+            parquet_row_count(session, str(tmp_path / "missing"))

@@ -57,24 +57,21 @@ def test_minhash_signature_union_is_elementwise_min(spark, pairs):
     """MinHash's defining algebra: sig(A ∪ B) == elementwise_min(sig(A),
     sig(B)), and the signature depends only on the SET (order/duplicate
     invariance). Exact — no estimator tolerance involved."""
-    from thewhisperdb_spark.operators.dedup import minhash_signature
+    from thewhisperdb_spark.operators.dedup import minhash_signatures_df
 
-    rows = [(i, sorted(a), sorted(b), sorted(a | b))
-            for i, (a, b) in enumerate(pairs)]
-    df = spark.createDataFrame(
-        rows, "i long, a array<string>, b array<string>, u array<string>")
+    rows = []
+    for i, (a, b) in enumerate(pairs):
+        rows += [(f"{i}a", sorted(a)), (f"{i}b", sorted(b)),
+                 (f"{i}u", sorted(a | b)),
+                 (f"{i}a_dup", (sorted(a) * 2)[::-1])]
     n = 16
-    out = df.select(
-        "i",
-        minhash_signature(F.col("a"), n_hashes=n).alias("sa"),
-        minhash_signature(F.col("b"), n_hashes=n).alias("sb"),
-        minhash_signature(F.col("u"), n_hashes=n).alias("su"),
-        minhash_signature(F.reverse(F.concat(F.col("a"), F.col("a"))),
-                          n_hashes=n).alias("sa_dup"),
-    ).collect()
-    for r in out:
-        assert [min(x, y) for x, y in zip(r.sa, r.sb)] == list(r.su)
-        assert list(r.sa) == list(r.sa_dup)  # order/duplicate invariance
+    sig = {r["id"]: r["sig"] for r in minhash_signatures_df(
+        spark.createDataFrame(rows, "id string, sh array<string>"),
+        n).collect()}
+    for i in range(len(pairs)):
+        sa, sb, su = sig[f"{i}a"], sig[f"{i}b"], sig[f"{i}u"]
+        assert [min(x, y) for x, y in zip(sa, sb)] == list(su)
+        assert list(sa) == list(sig[f"{i}a_dup"])  # order/duplicate invariance
 
 
 def _py_gopher(text: str):
@@ -665,12 +662,13 @@ def test_simhash_band_pairs_lossless_vs_bruteforce(spark, texts):
        st.sampled_from([0.5, 0.7, 0.9]))
 @settings(max_examples=10, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_minhash_lsh_pairs_lossless_vs_bruteforce(spark, texts, theta):
+def test_minhash_lsh_pairs_lossless_vs_bruteforce(spark, minhash_oracle,
+                                                  texts, theta):
     """The >=min-bands candidate filter must not change the result set:
-    operator output == brute-force signature comparison at the same
-    threshold (est_jaccard = fraction of agreeing minhashes)."""
+    operator output == brute-force comparison of the pure-Python oracle's
+    signatures over the same char-3-gram shingles, at the same threshold
+    (est_jaccard = fraction of agreeing minhashes)."""
     from thewhisperdb_spark.operators import dedup as D
-    from thewhisperdb_spark.operators.text import char_ngrams
 
     df = spark.createDataFrame(list(enumerate(texts, start=1)),
                                "doc_id long, text string")
@@ -678,10 +676,10 @@ def test_minhash_lsh_pairs_lossless_vs_bruteforce(spark, texts, theta):
     got = {(r["a"], r["b"]): r["est_jaccard"]
            for r in D.minhash_lsh_pairs(df, n_hashes=n_hashes, bands=bands,
                                         threshold=theta).collect()}
-    sigs = {r["doc_id"]: r["sig"] for r in
-            df.select("doc_id",
-                      D.minhash_signature(char_ngrams(F.col("text"), 3),
-                                          n_hashes).alias("sig")).collect()}
+    # text.char_ngrams: substrings at 1-based offsets 1..max(len-2, 1)
+    sigs = {i: minhash_oracle({t[j:j + 3] for j in range(max(len(t) - 2, 1))},
+                              n_hashes)
+            for i, t in enumerate(texts, start=1)}
     expect = {}
     ids = sorted(sigs)
     for i, a in enumerate(ids):

@@ -65,6 +65,9 @@ def _read_parquet_nanos_safe(spark: SparkSession, path: str) -> DataFrame:
 # engine's own mutable snapshots) do not go through this loader and are
 # never cached. Each entry is (file identity, DataFrame): a rewritten
 # file replaces its entry instead of adding one beside a stale plan.
+# Never persist or checkpoint a cached frame here: bench.py's
+# _release_dead_rdd_blocks unpersists every persistent RDD between
+# keys, so a checkpointed frame would fail its next read.
 _TABLE_CACHE: dict = {}
 
 

@@ -9,7 +9,8 @@ hashes default to md5-derived 60-bit values (engine-portable — any engine
 with md5 reproduces them, which is what lets the DuckDB oracle check these
 pipelines value-for-value), with an xxhash64 ``portable=False`` fast path
 for single-engine deployments. Internal-only keys (band buckets) still use
-xxhash64. Nothing here drops into Python.
+xxhash64. Dense per-row math (the MinHash k-wide minimum, SemDeDup's
+cluster grams) runs in numpy over Arrow batches.
 """
 
 from __future__ import annotations
@@ -18,8 +19,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from thewhisperdb_spark.operators.indexmeta import (
-    claim_sentinel, confirm_claim, release_claim, verify_claim,
-    write_meta_row)
+    claim_sentinel, confirm_claim, parquet_row_count, release_claim,
+    verify_claim, write_meta_row)
 from thewhisperdb_spark.operators.text import char_ngrams, tags_of, tokens
 
 
@@ -166,57 +167,6 @@ def containment_pairs(df: DataFrame, threshold: float = 0.8,
     )
 
 
-def minhash_signatures_df(shingled: DataFrame, n_hashes: int,
-                          seed: int = 42, portable: bool = True,
-                          id_col: str = "id",
-                          shingle_col: str = "sh") -> DataFrame:
-    """Frame-level MinHash over a (id, shingle-array) frame — identical
-    values to ``minhash_signature`` (same seed-derived affine family,
-    same element hash), reshaped for throughput (optimization r12):
-    explode the shingles, element-hash as a codegen projection, then
-    ``n_hashes`` primitive MIN aggregates per id, re-assembled into the
-    signature array. The in-row fold evaluates md5 + the k-wide
-    zip_with inside interpreted higher-order functions; this shape
-    measured ~40% faster at sf0.1 (3.6-4.1s -> 2.3-2.6s for 4,600 docs,
-    exact parity) when signatures are actually materialized. One
-    partial-aggregating shuffle of (id, 32 longs) rows — map-side
-    combine collapses to one row per id per partition, so the exchange
-    carries signature-sized rows, not shingles.
-
-    Row semantics match the fold + ``isNotNull`` filter exactly: docs
-    with an EMPTY shingle array keep the init signature [p]*k, docs
-    with a NULL array are dropped.
-
-    Use this when the whole frame IS the signature table (LSH build /
-    probe / pairs); ``minhash_signature`` stays the expression API for
-    signature columns inside wider frames."""
-    import random
-
-    rnd = random.Random(seed)
-    p = _MERSENNE31
-    coeffs = [(rnd.randrange(1, p), rnd.randrange(0, p))
-              for _ in range(n_hashes)]
-    ex = shingled.select(F.col(id_col).alias("id"),
-                         F.explode(shingle_col).alias("g"))
-    if portable:
-        h = F.pmod(F.conv(F.substring(F.md5("g"), 1, 15), 16, 10)
-                   .cast("long"), F.lit(p))
-    else:
-        h = F.pmod(F.xxhash64("g"), F.lit(p))
-    ex = ex.select("id", h.alias("h"))
-    aggs = [F.min(F.pmod(F.lit(a) * F.col("h") + F.lit(b), F.lit(p)))
-            .alias(f"_s{i}") for i, (a, b) in enumerate(coeffs)]
-    sig = (ex.groupBy("id").agg(*aggs)
-           .select("id", F.array(*[F.col(f"_s{i}")
-                                   for i in range(n_hashes)]).alias("sig")))
-    empty = (shingled
-             .filter(F.size(shingle_col) == 0)
-             .select(F.col(id_col).alias("id"),
-                     F.array_repeat(F.lit(p).cast("long"),
-                                    n_hashes).alias("sig")))
-    return sig.unionByName(empty)
-
-
 _MERSENNE31 = (1 << 31) - 1
 
 # Version of the hash scheme behind every persisted sketch this module can
@@ -229,52 +179,90 @@ _MERSENNE31 = (1 << 31) - 1
 # yields the v1 scheme.
 SIGNATURE_FORMAT_VERSION = 2
 
+# element hashes per numpy step of the signature kernel: bounds its working
+# set at this many × n_hashes longs (8 MB at 64 hashes) however long a row is
+_MINHASH_CHUNK = 1 << 14
 
-def minhash_signature(set_col: Column, n_hashes: int = 64, seed: int = 42,
-                      portable: bool = True) -> Column:
-    """MinHash signature over a string-array column, as an array of n_hashes
-    longs in [0, 2³¹-1).
 
-    Classic universal-hashing construction: each element is string-hashed
-    ONCE (md5-derived 60 bits folded into the Mersenne-31 domain — md5, not
-    xxhash64, so signatures are engine-portable: any engine with md5
-    re-derives identical signatures, which is what lets a DuckDB oracle
-    check the whole LSH pipeline value-for-value), and the k hash
-    functions are affine derivations h_i = (a_i·h + b_i) mod p with literal
-    (a_i, b_i) drawn deterministically from ``seed`` driver-side — so per
-    element the k-wide row costs one real hash + k multiply-adds, not k
-    string hashes. ``portable=False`` swaps the element hash to xxhash64
-    (~1.7× faster end-to-end at sf0.1) for single-engine deployments where
-    cross-engine signature reproducibility doesn't matter. The whole signature is a single fold over the set with a
-    running element-wise-min accumulator; the set expression is evaluated
-    exactly once per row. (Both properties matter: the naive
-    ``transform(i -> array_min(transform(set, hash_i)))`` shape re-evaluates
-    the set construction per hash function after Catalyst project-collapse,
-    and per-row constant arrays would re-hash the seeds per element.)"""
+def minhash_signatures_df(shingled: DataFrame, n_hashes: int,
+                          portable: bool = True) -> DataFrame:
+    """MinHash signatures of an (id, sh) frame, ``sh`` a string array:
+    (id, sig), ``sig`` n_hashes longs in [0, 2³¹-1], ``id`` keeping its type.
+
+    Each element is string-hashed ONCE, in SQL: md5-derived 60 bits folded
+    into the Mersenne-31 domain, so any engine with md5 re-derives the
+    signatures (the DuckDB oracle checks the LSH pipeline value-for-value);
+    ``portable=False`` swaps only this hash for xxhash64. The k hash
+    functions are h_i = (a_i·h + b_i) mod p with (a_i, b_i) drawn from
+    ``random.Random(42)``; their minima run in numpy over Arrow batches
+    (``mapInPandas``), exact in int64 because a, h < 2³¹, in fixed element
+    chunks with a running minimum, so no row sizes the working set.
+
+    Row semantics: a NULL array mints no row; an EMPTY array keeps the
+    init signature [p]*k; NULL shingles (``char_ngrams`` of a NULL text is
+    [NULL]) hash to NULL in both families and are skipped, as SQL MIN
+    skips them — so a non-empty array of only NULLs gets k NULLs, which
+    agree with nothing and pair with nothing."""
     import random
 
-    rnd = random.Random(seed)
+    import numpy as np
+    import pandas as pd
+
     p = _MERSENNE31
-    coeffs = [(rnd.randrange(1, p), rnd.randrange(0, p)) for _ in range(n_hashes)]
-    consts = F.array(*[
-        F.struct(F.lit(a).cast("long").alias("a"), F.lit(b).cast("long").alias("b"))
-        for a, b in coeffs])
-    if portable:
-        def elem_hash(s):
-            return F.pmod(F.conv(F.substring(F.md5(s), 1, 15), 16, 10)
+    rnd = random.Random(42)
+    a, b = np.array([(rnd.randrange(1, p), rnd.randrange(0, p))
+                     for _ in range(n_hashes)], dtype=np.int64).T
+
+    def elem_hash(g: Column) -> Column:
+        if portable:
+            return F.pmod(F.conv(F.substring(F.md5(g), 1, 15), 16, 10)
                           .cast("long"), F.lit(p))
-    else:
-        def elem_hash(s):
-            return F.pmod(F.xxhash64(s), F.lit(p))
-    return F.aggregate(
-        F.transform(set_col, elem_hash),
-        F.array_repeat(F.lit(p).cast("long"), n_hashes),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(consts, lambda c: F.pmod(c["a"] * h + c["b"], F.lit(p))),
-            lambda x, y: F.least(x, y),
-        ),
-    )
+        # xxhash64(NULL) is its seed (42), not NULL
+        return F.when(g.isNotNull(), F.pmod(F.xxhash64(g), F.lit(p)))
+
+    def signatures(batches):
+        for pdf in batches:
+            # a list<long> holding NULLs arrives as float64 with NaN; the
+            # hashes are < 2³¹, so float64 holds them exactly
+            lens = pdf["h"].map(len).to_numpy(np.int64)
+            flat = np.concatenate([np.zeros(0), *pdf["h"]])
+            row = np.repeat(np.arange(len(pdf)), lens)
+            ok = ~np.isnan(flat)
+            h, row = flat[ok].astype(np.int64), row[ok]
+            sig = np.full((len(pdf), n_hashes), p, dtype=np.int64)
+            for s in range(0, len(h), _MINHASH_CHUNK):
+                hc, rc = h[s:s + _MINHASH_CHUNK], row[s:s + _MINHASH_CHUNK]
+                starts = np.flatnonzero(np.r_[True, rc[1:] != rc[:-1]])
+                mins = np.minimum.reduceat((hc[:, None] * a + b) % p,
+                                           starts, axis=0)
+                sig[rc[starts]] = np.minimum(sig[rc[starts]], mins)
+            sigs = list(sig)
+            for i in np.flatnonzero(
+                    (lens > 0) & (np.bincount(row, minlength=len(pdf)) == 0)):
+                sigs[i] = [None] * n_hashes
+            yield pd.DataFrame({"id": pdf["id"], "sig": sigs})
+
+    hashed = (shingled.filter(F.col("sh").isNotNull())
+              .select("id", F.transform("sh", elem_hash).alias("h")))
+    id_type = hashed.schema["id"].dataType.simpleString()
+    return hashed.mapInPandas(signatures, f"id {id_type}, sig array<long>")
+
+
+def _min_bands(n_hashes: int, bands: int, threshold: float) -> int:
+    """Lossless candidate floor: a pair at est >= θ agrees on >= ceil(θ·k)
+    of k hashes, so its <= k − ceil(θ·k) disagreements break at most that
+    many bands — it collides in at least ``bands − (k − ceil(θ·k))``."""
+    import math
+
+    return max(1, bands - (n_hashes - math.ceil(threshold * n_hashes - 1e-9)))
+
+
+def _agreeing_fraction(x: str, y: str, n_hashes: int) -> Column:
+    """Estimated Jaccard of two signature columns: the fraction of
+    positions where they agree (a NULL position agrees with nothing)."""
+    return (F.size(F.filter(F.zip_with(F.col(x), F.col(y),
+                                       lambda u, v: u == v), lambda m: m))
+            .cast("double") / F.lit(n_hashes))
 
 
 def minhash_lsh_pairs(df: DataFrame, n_hashes: int = 64, bands: int = 16,
@@ -290,56 +278,30 @@ def minhash_lsh_pairs(df: DataFrame, n_hashes: int = 64, bands: int = 16,
     ``text.word_ngrams`` for the word-5-gram operating point of web-scale
     dedup pipelines — fewer shingles, less background overlap).
 
-    Candidate pruning is threshold-derived and **lossless**: a pair passing the
-    final check agrees on ≥ ceil(θ·k) of k hashes, so its ≤ k−ceil(θ·k)
-    disagreements can break at most that many bands — it must collide in at
-    least ``bands − (k − ceil(θ·k))`` bands. Counting band collisions per pair
-    (the same shuffle the candidate dedup needs anyway) and filtering below
-    that floor drops the one-band-fluke bulk of the candidate stream before
-    signatures are re-attached, without changing the result set."""
-    import math
-
-    rows_per_band = n_hashes // bands
-    min_bands = max(1, bands - (n_hashes - math.ceil(threshold * n_hashes - 1e-9)))
-    # materialize shingles as a column BEFORE the per-hash transform: inlining
-    # the ngram expression into the hash lambda would re-evaluate the array
-    # construction once per hash function (n_hashes× the work)
+    Candidate pruning is threshold-derived and **lossless** (``_min_bands``):
+    counting band collisions per pair (the same shuffle the candidate dedup
+    needs anyway) and filtering below the floor drops the one-band-fluke
+    bulk of the candidate stream before signatures are re-attached, without
+    changing the result set."""
     shingle = (shingler(F.col(text_col)) if shingler is not None
                else char_ngrams(F.col(text_col), shingle_n))
     sig = minhash_signatures_df(
         df.select(F.col(id_col).alias("id"), shingle.alias("sh")),
         n_hashes, portable=portable)
-    # materialize signatures once: the plan references ``sig`` from the band
-    # explode, both sides of the candidate self-join, and both re-attach
-    # joins — without a barrier, projection collapse would re-run the
-    # shingle+minhash computation at every reference. The broadcast-
-    # decision row count rides the checkpoint job (optimization r13 —
-    # was a separate count job over the cached blocks).
+    # materialize signatures once: the plan references ``sig`` from both
+    # sides of the candidate self-join and both re-attach joins, and would
+    # otherwise re-run the shingling and the kernel at every reference. The
+    # broadcast-decision row count rides the checkpoint job.
     from thewhisperdb_spark.operators import (broadcast_budget,
                                               checkpoint_counted)
     sig, n_sig_rows = checkpoint_counted(sig)
-    banded = sig.select(
-        "id", "sig",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.xxhash64(
-                        F.concat_ws(",", F.slice(F.col("sig"), b * rows_per_band + 1,
-                                                 rows_per_band).cast("array<string>"))
-                    ).alias("bucket"),
-                ),
-            )
-        ).alias("bb"),
-    ).select("id", "sig", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
     # candidate dedup on ids ONLY (16-byte rows through the Σ bucket²
     # shuffle), then signatures re-attach. The re-attach join is a plain
     # shuffle join by default: at pipeline scale the sig table is fact-sized
     # (1B docs × 32 longs ≈ 250 GB — nowhere near broadcastable). Broadcast is
     # only a size-gated fast path for small corpora, where the count is cheap
     # because ``sig`` is already materialized by the checkpoint above.
-    slim = banded.select("id", "band", "bucket")
+    slim = _lsh_band(sig, n_hashes, bands)
     cand_ids = (
         slim.alias("x")
         .join(slim.alias("y"),
@@ -348,7 +310,8 @@ def minhash_lsh_pairs(df: DataFrame, n_hashes: int = 64, bands: int = 16,
               & (F.col("x.id") < F.col("y.id")))
         .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
         .groupBy("a", "b").agg(F.count(F.lit(1)).alias("_nb"))
-        .filter(F.col("_nb") >= min_bands).drop("_nb")
+        .filter(F.col("_nb") >= _min_bands(n_hashes, bands, threshold))
+        .drop("_nb")
     )
     # ≈ 8 bytes × n_hashes per row, within the deployment's broadcast
     # budget (0 when broadcasts are disabled => never hint)
@@ -360,14 +323,11 @@ def minhash_lsh_pairs(df: DataFrame, n_hashes: int = 64, bands: int = 16,
     sig_b = sig.select(F.col("id").alias("b"), F.col("sig").alias("sigb"))
     if small_sig:
         sig_a, sig_b = F.broadcast(sig_a), F.broadcast(sig_b)
-    cand = cand_ids.join(sig_a, "a").join(sig_b, "b")
-    est = (
-        F.size(F.filter(F.zip_with(F.col("siga"), F.col("sigb"),
-                                   lambda x, y: x == y), lambda m: m))
-        .cast("double") / F.lit(n_hashes)
-    )
     return (
-        cand.select("a", "b", est.alias("est_jaccard"))
+        cand_ids.join(sig_a, "a").join(sig_b, "b")
+        .select("a", "b",
+                _agreeing_fraction("siga", "sigb", n_hashes)
+                .alias("est_jaccard"))
         .filter(F.col("est_jaccard") >= threshold)
     )
 
@@ -385,17 +345,17 @@ def simhash(set_col: Column, bits: int = 32,
     hashing, at 60 usable bits. ``portable=False``: an independent xxhash64
     per (bit, element) — 63 usable bits, single-engine only.
 
-    Single fold over the set (one evaluation of ``set_col``; see
-    minhash_signature for why per-bit folds would re-evaluate it ``bits``
-    times), accumulator = per-bit vote vector, packed MSB-first by a
-    multiply-accumulate fold (signed-long packing caps bits at 63)."""
+    Single fold over the set with the per-bit vote vector as accumulator,
+    so ``set_col`` is evaluated once per row (a fold per bit would
+    re-evaluate the set construction ``bits`` times after Catalyst's
+    projection collapse), packed MSB-first by a multiply-accumulate fold
+    (signed-long packing caps bits at 63)."""
     max_bits = 60 if portable else 63
     assert 0 < bits <= max_bits, f"at most {max_bits} bits for this mode"
     if portable:
         # pre-hash each element ONCE (the fold variable h is then a leaf
-        # reference, so per-bit mask tests don't re-run the md5 — the same
-        # bind-once shape minhash_signature uses), then vote with bit j of
-        # the 60-bit value via a literal mask array
+        # reference, so per-bit mask tests don't re-run the md5), then vote
+        # with bit j of the 60-bit value via a literal mask array
         masks = F.array(*[F.lit(1 << j).cast("long") for j in range(bits)])
         votes = F.aggregate(
             F.transform(set_col,
@@ -920,9 +880,8 @@ LSH_INDEX_FORMAT_VERSION = 1
 def _lsh_sig_banded(df: DataFrame, n_hashes: int, bands: int,
                     shingle_n: int, id_col: str, text_col: str,
                     portable: bool) -> tuple[DataFrame, DataFrame]:
-    """(signatures, banded buckets) with the exact banding scheme of
-    minhash_lsh_pairs — word-(shingle_n)-gram shingles, md5-portable
-    signatures, xxhash64 bucket per band slice. Signatures are
+    """(signatures, banded buckets) over word-(shingle_n)-gram shingles,
+    with the signatures and banding of minhash_lsh_pairs. Signatures are
     localCheckpointed (referenced by the bucket explode and later joins)."""
     from thewhisperdb_spark.operators.text import word_ngrams
 
@@ -935,8 +894,9 @@ def _lsh_sig_banded(df: DataFrame, n_hashes: int, bands: int,
 
 def _lsh_band(sig: DataFrame, n_hashes: int, bands: int) -> DataFrame:
     """Band a (id, sig) frame into (id, band, bucket) rows — one xxhash64
-    bucket per contiguous signature slice, the same banding as
-    minhash_lsh_pairs. Split out so append can band AFTER its anti-join."""
+    bucket per contiguous signature slice. The one banding of
+    minhash_lsh_pairs and every LSH index build, append, probe and delete
+    (append bands AFTER its anti-join)."""
     rows_per_band = n_hashes // bands
     return sig.select(
         "id",
@@ -1106,9 +1066,8 @@ def lsh_index_probe(spark, path: str, batch: DataFrame,
     """Near-dup pairs between a NEW batch and the persisted corpus:
     (batch_id, index_id, est_jaccard) with est >= threshold. Only the
     batch is shingled/hashed; the corpus side is the at-rest index. The
-    threshold-derived >=min-bands candidate floor is the same lossless
-    filter as minhash_lsh_pairs (a pair at est >= θ must collide in at
-    least bands − (k − ceil(θ·k)) bands).
+    candidate floor and the estimate are minhash_lsh_pairs' own
+    (``_min_bands``, ``_agreeing_fraction``).
 
     Sizing contract: the batch is the DELTA (daily crawl), so the
     candidate pair set — materialized once and broadcast (as distinct
@@ -1116,8 +1075,6 @@ def lsh_index_probe(spark, path: str, batch: DataFrame,
     |batch| × collisions, not by the corpus. To compare two corpus-sized
     splits, use minhash_lsh_pairs directly instead of probing one side
     as a 'batch'."""
-    import math
-
     m = _lsh_index_meta(spark, path)
     n_hashes, bands = int(m["n_hashes"]), int(m["bands"])
     sig_b, banded_b = _lsh_sig_banded(batch, n_hashes, bands,
@@ -1129,8 +1086,6 @@ def lsh_index_probe(spark, path: str, batch: DataFrame,
     id_type = str(m["id_type"])
     idx_buckets = (spark.read.schema(f"id {id_type}, bucket long, band int")
                    .parquet(f"{path}/buckets"))
-    min_bands = max(1, bands - (n_hashes
-                                - math.ceil(threshold * n_hashes - 1e-9)))
     # the candidate pair set is bounded by the batch size (small daily
     # batch), so materialize it once: it feeds both the verify join and
     # the broadcast semi-join that prunes the full-corpus signature scan
@@ -1140,7 +1095,8 @@ def lsh_index_probe(spark, path: str, batch: DataFrame,
                   ["band", "bucket"])
             .groupBy("batch_id", "index_id")
             .agg(F.count(F.lit(1)).alias("_nb"))
-            .filter(F.col("_nb") >= min_bands).drop("_nb")
+            .filter(F.col("_nb") >= _min_bands(n_hashes, bands, threshold))
+            .drop("_nb")
             .localCheckpoint(eager=True))
     # probe-side signature pruning: at a 100 TB index the verify join must
     # not scan every signature — a broadcast semi-join on the (tiny)
@@ -1150,16 +1106,14 @@ def lsh_index_probe(spark, path: str, batch: DataFrame,
                .join(F.broadcast(cand.select(F.col("index_id").alias("id"))
                                  .distinct()),
                      "id", "left_semi"))
-    est = (F.size(F.filter(F.zip_with(F.col("bsig"), F.col("isig"),
-                                      lambda x, y: x == y), lambda v: v))
-           .cast("double") / F.lit(n_hashes))
     return (cand
             .join(sig_b.select(F.col("id").alias("batch_id"),
                                F.col("sig").alias("bsig")), "batch_id")
             .join(idx_sig.select(F.col("id").alias("index_id"),
                                  F.col("sig").alias("isig")), "index_id")
             .select("batch_id", "index_id",
-                    est.alias("est_jaccard"))
+                    _agreeing_fraction("bsig", "isig", n_hashes)
+                    .alias("est_jaccard"))
             .filter(F.col("est_jaccard") >= threshold))
 
 
@@ -1176,6 +1130,10 @@ def lsh_index_delete(spark, path: str, ids: DataFrame,
     half-scrubbed. Ids absent from the index are ignored (idempotent:
     re-running a takedown is a no-op). The id column must match the
     index's stored type (same gate as append).
+
+    Before anything is written, the parquet footers must show
+    ``bands × n_signatures == n_bucket_rows``; otherwise ``ValueError``,
+    with the claim released and nothing written.
 
     The at-rest state is read and checkpointed UNDER the writer claim
     (claim first, then read — the append discipline): reading before the
@@ -1198,10 +1156,6 @@ def lsh_index_delete(spark, path: str, ids: DataFrame,
     meta_dir = f"{path}/meta"
     token = claim_sentinel(spark, meta_dir)
     try:
-        sig = (spark.read.schema(f"id {id_type}, sig array<long>")
-               .parquet(f"{path}/signatures")
-               .join(F.broadcast(del_ids), "id", "left_anti")
-               .localCheckpoint(eager=True))
         # surviving buckets are DERIVED from the surviving signatures
         # (optimization r13): buckets-at-rest == _lsh_band(signatures-at-
         # rest) is an invariant of every mutation (build/append write the
@@ -1209,8 +1163,19 @@ def lsh_index_delete(spark, path: str, ids: DataFrame,
         # rewrite preserves it), so re-banding the checkpointed survivors
         # yields the identical row set as anti-joining the at-rest
         # buckets — minus one full bucket scan, its broadcast anti-join
-        # and its checkpoint job. The banding is 8 codegen xxhash64
-        # slices per signature row over already-materialized data.
+        # and its checkpoint job. The footers check the invariant's row
+        # counts first, so a damaged index is refused, not re-derived.
+        n_sig = parquet_row_count(spark, f"{path}/signatures")
+        n_bucket_rows = parquet_row_count(spark, f"{path}/buckets")
+        if int(m["bands"]) * n_sig != n_bucket_rows:
+            raise ValueError(
+                f"LSH index at {path} holds {n_sig} signatures but "
+                f"{n_bucket_rows} bucket rows, not bands × signatures; "
+                "rebuild it with lsh_index_build")
+        sig = (spark.read.schema(f"id {id_type}, sig array<long>")
+               .parquet(f"{path}/signatures")
+               .join(F.broadcast(del_ids), "id", "left_anti")
+               .localCheckpoint(eager=True))
         buckets = _lsh_band(sig, int(m["n_hashes"]), int(m["bands"]))
     except Exception:
         release_claim(spark, meta_dir, token)    # nothing written

@@ -158,17 +158,20 @@ def read_meta_rows(spark, meta_dir: str) -> list[dict]:
 
 def parquet_row_count(spark, path: str) -> int:
     """Exact row count of a parquet directory from file FOOTERS — for
-    metadata-scale sizing decisions (IVF centroid counts). Local paths
-    read the footers driver-side via pyarrow (no Spark job, no data
-    read — parquet footers carry exact row counts); non-local schemes
-    and any pyarrow failure fall back to a Spark count. Raises
-    AnalysisException via the Spark path for a missing directory (same
-    errors as before, optimization r13)."""
+    metadata-scale sizing decisions (IVF centroid counts) and the LSH
+    index's at-rest consistency check. Parts directly under ``path`` and
+    under one level of hive partition directories (``band=3/``) count.
+    Local paths read the footers driver-side via pyarrow (no Spark job,
+    no data read — parquet footers carry exact row counts); non-local
+    schemes and any pyarrow failure fall back to a Spark count. A
+    directory without parts, as an empty partitioned write leaves, holds
+    0 rows; a missing one raises AnalysisException via the Spark path."""
     import glob as _glob
 
     base = _local_base(spark, path)
     if base is not None:
-        parts = _glob.glob(os.path.join(base, "*.parquet"))
+        parts = [f for pat in ("*.parquet", "*=*/*.parquet")
+                 for f in _glob.glob(os.path.join(base, pat))]
         if parts:
             try:
                 import pyarrow.parquet as pq
@@ -176,7 +179,14 @@ def parquet_row_count(spark, path: str) -> int:
                            for p in parts)
             except Exception:
                 pass  # unreadable -> Spark raises the canonical error
-    return spark.read.parquet(path).count()
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path).count()
+    except AnalysisException as e:
+        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
+        return 0  # the directory exists but holds no parts
 
 
 def _read_version(spark, meta_dir: str):

@@ -297,6 +297,9 @@ def _seed_trigrams(text: str) -> list[str]:
 
 
 _PROFILE_CACHE: dict = {}
+# Never persist or checkpoint a cached frame here: bench.py's
+# _release_dead_rdd_blocks unpersists every persistent RDD between
+# keys, so a checkpointed frame would fail its next read.
 _PROFILE_DF_CACHE: dict = {}
 
 

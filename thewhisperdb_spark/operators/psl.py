@@ -109,6 +109,9 @@ def parse_psl_lines(lines, include_private: bool = True) -> list[tuple]:
 # CONFIGURATION, not query results: every query still computes from the
 # parquet inputs on every action.
 _PSL_RULES_CACHE: dict = {}
+# Never persist or checkpoint a cached frame here: bench.py's
+# _release_dead_rdd_blocks unpersists every persistent RDD between
+# keys, so a checkpointed frame would fail its next read.
 _PSL_DF_CACHE: dict = {}
 
 

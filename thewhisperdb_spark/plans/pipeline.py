@@ -59,22 +59,23 @@ def run_pretraining_pipeline(docs: DataFrame, *, lang: str = "en",
 
     Stage boundaries materialize once each: every counted stage is
     localCheckpoint'ed, its count an ``observe`` metric of that same job
-    (``ingest`` and ``train_split`` ride the jobs that materialize the
-    stage after them), so the next stage reads the materialized rows
-    instead of replaying the whole upstream pipeline per action. Only
+    (``ingest`` and ``quality_filter`` are narrow filters that ride the
+    ``language_filter`` checkpoint, ``train_split`` the decontaminated-train
+    one), so the next stage reads the materialized rows instead of
+    replaying the whole upstream pipeline per action. Only
     ``packed_bins`` pays its own count (on a real cluster, swap
     localCheckpoint for persist(DISK_ONLY) / reliable checkpoint — same
     shape, spill-safe).
     """
-    ingest, train_rows = Observation(), Observation()
-    quality, n_quality = checkpoint_counted(
-        docs.observe(ingest, F.count(F.lit(1)).alias("n"))
-        .filter(_quality_pred(text_col, "n_chars")))
-    stages: list[tuple[str, int]] = [("ingest", int(ingest.get["n"])),
-                                     ("quality_filter", n_quality)]
-
-    langf, n = checkpoint_counted(quality.filter(F.col("lang") == lang))
-    stages.append(("language_filter", n))
+    ingest, quality, train_rows = Observation(), Observation(), Observation()
+    n_rows = F.count(F.lit(1)).alias("n")
+    langf, n = checkpoint_counted(
+        docs.observe(ingest, n_rows)
+        .filter(_quality_pred(text_col, "n_chars")).observe(quality, n_rows)
+        .filter(F.col("lang") == lang))
+    stages: list[tuple[str, int]] = [
+        ("ingest", int(ingest.get["n"])),
+        ("quality_filter", int(quality.get["n"])), ("language_filter", n)]
 
     exact, n = checkpoint_counted(
         D.drop_exact_duplicates(langf, id_col=id_col, text_col=text_col))
@@ -91,7 +92,7 @@ def run_pretraining_pipeline(docs: DataFrame, *, lang: str = "en",
         split, F.col("split") == "train", n=decontam_ngram,
         id_col=id_col, text_col=text_col)
     clean_train, n = checkpoint_counted(
-        train.observe(train_rows, F.count(F.lit(1)).alias("n"))
+        train.observe(train_rows, n_rows)
         .join(leaked, id_col, "left_anti"))
     stages += [("train_split", int(train_rows.get["n"])),
                ("decontaminated_train", n)]
