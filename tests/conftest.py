@@ -65,9 +65,10 @@ def jobs_of(spark):
 
 @pytest.fixture(params=["local", "distributed"])
 def cc_path(request, spark):
-    """Runs a connected-components test once per path: the driver-side
-    finish (small edge lists fit the broadcast budget) and the distributed
-    rounds, forced by disabling broadcasts."""
+    """Runs a test once per side of the broadcast-budget gates: the
+    driver-side finishes (small edge lists in connected components, small
+    signature tables in MinHash-LSH near-dedup) and the distributed paths,
+    forced by disabling broadcasts."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
     if request.param == "distributed":

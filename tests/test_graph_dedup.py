@@ -54,6 +54,17 @@ def test_broadcast_budget(spark, raw, budget):
     assert broadcast_budget(stub) == budget
 
 
+def test_broadcast_budget_of_unset_threshold(spark):
+    """An unset threshold is Spark's own default (10 MB), not disabled."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.unset(key)
+    try:
+        assert broadcast_budget(spark) == 10 << 20
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_adjacency_lists(spark):
     edges = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
     got = {r["id"]: r["neighbors"] for r in G.adjacency_lists(edges).collect()}
@@ -69,6 +80,18 @@ def test_exact_duplicates(spark):
     assert got[0]["n_dups"] == 3 and got[0]["keeper"] == 1
     kept = sorted(r["doc_id"] for r in D.drop_exact_duplicates(df).collect())
     assert kept == [1, 2]
+
+
+def test_drop_exact_duplicates_keeps_null_text_minimum(spark):
+    """NULL texts are one group, as in ``SELECT min(doc_id) … GROUP BY
+    text``: its minimum id survives; the columns keep their order."""
+    df = spark.createDataFrame(
+        [(4, None), (2, None), (3, "a"), (1, "a"), (5, "b")],
+        "doc_id long, text string")
+    out = D.drop_exact_duplicates(df)
+    assert out.columns == ["doc_id", "text"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, "a"), (2, None), (5, "b")]
 
 
 def test_shingle_jaccard_identical_docs(spark):
@@ -127,7 +150,7 @@ def test_minhash_signatures_match_oracle(spark, minhash_oracle, portable):
 
 
 @pytest.mark.parametrize("portable", [True, False])
-def test_minhash_lsh_null_text_pairs_with_nothing(spark, portable):
+def test_minhash_lsh_null_text_pairs_with_nothing(spark, cc_path, portable):
     """A NULL text shingles to [NULL], whose signature is k NULLs: it
     pairs with nothing in either hash family, while two empty texts still
     pair at 1.0. (xxhash64 of a NULL is its seed, 42, not NULL, so the
@@ -172,7 +195,7 @@ def test_near_dup_groups_transitive_chain(spark):
     assert got == {1: (1, True), 2: (1, False), 3: (1, False), 9: (9, True)}
 
 
-def test_drop_near_duplicates_end_to_end(spark):
+def test_drop_near_duplicates_end_to_end(spark, cc_path):
     # minhash pairs -> CC -> canonical keep must agree with exact-Jaccard
     # grouping on a corpus of near-identical docs + distinct docs
     base = "the quick brown fox jumps over the lazy dog near the river bank"
@@ -187,6 +210,71 @@ def test_drop_near_duplicates_end_to_end(spark):
     # schema passes through unchanged
     out = D.drop_near_duplicates(df, threshold=0.8)
     assert set(out.columns) == {"doc_id", "text"}
+
+
+def test_drop_near_duplicates_keeps_repeated_ids_once_each(spark, cc_path):
+    """A repeated id comes back as often as it came, never multiplied:
+    survivors are the rows whose id is not dropped. Id 1's second row is
+    a near-duplicate of id 2, which goes; both rows of id 1 stay."""
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    rows = [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+            (1, base), (2, base),
+            (3, "something else entirely about windows and watermarks")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = D.drop_near_duplicates(df)
+    assert out.columns == ["doc_id", "text"]
+    assert sorted(tuple(r) for r in out.collect()) == sorted(
+        [rows[0], rows[1], rows[3]])
+    alone = df.filter(F.col("doc_id") != 2)     # no near pairs at all
+    assert sorted(tuple(r) for r in D.drop_near_duplicates(alone).collect()
+                  ) == sorted([rows[0], rows[1], rows[3]])
+
+
+def test_drop_near_duplicates_needs_integral_ids(spark, cc_path):
+    df = spark.createDataFrame([("x", "some text here")],
+                               "doc_id string, text string")
+    with pytest.raises(ValueError, match="drop_near_duplicates: id column"):
+        D.drop_near_duplicates(df)
+
+
+def test_minhash_lsh_candidate_check_falls_back(spark, minhash_oracle):
+    """40 near-identical docs: their signatures fit a 10 KB budget
+    (40 × 8 B × 16 hashes) but their candidate pairs do not (about
+    C(40, 2) per band at 16 B each), so the pairs come from the shuffle
+    path; under the default budget they are found on the driver. Both
+    equal the brute-force pairs of the oracle's signatures."""
+    base = "near identical document about lakes and rivers, copy "
+    texts = [base + chr(ord("a") + i % 26) * (1 + i // 26)
+             for i in range(40)]
+    df = spark.createDataFrame(list(enumerate(texts, start=1)),
+                               "doc_id long, text string")
+    n_hashes, bands, theta = 16, 8, 0.8
+    sigs = {i: minhash_oracle({t[j:j + 3] for j in range(len(t) - 2)},
+                              n_hashes)
+            for i, t in enumerate(texts, start=1)}
+    want = {}
+    for a in sigs:
+        for b in sigs:
+            est = sum(x == y for x, y in zip(sigs[a], sigs[b])) / n_hashes
+            if a < b and est >= theta:
+                want[(a, b)] = est
+    assert len(want) > 40
+
+    def pairs():
+        out = D.minhash_lsh_pairs(df, n_hashes=n_hashes, bands=bands,
+                                  threshold=theta)
+        return out.isLocal(), {(r["a"], r["b"]): r["est_jaccard"]
+                               for r in out.collect()}
+
+    assert pairs() == (True, want)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "10KB")
+    try:
+        assert broadcast_budget(spark) == 10 << 10
+        assert pairs() == (False, want)
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_shingle_jaccard_max_df_cap(spark):

@@ -662,20 +662,23 @@ def test_simhash_band_pairs_lossless_vs_bruteforce(spark, texts):
        st.sampled_from([0.5, 0.7, 0.9]))
 @settings(max_examples=10, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_minhash_lsh_pairs_lossless_vs_bruteforce(spark, minhash_oracle,
-                                                  texts, theta):
+def test_minhash_lsh_pairs_lossless_vs_bruteforce(spark, cc_path,
+                                                  minhash_oracle, texts,
+                                                  theta):
     """The >=min-bands candidate filter must not change the result set:
     operator output == brute-force comparison of the pure-Python oracle's
     signatures over the same char-3-gram shingles, at the same threshold
-    (est_jaccard = fraction of agreeing minhashes)."""
+    (est_jaccard = fraction of agreeing minhashes), on the driver-side
+    and the shuffle path."""
     from thewhisperdb_spark.operators import dedup as D
 
     df = spark.createDataFrame(list(enumerate(texts, start=1)),
                                "doc_id long, text string")
     n_hashes, bands = 16, 8
-    got = {(r["a"], r["b"]): r["est_jaccard"]
-           for r in D.minhash_lsh_pairs(df, n_hashes=n_hashes, bands=bands,
-                                        threshold=theta).collect()}
+    pairs = D.minhash_lsh_pairs(df, n_hashes=n_hashes, bands=bands,
+                                threshold=theta)
+    assert pairs.isLocal() == (cc_path == "local")
+    got = {(r["a"], r["b"]): r["est_jaccard"] for r in pairs.collect()}
     # text.char_ngrams: substrings at 1-based offsets 1..max(len-2, 1)
     sigs = {i: minhash_oracle({t[j:j + 3] for j in range(max(len(t) - 2, 1))},
                               n_hashes)

@@ -31,7 +31,8 @@ def broadcast_budget(spark: SparkSession) -> int:
     to 32 MB. The r9 spill probe is why it follows the conf: a
     small-memory executor with the threshold tuned down died on a forced
     broadcast sized by a hardcoded rule instead of shuffling."""
-    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "-1")
+    # no default here: an unset key reads as Spark's own (10 MB)
+    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         thr = int(raw)
     except ValueError:  # size-suffixed form, e.g. "10MB" / "8388608b"

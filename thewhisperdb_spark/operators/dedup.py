@@ -11,12 +11,19 @@ pipelines value-for-value), with an xxhash64 ``portable=False`` fast path
 for single-engine deployments. Internal-only keys (band buckets) still use
 xxhash64. Dense per-row math (the MinHash k-wide minimum, SemDeDup's
 cluster grams) runs in numpy over Arrow batches.
+
+MinHash-LSH near-dedup finishes on the driver, in numpy from one
+signature collect, when the signatures and then their candidate pairs fit
+``operators.broadcast_budget`` (small corpora would otherwise pay a Spark
+action per stage for a few dozen pairs); otherwise the same pairs come
+from the distributed bucket join.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from thewhisperdb_spark.operators.indexmeta import (
     claim_sentinel, confirm_claim, parquet_row_count, release_claim,
@@ -37,9 +44,14 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
 
 def drop_exact_duplicates(df: DataFrame, id_col: str = "doc_id",
                           text_col: str = "text") -> DataFrame:
-    """Keep min-id row per distinct text. Shuffles on text hash once."""
-    keep = df.groupBy(text_col).agg(F.min(id_col).alias(id_col))
-    return df.join(keep, [text_col, id_col])
+    """Keep the min-id row per distinct text: ``min(id) over (partition by
+    text)`` and a filter, one shuffle on the text hash, and ``df`` is read
+    once (so observations on it count each row once). NULL texts form one
+    group like any other value and keep their minimum id, as
+    ``SELECT min(id) … GROUP BY text`` does."""
+    first = F.min(id_col).over(Window.partitionBy(text_col))
+    return (df.withColumn("_first", first)
+            .filter(F.col(id_col) == F.col("_first")).drop("_first"))
 
 
 def _shingle_cooccurrence(sh: DataFrame,
@@ -272,35 +284,141 @@ def minhash_lsh_pairs(df: DataFrame, n_hashes: int = 64, bands: int = 16,
     """MinHash+LSH near-dup (shingle -> minhash -> band -> bucket equi-join ->
     exact-signature Jaccard re-check). Candidate pairs are generated per band
     bucket — Σ bucket² work — then scored by estimated Jaccard (fraction of
-    agreeing minhashes). Returns (a, b, est_jaccard).
+    agreeing minhashes; a NULL position agrees with nothing). Returns
+    (a, b, est_jaccard), a < b, both keeping the id type.
 
     ``shingler`` overrides the default char-n-gram shingling (e.g.
     ``text.word_ngrams`` for the word-5-gram operating point of web-scale
     dedup pipelines — fewer shingles, less background overlap).
 
     Candidate pruning is threshold-derived and **lossless** (``_min_bands``):
-    counting band collisions per pair (the same shuffle the candidate dedup
-    needs anyway) and filtering below the floor drops the one-band-fluke
-    bulk of the candidate stream before signatures are re-attached, without
-    changing the result set."""
-    shingle = (shingler(F.col(text_col)) if shingler is not None
-               else char_ngrams(F.col(text_col), shingle_n))
-    sig = minhash_signatures_df(
-        df.select(F.col(id_col).alias("id"), shingle.alias("sh")),
-        n_hashes, portable=portable)
-    # materialize signatures once: the plan references ``sig`` from both
-    # sides of the candidate self-join and both re-attach joins, and would
-    # otherwise re-run the shingling and the kernel at every reference. The
-    # broadcast-decision row count rides the checkpoint job.
+    counting band collisions per pair and filtering below the floor drops
+    the one-band-fluke bulk of the candidate stream before the signatures
+    are compared, without changing the result set.
+
+    Measured sizes pick the path (``_lsh_signature_pairs``): small inputs
+    finish on the driver and come back as a local relation, the rest run
+    the distributed bucket join (``_lsh_pairs_shuffle``), with the same
+    pairs."""
+    sig, local = _lsh_signature_pairs(df, n_hashes, bands, threshold,
+                                      shingle_n, id_col, text_col, shingler,
+                                      portable)
+    if local is None:
+        return _lsh_pairs_shuffle(sig, n_hashes, bands, threshold)
+    id_type = sig.schema["id"].dataType
+    return sig.sparkSession.createDataFrame(local, T.StructType([
+        T.StructField("a", id_type, False), T.StructField("b", id_type, False),
+        T.StructField("est_jaccard", T.DoubleType(), False)]))
+
+
+def _lsh_signature_pairs(df: DataFrame, n_hashes: int, bands: int,
+                         threshold: float, shingle_n: int, id_col: str,
+                         text_col: str, shingler, portable: bool):
+    """(sig, local): the materialized (id, sig) signatures, and their LSH
+    pairs as a pyarrow (a, b, est_jaccard) table when they were found on
+    the driver, else None.
+
+    The signatures are checkpointed once, their row count riding that
+    job: every later reference (the collect, or both sides of the bucket
+    join and both re-attach joins) reads them instead of re-running the
+    shingling and the kernel. Two checks against
+    ``operators.broadcast_budget`` pick the path: the signatures must fit
+    (8 bytes × n_hashes per row) to be collected once, and then the
+    candidate pairs Σ C(bucket size, 2) over every bucket of every band
+    must fit too (16 bytes each) before any is built. A near-identical
+    corpus passes the first and fails the second. Failing either leaves
+    the pairs to ``_lsh_pairs_shuffle`` over the same checkpoint."""
     from thewhisperdb_spark.operators import (broadcast_budget,
                                               checkpoint_counted)
-    sig, n_sig_rows = checkpoint_counted(sig)
-    # candidate dedup on ids ONLY (16-byte rows through the Σ bucket²
-    # shuffle), then signatures re-attach. The re-attach join is a plain
-    # shuffle join by default: at pipeline scale the sig table is fact-sized
-    # (1B docs × 32 longs ≈ 250 GB — nowhere near broadcastable). Broadcast is
-    # only a size-gated fast path for small corpora, where the count is cheap
-    # because ``sig`` is already materialized by the checkpoint above.
+
+    shingle = (shingler(F.col(text_col)) if shingler is not None
+               else char_ngrams(F.col(text_col), shingle_n))
+    sig, n_sig_rows = checkpoint_counted(minhash_signatures_df(
+        df.select(F.col(id_col).alias("id"), shingle.alias("sh")),
+        n_hashes, portable=portable))
+    budget = broadcast_budget(sig.sparkSession)
+    if budget <= 0 or n_sig_rows * 8 * n_hashes > budget:
+        return sig, None
+    return sig, _lsh_pairs_local(sig.toArrow(), n_hashes, bands, threshold,
+                                 budget)
+
+
+def _expand(counts):
+    """(group, offset) for every slot of groups of these sizes: group i
+    repeated counts[i] times, beside its offsets 0 .. counts[i] − 1."""
+    import numpy as np
+
+    group = np.repeat(np.arange(len(counts)), counts)
+    return group, np.arange(len(group)) - np.repeat(np.cumsum(counts) - counts,
+                                                    counts)
+
+
+def _lsh_pairs_local(tbl, n_hashes: int, bands: int, threshold: float,
+                     budget: int):
+    """``_lsh_pairs_shuffle`` on numpy over a collected (id, sig) pyarrow
+    table: a pyarrow (a, b, est_jaccard) table, or None when the
+    candidate pairs would not fit ``budget`` bytes.
+
+    Buckets are exact band slices (the shuffle path's xxhash64 of the
+    slice stands in for them; NULL positions compare equal here, as they
+    do in that hash). The pairs inside every bucket are enumerated at
+    once, without a loop per bucket; a pair of rows counts one collision
+    for its ids in Spark's id order, rows of one id never pair, and id
+    pairs below ``_min_bands`` are dropped. Every surviving id pair is
+    scored for each combination of its rows, as the re-attach joins do."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    tbl = tbl.filter(pc.is_valid(tbl.column("id")))   # NULL ids pair with nothing
+    flat = tbl.column("sig").combine_chunks().flatten()
+    sig = flat.fill_null(-1).to_numpy().reshape(-1, n_hashes)
+    ok = flat.is_valid().to_numpy(zero_copy_only=False).reshape(-1, n_hashes)
+    ids, rank = np.unique(tbl.column("id").to_numpy(zero_copy_only=False),
+                          return_inverse=True)
+    n, r = len(sig), n_hashes // bands
+    keys = np.column_stack([
+        np.repeat(np.arange(bands), n),
+        sig[:, :bands * r].reshape(n, bands, r).swapaxes(0, 1)
+        .reshape(bands * n, r)])
+    bucket, size = np.unique(keys, axis=0, return_inverse=True,
+                             return_counts=True)[1:]
+    if int((size * (size - 1) // 2).sum()) * 16 > budget:
+        return None
+    # rows in bucket order; each pairs with the later rows of its bucket
+    order = np.argsort(bucket.ravel(), kind="stable")
+    members = size.repeat(size)
+    first, step = _expand(members - 1 - _expand(size)[1])
+    x = rank[order[first] % n]
+    y = rank[order[first + 1 + step] % n]
+    distinct = x != y
+    lo, hi = np.minimum(x, y)[distinct], np.maximum(x, y)[distinct]
+    pair, n_coll = np.unique(lo * len(ids) + hi, return_counts=True)
+    a, b = np.divmod(pair[n_coll >= _min_bands(n_hashes, bands, threshold)],
+                     len(ids))
+    # every combination of the rows of a and of b (one each unless an id
+    # repeats)
+    by_id = np.argsort(rank, kind="stable")
+    per_id = np.bincount(rank, minlength=len(ids))
+    start = np.cumsum(per_id) - per_id
+    p, k = _expand(per_id[a] * per_id[b])
+    ra = by_id[start[a[p]] + k // per_id[b[p]]]
+    rb = by_id[start[b[p]] + k % per_id[b[p]]]
+    est = ((sig[ra] == sig[rb]) & ok[ra] & ok[rb]).sum(axis=1) / n_hashes
+    hit = est >= threshold
+    id_type = tbl.schema.field("id").type
+    return pa.table({"a": pa.array(ids[a[p]][hit], id_type),
+                     "b": pa.array(ids[b[p]][hit], id_type),
+                     "est_jaccard": est[hit]})
+
+
+def _lsh_pairs_shuffle(sig: DataFrame, n_hashes: int, bands: int,
+                       threshold: float) -> DataFrame:
+    """LSH pairs of a materialized (id, sig) frame by a distributed bucket
+    join: candidate dedup on ids ONLY (16-byte rows through the Σ bucket²
+    shuffle), collisions counted per pair against ``_min_bands``, then the
+    signatures re-attach by plain shuffle joins (at pipeline scale the
+    signature table is fact-sized: 1B docs × 32 longs ≈ 250 GB)."""
     slim = _lsh_band(sig, n_hashes, bands)
     cand_ids = (
         slim.alias("x")
@@ -313,16 +431,8 @@ def minhash_lsh_pairs(df: DataFrame, n_hashes: int = 64, bands: int = 16,
         .filter(F.col("_nb") >= _min_bands(n_hashes, bands, threshold))
         .drop("_nb")
     )
-    # ≈ 8 bytes × n_hashes per row, within the deployment's broadcast
-    # budget (0 when broadcasts are disabled => never hint)
-    broadcast_sig_max_rows = (broadcast_budget(sig.sparkSession)
-                              // (8 * n_hashes))
-    small_sig = (broadcast_sig_max_rows > 0
-                 and n_sig_rows <= broadcast_sig_max_rows)
     sig_a = sig.select(F.col("id").alias("a"), F.col("sig").alias("siga"))
     sig_b = sig.select(F.col("id").alias("b"), F.col("sig").alias("sigb"))
-    if small_sig:
-        sig_a, sig_b = F.broadcast(sig_a), F.broadcast(sig_b)
     return (
         cand_ids.join(sig_a, "a").join(sig_b, "b")
         .select("a", "b",
@@ -676,6 +786,23 @@ def contamination_overlap_scores(df: DataFrame, test_pred: Column, n: int = 8,
                             / F.col("n_shingles"), 6).alias("overlap_frac")))
 
 
+def _require_integral_id(df: DataFrame, id_col: str, op: str) -> None:
+    """Duplicate-group resolution needs an integral id: the CC kernel's
+    min-label propagation runs on long labels (the right representation
+    at scale), and a string id would otherwise surface as an opaque
+    mid-job CAST_INVALID_INPUT, so fail at plan time with the fix instead
+    (LSH INDEX ops accept string ids; the group-resolution stage is where
+    the numeric contract starts)."""
+    id_type = df.select(F.col(id_col)).schema[0].dataType.simpleString()
+    if id_type not in ("tinyint", "smallint", "int", "bigint"):
+        raise ValueError(
+            f"{op}: id column '{id_col}' is {id_type}, but "
+            "duplicate-group resolution requires an integral id (labels "
+            "propagate as longs). Mint a surrogate id first, e.g. "
+            "sources.textio-style row ids or zipWithIndex, and map back "
+            "after.")
+
+
 def near_dup_groups(df: DataFrame, pairs: DataFrame,
                     id_col: str = "doc_id") -> DataFrame:
     """Resolve near-dup PAIRS into dedup GROUPS: connected components over
@@ -688,20 +815,8 @@ def near_dup_groups(df: DataFrame, pairs: DataFrame,
     singleton group, keep=true)."""
     from thewhisperdb_spark.operators.graph import clusters_from_pairs
 
+    _require_integral_id(df, id_col, "near_dup_groups")
     ids = df.select(F.col(id_col).alias("id"))
-    id_type = ids.schema["id"].dataType.simpleString()
-    if id_type not in ("tinyint", "smallint", "int", "bigint"):
-        # the CC kernel's min-label propagation runs on long labels (the
-        # right representation at scale); a string id would otherwise
-        # surface as an opaque mid-job CAST_INVALID_INPUT — fail at plan
-        # time with the fix instead (LSH INDEX ops accept string ids;
-        # the group-resolution stage is where the numeric contract starts)
-        raise ValueError(
-            f"near_dup_groups: id column '{id_col}' is {id_type}, but "
-            "duplicate-group resolution requires an integral id (labels "
-            "propagate as longs). Mint a surrogate id first, e.g. "
-            "sources.textio-style row ids or zipWithIndex, and map back "
-            "after.")
     labels = clusters_from_pairs(ids, pairs.select("a", "b"))
     return labels.select(
         F.col("id").alias(id_col), F.col("component").alias("group"),
@@ -713,16 +828,43 @@ def drop_near_duplicates(df: DataFrame, id_col: str = "doc_id",
                          bands: int = 8, threshold: float = 0.8,
                          shingler=None) -> DataFrame:
     """End-to-end near-dedup: MinHash+LSH candidate pairs -> connected
-    components -> keep the min-id document per duplicate group. This is the
-    full web-scale dedup pipeline shape (shingle -> signature -> band bucket
-    join -> transitive closure -> canonical keep): every stage is equi-join /
-    iterative-join shaped, no cross join anywhere, so the same plan runs at
-    corpus scale. Returns the deduplicated rows of ``df``."""
-    pairs = minhash_lsh_pairs(df, n_hashes=n_hashes, bands=bands,
-                              threshold=threshold, id_col=id_col,
-                              text_col=text_col, shingler=shingler)
-    verdict = near_dup_groups(df, pairs.select("a", "b"), id_col)
-    return df.join(verdict.filter(F.col("keep")).select(id_col), id_col)
+    components -> keep the min-id document per duplicate group. Returns
+    the rows of ``df``, columns in its order, whose id is not dropped:
+    ``df`` left-anti-joined with the ids whose component minimum is
+    another id, so no row is multiplied and a repeated id stays as often
+    as it came. ``id_col`` must be integral on both paths.
+
+    The paths of ``minhash_lsh_pairs`` decide where it finishes. When the
+    pairs were found on the driver, ``graph.min_labels`` labels them there
+    too and the dropped ids come back as a local relation: the signature
+    checkpoint and its collect are the only Spark actions. Otherwise the
+    shuffle pairs go through ``graph.edge_components`` (which gates its
+    own driver-side finish on the edge count). Every stage is equi-join /
+    iterative-join shaped, no cross join anywhere, so the same plan runs
+    at corpus scale."""
+    import pyarrow as pa
+
+    from thewhisperdb_spark.operators.graph import edge_components, min_labels
+
+    _require_integral_id(df, id_col, "drop_near_duplicates")
+    sig, local = _lsh_signature_pairs(
+        df, n_hashes, bands, threshold, shingle_n=3, id_col=id_col,
+        text_col=text_col, shingler=shingler, portable=True)
+    if local is None:
+        pairs = _lsh_pairs_shuffle(sig, n_hashes, bands, threshold)
+        dropped = (edge_components(pairs.select(F.col("a").alias("src"),
+                                                F.col("b").alias("dst")))
+                   .filter(F.col("id") != F.col("component"))
+                   .select(F.col("id").alias(id_col)))
+    else:
+        verts, comp = min_labels(local.column("a").to_numpy(),
+                                 local.column("b").to_numpy())
+        dropped = sig.sparkSession.createDataFrame(
+            pa.table({id_col: pa.array(verts[verts != comp],
+                                       local.schema.field("a").type)}),
+            T.StructType([T.StructField(id_col, sig.schema["id"].dataType,
+                                        False)]))
+    return df.join(dropped, id_col, "left_anti")
 
 
 def pick_survivors(df: DataFrame, groups: DataFrame, quality_col: str,

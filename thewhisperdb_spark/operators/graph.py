@@ -15,9 +15,11 @@ Connected components finishes on the driver when the symmetrized edge list
 fits the deployment's broadcast budget (``operators.broadcast_budget``, at
 16 bytes per directed edge): the edges are collected once and the same
 min-label propagation with pointer jumping runs over numpy arrays to the
-fixpoint. Near-dup pair graphs are usually tiny next to the corpus they
-come from, and there every distributed round is per-job overhead, not
-data (Pregelix, VLDB 2014, makes the same point for small and shrinking
+fixpoint (``min_labels``, the one numpy kernel, which near-dedup's
+driver-side finish in ``dedup.drop_near_duplicates`` calls too).
+Near-dup pair graphs are usually tiny next to the corpus they come from,
+and there every distributed round is per-job overhead, not data
+(Pregelix, VLDB 2014, makes the same point for small and shrinking
 graphs on a dataflow engine). Larger edge lists, or a deployment with
 broadcasts disabled, take the distributed rounds.
 """
@@ -74,25 +76,9 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     component = min vertex id in the component. Vertices with no edges are
     singleton components (reference includes them:
     ``src/embedding/Clustering.cpp:97-105``). ``id`` keeps the edge id
-    type; ``component`` is long.
-
-    Min-label propagation with pointer jumping. The symmetrized edge list
-    is materialized once, its row count riding that job. When it fits the
-    broadcast budget (16 bytes per directed edge against
-    ``operators.broadcast_budget``; a budget of 0 means never) it is
-    collected once and the rounds run on the driver to the fixpoint,
-    returned as a local relation. Otherwise each round is one shuffle on
-    the edge key and the convergence check is an aggregate (label sum),
-    not a collect of data rows. ``max_iter`` bounds only the distributed
-    rounds; the local finish always reaches the fixpoint.
-    """
-    und, n_edges = checkpoint_counted(undirect(edges))
-    budget = broadcast_budget(und.sparkSession)
-    if 0 < budget and n_edges * 16 <= budget:
-        labels = _components_local(und)
-    else:
-        labels = _components_distributed(und, max_iter)
-
+    type; ``component`` is long. The edge-touched vertices are labelled by
+    ``edge_components``."""
+    labels = edge_components(edges, max_iter)
     # singletons: vertices with no edges keep their own id as component
     singles = (vertices.select(F.col(id_col).alias("id"))
                .join(labels.select("id"), "id", "left_anti")
@@ -100,31 +86,58 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     return labels.unionByName(singles)
 
 
-def _components_local(und: DataFrame) -> DataFrame:
-    """(id, component) over the vertices of a materialized symmetric edge
-    list, computed on the driver from one collect: labels are indices into
-    the sorted vertex array, so the minimum index is the minimum id."""
-    import pyarrow as pa
+def edge_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
+    """(id, component) of the vertices some (src, dst) edge touches, by
+    min-label propagation with pointer jumping. The symmetrized edge list
+    is materialized once, its row count riding that job. When it fits the
+    broadcast budget (16 bytes per directed edge against
+    ``operators.broadcast_budget``; a budget of 0 means never) it is
+    collected once and ``min_labels`` runs on the driver, returned as a
+    local relation. Otherwise each round is one shuffle on the edge key
+    and the convergence check is an aggregate (label sum), not a collect
+    of data rows. ``max_iter`` bounds only the distributed rounds; the
+    local finish always reaches the fixpoint."""
+    und, n_edges = checkpoint_counted(undirect(edges))
+    budget = broadcast_budget(und.sparkSession)
+    if 0 < budget and n_edges * 16 <= budget:
+        return _components_local(und)
+    return _components_distributed(und, max_iter)
 
-    tbl = und.toArrow()
-    src = tbl.column("src").to_numpy()
-    dst = tbl.column("dst").to_numpy()
-    verts = np.unique(src)       # symmetric: every endpoint is some src
+
+def min_labels(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray,
+                                                          np.ndarray]:
+    """(vertices, component) of the undirected graph with edges
+    src[i]-dst[i], on numpy: the sorted distinct endpoint ids and the
+    minimum id of each one's component. Labels are indices into the
+    vertex array, so the minimum index is the minimum id; each round
+    takes the neighbours' minimum both ways, then jumps every label to
+    its representative's, to the fixpoint."""
+    verts = np.unique(np.concatenate([src, dst]))
     s = np.searchsorted(verts, src)
     d = np.searchsorted(verts, dst)
     lab = np.arange(len(verts))
     while True:
         prev = lab.copy()
         np.minimum.at(lab, d, lab[s])
+        np.minimum.at(lab, s, lab[d])
         lab = lab[lab]
         if np.array_equal(lab, prev):
-            break
+            return verts, verts[lab]
+
+
+def _components_local(und: DataFrame) -> DataFrame:
+    """(id, component) over the vertices of a materialized symmetric edge
+    list, computed on the driver from one collect."""
+    import pyarrow as pa
+
+    tbl = und.toArrow()
+    verts, comp = min_labels(tbl.column("src").to_numpy(),
+                             tbl.column("dst").to_numpy())
     schema = T.StructType([
         T.StructField("id", und.schema["src"].dataType, False),
         T.StructField("component", T.LongType(), False)])
     return und.sparkSession.createDataFrame(
-        pa.table({"id": verts, "component": verts[lab].astype(np.int64)}),
-        schema)
+        pa.table({"id": verts, "component": comp.astype(np.int64)}), schema)
 
 
 def _components_distributed(und: DataFrame, max_iter: int) -> DataFrame:

@@ -10,8 +10,8 @@ composition and per-stage accounting. Scale posture is inherited: every stage
 is scan- or equi-join-shaped and the only iteration is the near-dup connected
 components. Two things reach the driver: the per-stage counts (one long
 each, collected as metrics of the jobs that materialize the stages) and,
-when the near-dup pair graph fits the broadcast budget, its edge list,
-which connected components finishes locally.
+when they fit the broadcast budget, the MinHash signatures, from which
+near-dedup finds its pairs and components locally.
 
 The reference has no such pipeline (its only composite is the clustering job,
 ``src/embedding/EmbeddingService.cpp:140-193``); this is north-star §2.11
@@ -57,31 +57,38 @@ def run_pretraining_pipeline(docs: DataFrame, *, lang: str = "en",
     - ``train``: the final cleaned, deduplicated, decontaminated train split;
     - ``bins``: the packed training-bin occupancy table.
 
-    Stage boundaries materialize once each: every counted stage is
-    localCheckpoint'ed, its count an ``observe`` metric of that same job
-    (``ingest`` and ``quality_filter`` are narrow filters that ride the
-    ``language_filter`` checkpoint, ``train_split`` the decontaminated-train
-    one), so the next stage reads the materialized rows instead of
-    replaying the whole upstream pipeline per action. Only
-    ``packed_bins`` pays its own count (on a real cluster, swap
+    Stage boundaries materialize once each, and the next stage reads the
+    materialized rows instead of replaying the upstream pipeline per
+    action. There are three boundaries, each a localCheckpoint whose count
+    is an ``observe`` metric of that same job:
+    - ``exact_dedup``: ``ingest``, ``quality_filter`` and
+      ``language_filter`` are narrow filters under the exact-dedup
+      window, counted as observations of the same job;
+    - ``near_dedup``: it also cuts the near-dedup lineage. Without it the
+      decontamination job planned over the whole components plan, and on
+      the distributed path constraint propagation
+      (``ConstraintHelper.replaceConstraints``) hit a StackOverflowError;
+      on the driver-side path it costs one small job;
+    - ``decontaminated_train``, with ``train_split`` observed under its
+      ``left_anti`` join.
+    Only ``packed_bins`` pays its own count (on a real cluster, swap
     localCheckpoint for persist(DISK_ONLY) / reliable checkpoint — same
-    shape, spill-safe).
+    shape, spill-safe). Near-dedup adds its own signature checkpoint and,
+    when the signatures fit the broadcast budget, one collect of them.
     """
-    ingest, quality, train_rows = Observation(), Observation(), Observation()
+    ingest, quality, langf = Observation(), Observation(), Observation()
+    train_rows = Observation()
     n_rows = F.count(F.lit(1)).alias("n")
-    langf, n = checkpoint_counted(
+    exact, n = checkpoint_counted(D.drop_exact_duplicates(
         docs.observe(ingest, n_rows)
         .filter(_quality_pred(text_col, "n_chars")).observe(quality, n_rows)
-        .filter(F.col("lang") == lang))
+        .filter(F.col("lang") == lang).observe(langf, n_rows),
+        id_col=id_col, text_col=text_col))
     stages: list[tuple[str, int]] = [
         ("ingest", int(ingest.get["n"])),
-        ("quality_filter", int(quality.get["n"])), ("language_filter", n)]
+        ("quality_filter", int(quality.get["n"])),
+        ("language_filter", int(langf.get["n"])), ("exact_dedup", n)]
 
-    exact, n = checkpoint_counted(
-        D.drop_exact_duplicates(langf, id_col=id_col, text_col=text_col))
-    stages.append(("exact_dedup", n))
-
-    # the checkpoint also cuts the connected-components lineage
     near, n = checkpoint_counted(
         D.drop_near_duplicates(exact, id_col=id_col, text_col=text_col))
     stages.append(("near_dedup", n))

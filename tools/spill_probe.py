@@ -126,8 +126,9 @@ def run_phase(phase: str, out_path: str) -> None:
         # estimate and a ~90 MB execution pool cannot hold it) — which
         # routes every join onto the sort-merge/shuffled-hash paths,
         # exactly the ones that must spill. Operators with explicit
-        # broadcast fast paths must honor the -1 (minhash's sig-reattach
-        # does since r9 — the probe caught the hardcoded 32 MB rule).
+        # broadcast fast paths must honor the -1 (minhash's driver-side
+        # finish does, through operators.broadcast_budget — the probe once
+        # caught a hardcoded 32 MB rule).
         # force thresholds sized so spill FILES stay in the tens — the
         # probe's first attempt (20k rows) manufactured hundreds of files
         # per task and the merge OOM'd allocating their simultaneous 1 MB
