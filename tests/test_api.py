@@ -73,6 +73,7 @@ def test_get_update_delete_errors(engine):
     ("embedding", ["a"], None),
     ("embedding", [None], None),
     ("embedding", [0.5, 1], [0.5, 1.0]),
+    ("linked_nodes", [10**30], None),
 ])
 def test_update_skips_invalid_array_elements(engine, field, value, stored):
     """An array patch field with any element that fails int()/float() is
@@ -137,6 +138,48 @@ def test_dispatch_error_matrix(engine):
     # non-integer id -> 400 (endpoint.hpp int param coercion)
     code, env = api.dispatch(engine, "GET", "/api/nodes/abc")
     assert code == 400 and env["status"] == "error"
+    # integers outside their column or argument range -> 400, not a
+    # JVM error: ids are int64, limit/offset int32
+    big = str(2**64)
+    for method, path in (("GET", f"/api/nodes/{big}"),
+                         ("PUT", f"/api/nodes/{big}"),
+                         ("DELETE", f"/api/nodes/{big}"),
+                         ("GET", f"/api/nodes/{big}/files"),
+                         ("GET", f"/api/nodes/{big}/similar")):
+        code, env = api.dispatch(engine, method, path, body={"title": "x"})
+        assert code == 400 and env["status"] == "error", (method, path)
+    for key in ("limit", "offset"):
+        code, env = api.dispatch(engine, "GET", "/api/nodes",
+                                 query={key: str(2**31)})
+        assert code == 400 and env["status"] == "error", key
+    # a course filter outside int32 matches nothing, like an unparseable one
+    for course in (str(2**31), str(2**64)):
+        code, env = api.dispatch(engine, "GET", "/api/nodes/count",
+                                 query={"course": course})
+        assert (code, env) == (200, {"status": "success", "count": 0})
+
+
+def test_out_of_range_course_leaves_engine_readable(engine):
+    """A course outside the int32 column is invalid like an unparseable one:
+    POST stores 0 and PUT skips the field, so later reads of the node, the
+    list and the count still succeed."""
+    code, env = api.dispatch(engine, "POST", "/api/nodes",
+                             body={"title": "Big", "author": "a",
+                                   "subject": "s", "course": "99999999999"})
+    assert code == 201
+    nid = env["nodeId"]
+    code, env = api.dispatch(engine, "PUT", "/api/nodes/1",
+                             body={"course": 2**40, "title": "Patched"})
+    assert code == 200
+    code, env = api.dispatch(engine, "GET", f"/api/nodes/{nid}")
+    assert code == 200 and env["node"]["course"] == 0
+    code, env = api.dispatch(engine, "GET", "/api/nodes/1")
+    assert code == 200
+    assert (env["node"]["course"], env["node"]["title"]) == (101, "Patched")
+    code, env = api.dispatch(engine, "GET", "/api/nodes")
+    assert code == 200 and env["count"] == 4
+    code, env = api.dispatch(engine, "GET", "/api/nodes/count")
+    assert (code, env) == (200, {"status": "success", "count": 4})
 
 
 def test_dispatch_crud_roundtrip(engine):

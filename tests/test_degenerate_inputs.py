@@ -168,6 +168,58 @@ def test_vector_ops_survive_zero_and_mismatched(spark):
     V.brute_force_knn_join(emb, emb, k=2).collect()
 
 
+def test_semantic_dedup_pairs_match_similar_pairs_on_ragged_corpus(spark):
+    """One gram kernel, one edge rule: with every row in one cluster,
+    semantic_dedup_pairs returns exactly similar_pairs' (a, b, similarity)
+    multiset on a corpus with NULL, empty, zero-norm and two-dimension
+    vectors and a repeated id, whatever the blocking. Both equal a
+    pure-Python J6 scan: zero norm, NULL, empty and cross-dimension pairs
+    score 0.0 and appear only at θ <= 0; a repeated id never pairs with
+    itself."""
+    import math
+    from collections import Counter
+
+    from thewhisperdb_spark.operators import vectors as V
+
+    data = [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 0.0]), (4, None),
+            (5, []), (6, [1.0, 0.0, 0.0]), (7, [0.8, 0.2, 0.1]),
+            (2, [0.5, 0.5]), (8, [0.6, 0.8])]
+    emb = spark.createDataFrame(data, "vec_id long, embedding array<double>")
+    labels = (emb.select("vec_id").distinct()
+              .withColumn("cluster", F.lit(0)))
+
+    def cos(x, y):
+        if not x or not y or len(x) != len(y):
+            return 0.0
+        nx = math.sqrt(sum(v * v for v in x))
+        ny = math.sqrt(sum(v * v for v in y))
+        if nx == 0.0 or ny == 0.0:
+            return 0.0
+        return sum(a * b for a, b in zip(x, y)) / (nx * ny)
+
+    for thr in (0.5, 0.0):
+        want = Counter()
+        for i, (ia, va) in enumerate(data):
+            for ib, vb in data[i + 1:]:
+                if ia != ib and cos(va, vb) >= thr:
+                    want[(min(ia, ib), max(ia, ib))] += 1
+        for block_rows in (10**9, 2):
+            sp = Counter((r["a"], r["b"], r["similarity"]) for r in
+                         V.similar_pairs(emb, thr, block_rows=block_rows)
+                         .collect())
+            sd = Counter((r["a"], r["b"], r["similarity"]) for r in
+                         D.semantic_dedup_pairs(emb, thr, labels=labels,
+                                                block_rows=block_rows)
+                         .collect())
+            assert sd == sp, (thr, block_rows)
+            assert Counter((a, b) for a, b, _ in sp.elements()) == want
+            for (a, b, s) in sp:
+                va = [v for i, v in data if i == a]
+                vb = [v for i, v in data if i == b]
+                assert any(abs(cos(x, y) - s) < 1e-12
+                           for x in va for y in vb), (a, b, s)
+
+
 def test_pq_fails_loudly_on_ragged_vectors(spark):
     """PQ requires one fixed dimension: a ragged/NULL vector must raise a
     ValueError naming the offending ids, not numpy's bare

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from thewhisperdb_spark.crud import GraphEngine
 from thewhisperdb_spark.operators.filters import find_nodes, has_embedding
 from thewhisperdb_spark.operators.sorting import paginate, sort_nodes
+from thewhisperdb_spark.schemas import _fits
 
 
 class ApiError(Exception):
@@ -60,11 +61,16 @@ def _node_rows(df) -> list[dict[str, Any]]:
     return out
 
 
-def _parse_int(value: Any, name: str) -> int:
+def _parse_int(value: Any, name: str, bits: int = 64) -> int:
+    """``value`` as an int of the ``bits``-bit column or argument it
+    feeds (64: ids, 32: limit/offset/k), else a 400."""
     try:
-        return int(value)
+        v = int(value)
     except (TypeError, ValueError):
-        raise ApiError(400, f"invalid integer for {name}: {value!r}") from None
+        v = None
+    if v is None or not _fits(v, bits):
+        raise ApiError(400, f"invalid integer for {name}: {value!r}")
+    return v
 
 
 def list_nodes(engine: GraphEngine, filters: dict[str, str] | None = None,
@@ -73,8 +79,8 @@ def list_nodes(engine: GraphEngine, filters: dict[str, str] | None = None,
     """GET /api/nodes: filter conjunction (``find_nodes``, unknown keys
     ignored) -> sort -> offset/limit -> envelope
     {status, count, nodes[, limit, offset]}."""
-    limit_i = _parse_int(limit, "limit")
-    offset_i = _parse_int(offset, "offset")
+    limit_i = _parse_int(limit, "limit", 32)
+    offset_i = _parse_int(offset, "offset", 32)
     if order not in ("asc", "desc"):
         order = "asc"
     df = sort_nodes(find_nodes(engine.nodes, filters or {}), sort,
@@ -141,7 +147,7 @@ def similar_nodes(engine: GraphEngine, node_id: Any, k: Any = 10) -> dict:
     from thewhisperdb_spark.operators.vectors import topk_similar
 
     nid = _parse_int(node_id, "id")
-    k_i = _parse_int(k, "k")
+    k_i = _parse_int(k, "k", 32)
     if k_i < 0:
         raise ApiError(400, "k must be non-negative")
     # one probe decides both errors: no row -> 404, no embedding -> 400

@@ -30,10 +30,6 @@ TESTDATA_TABLES = (
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
 
 
-def default_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def _read_parquet_nanos_safe(spark: SparkSession, path: str) -> DataFrame:
     """Read parquet, tolerating TIMESTAMP(NANOS) columns in ANY session.
 
@@ -120,10 +116,6 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str,
             # cast is a pure type change, not a wall-clock shift
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -36,6 +36,7 @@ from thewhisperdb_spark.schemas import (
     NODE_SCHEMA,
     REQUIRED_NODE_FIELDS,
     TAG_BANK_SCHEMA,
+    _fits,
 )
 
 # state tables in constructor order, with the schema JSON is read under
@@ -69,17 +70,24 @@ def _literal_rows(spark: SparkSession, schema: StructType,
 
 
 def _valid_course(v: Any) -> int | None:
-    """int, or string parseable as int; else None (skip). ``GNode.cpp:156-168``."""
+    """int, or string parseable as int, inside the int32 course column;
+    else None (skip; ingest stores 0). ``GNode.cpp:156-168``."""
     if isinstance(v, bool):
         return None
-    if isinstance(v, int):
-        return v
     if isinstance(v, str):
         try:
-            return int(v)
+            v = int(v)
         except ValueError:
             return None
-    return None
+    return v if isinstance(v, int) and _fits(v, 32) else None
+
+
+def _long(x: Any) -> int:
+    """int(x) inside the int64 id range, else OverflowError."""
+    v = int(x)
+    if not _fits(v, 64):
+        raise OverflowError(f"{v} is outside int64")
+    return v
 
 
 def _valid_tags(v: Any) -> list[str] | None:
@@ -118,7 +126,7 @@ _PATCH_RULES = {
                                "date", "storage_path")},
     "course": _valid_course,
     "tags": _valid_tags,
-    "linked_nodes": _list_of(int),
+    "linked_nodes": _list_of(_long),
     "embedding": _list_of(float),
 }
 

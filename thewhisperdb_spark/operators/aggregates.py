@@ -18,11 +18,6 @@ def count_nodes(df: DataFrame) -> DataFrame:
     return df.agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def distinct_values(df: DataFrame, col: str) -> DataFrame:
-    """A7: distinct subject list (documented usage, ``CURL_TESTS.md:514``)."""
-    return df.select(col).distinct()
-
-
 def tag_histogram(df: DataFrame, tags_col: str = "tags",
                   group_cols: tuple[str, ...] = ()) -> DataFrame:
     """A4: per-(group,) tag occurrence counts via explode + hash-agg

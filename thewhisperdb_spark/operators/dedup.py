@@ -592,117 +592,30 @@ def semantic_dedup_pairs(embeddings: DataFrame, threshold: float = 0.95,
     instead of n²·d — the published scale recipe for embedding-level
     dedup of web corpora (near-dups land in the same cluster at the θ≈1
     operating point; recall vs the exact kernel is measured in pytest).
-    Each cluster's pairs come from BLAS gram matmuls over Arrow batches
-    (``applyInPandas``). Two skew guards compose: ``k`` (more clusters,
-    smaller matmuls) and ``block_rows`` — a cluster larger than
-    ``block_rows`` is hash-split into √-scale blocks and every unordered
-    block pair becomes its own task (the ``similar_pairs`` outer-product
-    layout, WITHIN the cluster), so one degenerate mega-cluster (a
-    boilerplate-heavy corpus) cannot pin |c|²·d work on a single
-    executor; the result is EXACT either way. Ragged/NULL vectors score
-    0.0 cross-dim (reference edge rule) and thus pair with nothing at
-    θ>0. ``labels`` lets a caller reuse a precomputed (id, cluster)
-    frame. Returns (a, b, similarity) with a < b, same cluster."""
-    import numpy as np
-    import pandas as pd
-
-    from thewhisperdb_spark.operators.vectors import kmeans_assign
+    The pairs come from the blocked gram ``vectors._gram_pairs`` keyed by
+    cluster. Two skew guards compose: ``k`` (more clusters, smaller
+    matmuls) and ``block_rows`` — a cluster larger than ``block_rows`` is
+    hash-split into ceil(|cluster| / block_rows) blocks, so one
+    degenerate mega-cluster (a boilerplate-heavy corpus) cannot pin
+    |c|²·d work on a single executor; the result is EXACT either way.
+    Edge rule as ``similar_pairs``: zero-norm, NULL, empty and
+    cross-dimension pairs score 0.0, so they pair only at θ <= 0.
+    ``labels`` lets a caller reuse a precomputed (id, cluster) frame.
+    Returns (a, b, similarity) with a < b, same cluster."""
+    from thewhisperdb_spark.operators.vectors import _gram_pairs, kmeans_assign
 
     lab = labels if labels is not None else kmeans_assign(
         embeddings, k=k, max_iter=max_iter, id_col=id_col, vec_col=vec_col)
     rows = (embeddings
             .select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
             .join(lab.select(F.col(id_col).alias("id"), "cluster"), "id"))
-    # per-cluster block count: ceil(|cluster| / block_rows), joined back as
-    # a broadcast (k rows). Normal clusters get nb=1 — single group, no
-    # replication; only oversized clusters fan out into block pairs.
+    # per-cluster block count joined back as a broadcast (k rows): normal
+    # clusters get one block — a single group, no replication
     sizes = (rows.groupBy("cluster")
              .agg(F.ceil(F.count(F.lit(1)) / F.lit(int(block_rows)))
                   .cast("int").alias("_nb")))
-    blocked = (rows.join(F.broadcast(sizes), "cluster")
-               .withColumn("blk", F.pmod(F.xxhash64(F.col("id")),
-                                         F.col("_nb")).cast("int")))
-    # both pair sides from ONE explode (optimization r12, the
-    # vectors.similar_pairs treatment): a_side.unionByName(b_side)
-    # referenced ``blocked`` twice, and blocked embeds the kmeans_assign
-    # join — the whole labeling pipeline executed once per branch.
-    # sequence() under ANSI refuses the empty 0..-1 range for blk=0
-    # rows, so the B-side pads to 0..max(blk-1, 0) and filters the
-    # padding back out.
-    a_tgts = F.transform(
-        F.sequence(F.col("blk"), F.col("_nb") - 1),
-        lambda j: F.struct(F.col("blk").alias("bi"),
-                           j.cast("int").alias("bj"),
-                           F.lit(0).alias("side")))
-    b_tgts = F.filter(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.col("blk") - 1, F.lit(0))),
-            lambda i: F.struct(i.cast("int").alias("bi"),
-                               F.col("blk").alias("bj"),
-                               F.lit(1).alias("side"))),
-        lambda t: t["bi"] < F.col("blk"))
-    grouped = (blocked
-               .select("cluster", "id", "v",
-                       F.explode(F.concat(a_tgts, b_tgts)).alias("t"))
-               .select("cluster", "id", "v", F.col("t.bi").alias("bi"),
-                       F.col("t.bj").alias("bj"),
-                       F.col("t.side").alias("side")))
-    thr = float(threshold)
-
-    def gram(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        a_rows = pdf[pdf["side"] == 0]
-        diag = key[1] == key[2]
-        b_rows = a_rows if diag else pdf[pdf["side"] == 1]
-        if len(a_rows) == 0 or len(b_rows) == 0 or (diag and len(a_rows) < 2):
-            return pd.DataFrame({"a": [], "b": [], "similarity": []})
-        _e = np.zeros(0)
-
-        def mats(part):
-            vs = [_e if x is None else np.asarray(x, dtype=np.float64)
-                  for x in part["v"]]
-            by_dim: dict[int, list[int]] = {}
-            for i, v in enumerate(vs):
-                if v.shape[0] > 0:
-                    by_dim.setdefault(v.shape[0], []).append(i)
-            return vs, part["id"].to_numpy(), by_dim
-
-        va, ids_a, dims_a = mats(a_rows)
-        vb, ids_b, dims_b = (va, ids_a, dims_a) if diag else mats(b_rows)
-        out_a, out_b, out_s = [], [], []
-        for d, idx_a in dims_a.items():
-            idx_b = dims_b.get(d)
-            if not idx_b:
-                continue
-            ma = np.stack([va[i] for i in idx_a])
-            na = np.linalg.norm(ma, axis=1)
-            na[na == 0.0] = np.inf
-            ua = ma / na[:, None]
-            if diag:
-                sims = ua @ ua.T
-                ii, jj = np.where(np.triu(sims >= thr, 1))
-            else:
-                mb = np.stack([vb[j] for j in idx_b])
-                nb_ = np.linalg.norm(mb, axis=1)
-                nb_[nb_ == 0.0] = np.inf
-                sims = ua @ (mb / nb_[:, None]).T
-                ii, jj = np.where(sims >= thr)
-            if len(ii) == 0:
-                continue
-            a = ids_a[np.asarray(idx_a)][ii]
-            b = ids_b[np.asarray(idx_b)][jj]
-            keep = a != b
-            a, b, s = a[keep], b[keep], sims[ii, jj][keep]
-            out_a.append(np.minimum(a, b))
-            out_b.append(np.maximum(a, b))
-            out_s.append(s)
-        if not out_a:
-            return pd.DataFrame({"a": [], "b": [], "similarity": []})
-        return pd.DataFrame({"a": np.concatenate(out_a),
-                             "b": np.concatenate(out_b),
-                             "similarity": np.concatenate(out_s)})
-
-    return grouped.groupBy("cluster", "bi", "bj").applyInPandas(
-        gram, "a long, b long, similarity double")
+    return _gram_pairs(rows.join(F.broadcast(sizes), "cluster"),
+                       ["cluster"], F.col("_nb"), threshold)
 
 
 def semantic_dedup(embeddings: DataFrame, threshold: float = 0.95,

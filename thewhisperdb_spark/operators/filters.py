@@ -14,6 +14,8 @@ from collections.abc import Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from thewhisperdb_spark.schemas import _fits
+
 
 def eq_filter(col: str, value) -> Column:
     """String/int equality (F1/F2/F3: subject, author, course —
@@ -22,12 +24,13 @@ def eq_filter(col: str, value) -> Column:
 
 
 def course_filter(value: str | int) -> Column:
-    """Course filter parses its argument to int; unparseable excludes every row
-    (``src/core/GraphDB.cpp:119-122``)."""
+    """Course filter parses its argument to int; unparseable (or outside the
+    int32 course column) excludes every row (``src/core/GraphDB.cpp:119-122``)."""
     try:
-        return F.col("course") == int(value)
+        c = int(value)
     except (TypeError, ValueError):
         return F.lit(False)
+    return F.col("course") == c if _fits(c, 32) else F.lit(False)
 
 
 def contains_filter(col: str, needle: str) -> Column:

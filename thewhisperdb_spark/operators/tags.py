@@ -219,8 +219,3 @@ def tag_bank_union(bank: DataFrame, new_tags: DataFrame) -> DataFrame:
     """A8/U2 tag-bank distinct union (``src/core/GraphDB.cpp:499-506``)."""
     return bank.union(new_tags.select(*bank.columns)).distinct()
 
-
-def merge_links(links_a: DataFrame, links_b: DataFrame) -> DataFrame:
-    """U1 link-merge: union-distinct of edge sets
-    (``src/embedding/EmbeddingService.cpp:117-126``)."""
-    return links_a.union(links_b.select(*links_a.columns)).distinct()

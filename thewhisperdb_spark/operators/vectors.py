@@ -10,11 +10,21 @@ plain dot product, and top-k via TakeOrderedAndProject. The exact pair join is
 a block cross-join — correct at oracle scale; the 100 TB path is the LSH
 bucketing in ``ann_lsh_*`` which turns the cross product into an equi-join on
 bucket ids.
+
+Dense cosine in numpy (Arrow batches) has one implementation per kernel:
+
+- ``_dim_groups`` groups vectors by dimension and unit-normalizes them;
+- ``_gram_pairs`` is the blocked pair gram behind ``similar_pairs`` and
+  ``dedup.semantic_dedup_pairs``;
+- ``_topk_rows`` is the per-batch local top-k of ``brute_force_knn_join``
+  and the IVF BLAS path, merged by one global window (``_keep_top``);
+- ``_ivf_probes`` and ``_ivf_rank`` are the IVF probe head and scoring
+  tail of ``ivf_knn_join`` and ``ivf_index_probe``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from thewhisperdb_spark.operators.indexmeta import (
@@ -95,39 +105,54 @@ def _block_count(embeddings: DataFrame, block_rows: int) -> int:
     return max(1, min(64, (est_rows + block_rows - 1) // block_rows))
 
 
-def similar_pairs(embeddings: DataFrame, threshold: float,
-                  id_col: str = "vec_id", vec_col: str = "embedding",
-                  block_rows: int = 2048) -> DataFrame:
-    """J6 ``findSimilarPairs``: unordered pairs (a < b) with cosine >= θ
-    (``src/embedding/Clustering.cpp:29-53``). Exact O(n²) — executed as a
-    **blocked gram-matrix product**: rows are hash-bucketed into √-scale
-    blocks, each unordered block pair becomes one task whose pairwise
-    similarities are a single BLAS matmul over the Arrow batch (numpy),
-    thresholded before anything is emitted.
+def _dim_groups(vectors, unit: bool = True) -> dict:
+    """Group vectors by dimension: {dim: (positions, matrix)}, NULL as
+    dim 0, so a ragged corpus never reaches ``np.stack`` and each group
+    keeps the dense BLAS path. ``unit`` divides every row by its norm; a
+    zero-norm row divides by inf and scores 0.0 against everything (the
+    reference edge rule, ``Clustering.cpp:7-27``)."""
+    import numpy as np
 
-    This is the dense-linear-algebra case where a vectorized Pandas path
-    beats per-pair codegen'd folds by ~10×: the all-pairs dot products are
-    one n_a×d @ d×n_b multiply per block pair instead of 25M interpreted
-    array folds. Replication factor is #blocks (each row joins every other
-    block once) — the standard distributed outer-product layout; at larger n
-    swap in ``ann_lsh_pairs``/``ivf_knn_join`` to prune candidates instead.
+    vs = list(vectors)
+    pos: dict[int, list[int]] = {}
+    for i, x in enumerate(vs):
+        pos.setdefault(0 if x is None else len(x), []).append(i)
+    out = {}
+    for d, idx in pos.items():
+        m = (np.stack([np.asarray(vs[i], dtype=np.float64) for i in idx])
+             if d else np.zeros((len(idx), 0)))
+        if unit:
+            n = np.linalg.norm(m, axis=1)
+            m = m / np.where(n == 0.0, np.inf, n)[:, None]
+        out[d] = (np.asarray(idx), m)
+    return out
 
-    Returns (a, b, similarity).
-    """
+
+def _gram_pairs(rows: DataFrame, keys: list[str], n_blocks: Column,
+                threshold: float) -> DataFrame:
+    """Cosine >= θ pairs (a < b) within each ``keys`` group of ``rows``
+    (keys…, id, v), as a **blocked gram-matrix product**: rows hash into
+    ``n_blocks`` blocks (``pmod(xxhash64(id), n_blocks)``), each unordered
+    block pair becomes one ``applyInPandas`` task, and its similarities
+    are one BLAS matmul per shared dimension, thresholded before anything
+    is emitted. Every unordered pair lands in exactly one block pair, so
+    the pair set does not depend on ``n_blocks``.
+
+    Edge rule (J6, ``Clustering.cpp:7-53``): a zero-norm vector scores
+    0.0; NULL, empty and cross-dimension pairs score 0.0 and are emitted
+    only when θ <= 0; a diagonal block keeps a < b. Returns (a, b,
+    similarity)."""
+    import numpy as np
     import pandas as pd
 
-    n_blocks = _block_count(embeddings, block_rows)
-    base = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    blk = F.pmod(F.xxhash64(F.col("id")), F.lit(n_blocks)).cast("int")
-    rows = base.withColumn("blk", blk)
+    blocked = rows.withColumn(
+        "blk", F.pmod(F.xxhash64(F.col("id")), n_blocks).cast("int"))
     # A-side of pair (i, j>=i): block i; B-side: block j>i (diagonal pairs
-    # compute their own triangle from the A rows alone). Both sides are
-    # emitted from ONE explode over the input (optimization r12): the
-    # previous a_side.unionByName(b_side) referenced ``rows`` twice, so
-    # the upstream scan executed once per branch (and when a caller
-    # passes a derived frame, its whole pipeline ran twice).
+    # compute their own triangle from the A rows alone). Both sides come
+    # from ONE explode: a union of two sides would run the caller's
+    # upstream plan once per branch.
     a_tgts = F.transform(
-        F.sequence(F.col("blk"), F.lit(n_blocks - 1)),
+        F.sequence(F.col("blk"), n_blocks - 1),
         lambda j: F.struct(F.col("blk").alias("bi"),
                            j.cast("int").alias("bj"),
                            F.lit(0).alias("side")))
@@ -141,102 +166,70 @@ def similar_pairs(embeddings: DataFrame, threshold: float,
                                F.col("blk").alias("bj"),
                                F.lit(1).alias("side"))),
         lambda t: t["bi"] < F.col("blk"))
-    grouped = (rows
-               .select("id", "v",
+    grouped = (blocked
+               .select(*keys, "id", "v",
                        F.explode(F.concat(a_tgts, b_tgts)).alias("t"))
-               .select("id", "v", F.col("t.bi").alias("bi"),
+               .select(*keys, "id", "v", F.col("t.bi").alias("bi"),
                        F.col("t.bj").alias("bj"),
                        F.col("t.side").alias("side")))
-
     thr = float(threshold)
 
-    def gram(key, pdf: pd.DataFrame):
-        import numpy as np
-
+    def gram(key, pdf):
         a = pdf[pdf["side"] == 0]
-        b = a if key[0] == key[1] else pdf[pdf["side"] == 1]
-        if len(a) == 0 or len(b) == 0:
-            return pd.DataFrame({"a": [], "b": [], "similarity": []})
-        diag = b is a
-        # Rows are grouped by vector DIMENSION before the matmul: a corpus
-        # with a truncated/NULL embedding must not crash the whole block
-        # (np.array on ragged rows throws) — per the reference edge rule
-        # (Clustering.cpp:7-27) cross-dimension pairs score 0.0, so they
-        # can only be emitted at thr <= 0 and same-dim subgroups keep the
-        # dense BLAS path.
-        _empty = np.zeros(0)
-        va = [_empty if x is None else np.asarray(x, dtype=np.float64)
-              for x in a["v"]]
-        ids_a_all = a["id"].to_numpy()
-        if diag:
-            vb, ids_b_all = va, ids_a_all
-        else:
-            vb = [_empty if x is None else np.asarray(x, dtype=np.float64)
-                  for x in b["v"]]
-            ids_b_all = b["id"].to_numpy()
-
-        def by_dim(vs):
-            g: dict[int, list[int]] = {}
-            for i, v in enumerate(vs):
-                g.setdefault(v.shape[0], []).append(i)
-            return g
-
-        ga = by_dim(va)
-        gb = ga if diag else by_dim(vb)
+        diag = key[-2] == key[-1]
+        b = a if diag else pdf[pdf["side"] == 1]
         frames = []
-
-        def emit(ids_a, ids_b, sims_vals):
-            sims_vals = np.asarray(sims_vals)
-            if diag:
-                # block is its own partner: keep the upper triangle
-                keep = ids_a < ids_b
-            else:
-                lo = np.minimum(ids_a, ids_b)
-                hi = np.maximum(ids_a, ids_b)
-                keep = lo < hi  # drops only (impossible) id collisions
-                ids_a, ids_b = lo, hi
-            frames.append(pd.DataFrame({
-                "a": ids_a[keep], "b": ids_b[keep],
-                "similarity": sims_vals[keep]}))
-
-        for d, ia_idx in ga.items():
-            ib_idx = gb.get(d)
-            if not ib_idx:
-                continue
-            ma = (np.stack([va[i] for i in ia_idx])
-                  if d else np.zeros((len(ia_idx), 0)))
-            same = diag  # diagonal block: subgroup indices are identical
-            mb = ma if same else (np.stack([vb[i] for i in ib_idx])
-                                  if d else np.zeros((len(ib_idx), 0)))
-            na = np.linalg.norm(ma, axis=1) if d else np.zeros(len(ia_idx))
-            nb = na if same else (np.linalg.norm(mb, axis=1) if d
-                                  else np.zeros(len(ib_idx)))
-            na = np.where(na == 0.0, np.inf, na)  # zero-norm -> sim 0
-            nb = na if same else np.where(nb == 0.0, np.inf, nb)
-            sims = ((ma / na[:, None]) @ (mb / nb[:, None]).T
-                    if d else np.zeros((len(ia_idx), len(ib_idx))))
-            ii, jj = np.nonzero(sims >= thr)
-            emit(ids_a_all[np.asarray(ia_idx)[ii]],
-                 ids_b_all[np.asarray(ib_idx)[jj]], sims[ii, jj])
-        if thr <= 0.0:
-            # cross-dimension pairs are exactly 0.0 (reference rule) and
-            # only reachable when the threshold admits them
-            for da, ia_idx in ga.items():
-                for db, ib_idx in gb.items():
+        if len(a) and len(b):
+            ga = _dim_groups(a["v"])
+            gb = ga if diag else _dim_groups(b["v"])
+            ids_a = a["id"].to_numpy()
+            ids_b = ids_a if diag else b["id"].to_numpy()
+            for da, (ia, ua) in ga.items():
+                for db, (ib, ub) in gb.items():
                     if da == db:
+                        # a distinct copy keeps the diagonal block on gemm
+                        # (numpy sends u @ u.T to syrk, whose last bits
+                        # differ from the off-diagonal blocks' gemm)
+                        sims = ua @ (ub.copy() if diag else ub).T
+                        ii, jj = np.nonzero(sims >= thr)
+                        s = sims[ii, jj]
+                    elif thr <= 0.0:
+                        ii, jj = (x.ravel()
+                                  for x in np.indices((len(ia), len(ib))))
+                        s = np.zeros(ii.size)
+                    else:
                         continue
-                    ii, jj = np.meshgrid(np.arange(len(ia_idx)),
-                                         np.arange(len(ib_idx)),
-                                         indexing="ij")
-                    emit(ids_a_all[np.asarray(ia_idx)[ii.ravel()]],
-                         ids_b_all[np.asarray(ib_idx)[jj.ravel()]],
-                         np.zeros(ii.size))
+                    x, y = ids_a[ia[ii]], ids_b[ib[jj]]
+                    if not diag:
+                        x, y = np.minimum(x, y), np.maximum(x, y)
+                    keep = x < y
+                    frames.append(pd.DataFrame(
+                        {"a": x[keep], "b": y[keep], "similarity": s[keep]}))
         if not frames:
             return pd.DataFrame({"a": [], "b": [], "similarity": []})
         return pd.concat(frames, ignore_index=True)
 
-    return (grouped.groupBy("bi", "bj")
+    return (grouped.groupBy(*keys, "bi", "bj")
             .applyInPandas(gram, "a long, b long, similarity double"))
+
+
+def similar_pairs(embeddings: DataFrame, threshold: float,
+                  id_col: str = "vec_id", vec_col: str = "embedding",
+                  block_rows: int = 2048) -> DataFrame:
+    """J6 ``findSimilarPairs``: unordered pairs (a < b) with cosine >= θ
+    (``src/embedding/Clustering.cpp:29-53``). Exact O(n²), run as the
+    blocked gram ``_gram_pairs`` over one key-less group, with about
+    ``block_rows`` rows per block. A per-block BLAS matmul beats per-pair
+    codegen'd folds by ~10×; replication is #blocks (each row joins every
+    other block once), so at larger n swap in ``ann_lsh_pairs`` or
+    ``ivf_knn_join`` to prune candidates instead.
+
+    Returns (a, b, similarity).
+    """
+    base = embeddings.select(F.col(id_col).alias("id"),
+                             F.col(vec_col).alias("v"))
+    return _gram_pairs(base, [], F.lit(_block_count(embeddings, block_rows)),
+                       threshold)
 
 
 def topk_similar(embeddings: DataFrame, query_id: int, k: int = 10,
@@ -255,29 +248,59 @@ def topk_similar(embeddings: DataFrame, query_id: int, k: int = 10,
     return scored.orderBy(F.col("similarity").desc(), F.col(id_col).asc()).limit(k)
 
 
+def _topk_rows(qids, cids, sims, k: int):
+    """Local top-k of one scored batch: ``sims`` is |Q|×|C| over query ids
+    ``qids`` and neighbor ids ``cids``. Self-matches (qid == cid) are
+    masked, each query keeps its k best by (similarity desc, neighbor_id
+    asc), and masked slots are dropped. The full order runs BEFORE the
+    truncation: argpartition alone drops boundary ties arbitrarily per
+    Arrow batch, so exact-duplicate corpora (the core dedup workload)
+    would get a batch-split-dependent neighbor set that the global window
+    cannot repair; lexsort's O(n log n) is invisible next to the matmul.
+    Returns (query_id, neighbor_id, similarity) rows."""
+    import numpy as np
+    import pandas as pd
+
+    sims[qids[:, None] == cids[None, :]] = -np.inf
+    top = min(k, sims.shape[1])
+    order = np.lexsort((np.broadcast_to(cids, sims.shape), -sims), axis=1)
+    rq = np.repeat(np.arange(len(qids)), top)
+    rc = order[:, :top].ravel()
+    s = sims[rq, rc]
+    keep = s > -np.inf
+    return pd.DataFrame({"query_id": qids[rq[keep]],
+                         "neighbor_id": cids[rc[keep]],
+                         "similarity": s[keep]})
+
+
+def _keep_top(scored: DataFrame, k: int) -> DataFrame:
+    """Global top-k merge: ``rank`` = row_number per query over
+    (similarity desc, neighbor_id asc), kept while <= k."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("similarity").desc(), F.col("neighbor_id").asc())
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
+
+
 def brute_force_knn_join(queries: DataFrame, corpus: DataFrame, k: int,
                          q_id: str = "vec_id", c_id: str = "vec_id",
                          vec_col: str = "embedding",
                          max_query_rows: int = 65_536) -> DataFrame:
     """North-star ANN baseline: exact top-k per query. The query matrix is
     broadcast to every corpus partition; each Arrow batch computes one BLAS
-    matmul (|Q|×d @ d×|batch|) and emits only its local top-k per query, so
-    the shuffle carries |Q|·k rows per partition, then a per-query window
-    keeps the global top-k. Scales with the corpus partition count; the
-    cross-join + per-pair fold shape this replaces interprets |Q|·|C| array
-    folds. The query side is driver-collected for the broadcast (same
-    contract as F.broadcast: it must be the small side — for query sets too
-    large to broadcast, fall back to ``similar_pairs``-style blocking or
-    ``ivf_knn_join``). The contract is ENFORCED: the collect itself is capped
-    at ``max_query_rows + 1`` rows — one job learns both the data and whether
+    matmul (|Q|×d @ d×|batch|) and emits only its local top-k per query
+    (``_topk_rows``), so the shuffle carries |Q|·k rows per partition,
+    then a per-query window keeps the global top-k. NULL and
+    cross-dimension corpus rows score 0.0. The query side is
+    driver-collected for the broadcast, so it must be the small side —
+    for query sets too large to broadcast use ``ivf_knn_join``. The
+    contract is ENFORCED: the collect itself is capped at
+    ``max_query_rows + 1`` rows — one job learns both the data and whether
     the cap is blown (a limit never pulls more than cap+1 rows to the driver,
     however large the query side actually is), and overflow raises instead of
     silently OOMing the driver (at 64 k rows × 64-dim doubles the broadcast
     is ~32 MB — inside the executor-memory envelope; 10× that is not).
     Returns (query_id, neighbor_id, similarity, rank)."""
-    import pandas as pd
-    from pyspark.sql import Window
-
     q_rows = (queries.select(F.col(q_id).alias("query_id"),
                              F.col(vec_col).alias("qv"))
               .limit(max_query_rows + 1).collect())
@@ -287,9 +310,6 @@ def brute_force_knn_join(queries: DataFrame, corpus: DataFrame, k: int,
             f"driver-collect cap of {max_query_rows}. Use ivf_knn_join (IVF "
             f"inverted-list probe) or ann_lsh_pairs (bucketed LSH) for large "
             f"query sets, or raise max_query_rows explicitly.")
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, similarity double, rank long")
     import numpy as np
 
     # Degenerate queries (NULL / zero-dim / zero-norm vector) are DROPPED
@@ -299,80 +319,36 @@ def brute_force_knn_join(queries: DataFrame, corpus: DataFrame, k: int,
     # neighbor list with no signal (ADVICE r5). No rows for them is the
     # honest answer; callers needing the pair-level 0.0 semantics use
     # cosine()/similar_pairs, which keep it.
-    qv_list = [np.zeros(0) if r["qv"] is None
-               else np.asarray(r["qv"], dtype=np.float64) for r in q_rows]
-    keep_q = [i for i, v in enumerate(qv_list)
-              if v.shape[0] > 0 and np.linalg.norm(v) > 0.0]
-    if not keep_q:
+    q_rows = [r for r in q_rows
+              if r["qv"] is not None and len(r["qv"]) > 0
+              and np.linalg.norm(np.asarray(r["qv"], dtype=np.float64)) > 0.0]
+    if not q_rows:
         return corpus.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, similarity double, rank long")
-    q_ids = np.array([q_rows[i]["query_id"] for i in keep_q])
-    qv_list = [qv_list[i] for i in keep_q]
-    # Queries grouped by DIMENSION before normalization: a ragged query set
-    # (truncated embeddings) must not crash the broadcast build, and per
-    # the reference edge rule cross-dimension pairs score exactly 0.0 —
-    # the zero-initialized sims matrix below encodes that for free.
-    q_groups: dict[int, list[int]] = {}
-    for i, v in enumerate(qv_list):
-        q_groups.setdefault(v.shape[0], []).append(i)
-    q_norm = {}
-    for d, idx in q_groups.items():
-        m = np.stack([qv_list[i] for i in idx])
-        n = np.linalg.norm(m, axis=1)
-        q_norm[d] = (np.asarray(idx), m / n[:, None])
-    sc = corpus.sparkSession.sparkContext
-    bq = sc.broadcast((q_ids, q_norm))
-
+    q_ids = np.array([r["query_id"] for r in q_rows])
+    # the zero-initialized sims matrix below scores cross-dimension
+    # pairs 0.0 for free
+    bq = corpus.sparkSession.sparkContext.broadcast(
+        (q_ids, _dim_groups([r["qv"] for r in q_rows])))
     kk = int(k)
 
     def score(batches):
-        ids_q, by_dim = bq.value
+        ids_q, q_groups = bq.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            _e = np.zeros(0)
-            cv_list = [_e if x is None else np.asarray(x, dtype=np.float64)
-                       for x in pdf["cv"]]
-            c_groups: dict[int, list[int]] = {}
-            for j, v in enumerate(cv_list):
-                c_groups.setdefault(v.shape[0], []).append(j)
+            c_groups = _dim_groups(pdf["cv"])
             sims = np.zeros((len(ids_q), len(pdf)))        # |Q| × batch
-            for d, (qidx, qmat) in by_dim.items():
-                jidx = c_groups.get(d)
-                if not jidx:
-                    continue
-                mc = np.stack([cv_list[j] for j in jidx])
-                cn = np.linalg.norm(mc, axis=1)
-                cn[cn == 0.0] = np.inf
-                sims[np.ix_(qidx, jidx)] = qmat @ (mc / cn[:, None]).T
-            c_ids = pdf["neighbor_id"].to_numpy()
-            mask = ids_q[:, None] == c_ids[None, :]        # self-match exclusion
-            sims[mask] = -np.inf
-            top = min(kk, sims.shape[1])
-            # full (sim desc, neighbor_id asc) order per query BEFORE the
-            # local truncation — argpartition alone drops boundary ties
-            # arbitrarily per Arrow batch, so exact-duplicate corpora (the
-            # core dedup workload) would return a batch-split-dependent
-            # neighbor set that the global window can't repair. lexsort is
-            # O(n log n) vs the matmul's O(n·d): invisible at d >= 64.
-            order = np.lexsort(
-                (np.broadcast_to(c_ids, sims.shape), -sims), axis=1)
-            part = order[:, :top]
-            rows_q = np.repeat(np.arange(len(ids_q)), top)
-            rows_c = part.ravel()
-            sel = sims[rows_q, rows_c]
-            keep = sel > -np.inf
-            yield pd.DataFrame({"query_id": ids_q[rows_q[keep]],
-                                "neighbor_id": c_ids[rows_c[keep]],
-                                "similarity": sel[keep]})
+            for d, (qidx, qmat) in q_groups.items():
+                if d in c_groups:
+                    jidx, cmat = c_groups[d]
+                    sims[np.ix_(qidx, jidx)] = qmat @ cmat.T
+            yield _topk_rows(ids_q, pdf["neighbor_id"].to_numpy(), sims, kk)
 
     local_top = corpus.select(F.col(c_id).alias("neighbor_id"),
                               F.col(vec_col).alias("cv")).mapInPandas(
         score, "query_id long, neighbor_id long, similarity double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("similarity").desc(), F.col("neighbor_id").asc())
-    return (local_top.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _keep_top(local_top, k)
 
 
 def rp_planes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -633,29 +609,61 @@ def kmeans_assign(embeddings: DataFrame, k: int = 10, max_iter: int = 5,
     return assigned.select(id_col, F.col("cell").alias("cluster"))
 
 
+def _ivf_probes(queries: DataFrame, cents: DataFrame, n_probe: int,
+                q_id: str, vec_col: str) -> DataFrame:
+    """IVF probe head: each query's unit vector dotted with the broadcast
+    unit centroids (cell, cvec), keeping its ``n_probe`` nearest cells
+    (ties → lower cell). Returns (query_id, qu, cell)."""
+    cent_u = with_unit_vector(cents, "cvec", "cu").select("cell", "cu")
+    q_u = with_unit_vector(
+        queries.select(F.col(q_id).alias("query_id"),
+                       F.col(vec_col).alias("qv")), "qv", "qu")
+    wq = Window.partitionBy("query_id").orderBy(
+        F.col("_csim").desc(), F.col("cell").asc())
+    return (q_u.join(F.broadcast(cent_u))
+            .select("query_id", "qu", "cell",
+                    dot(F.col("qu"), F.col("cu")).alias("_csim"))
+            .withColumn("_crk", F.row_number().over(wq))
+            .filter(F.col("_crk") <= n_probe)
+            .select("query_id", "qu", "cell"))
+
+
+def _ivf_rank(probes: DataFrame, lists: DataFrame, k: int, c_id: str,
+              vec_col: str, blas: bool, qt: str) -> DataFrame:
+    """IVF scoring tail: the inverted ``lists`` (c_id, vec_col, cell)
+    joined to ``probes`` on cell, self-matches dropped, exact cosine of
+    the unit vectors, global top-k. ``blas`` scores through
+    ``_ivf_blas_topk`` instead of the per-pair ``dot`` fold (the oracle's
+    bit-exact path)."""
+    corp_u = with_unit_vector(
+        lists.select(F.col(c_id).alias("neighbor_id"),
+                     F.col(vec_col).alias("cv"), "cell"), "cv", "cu2")
+    if blas:
+        return _ivf_blas_topk(probes, corp_u, k, qt)
+    return _keep_top(
+        probes.join(corp_u, "cell")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id",
+                dot(F.col("qu"), F.col("cu2")).alias("similarity")), k)
+
+
 def _ivf_blas_topk(probes: DataFrame, corp_u: DataFrame, k: int,
                    qt: str, max_query_rows: int = 65_536) -> DataFrame:
-    """BLAS scoring for the IVF paths, shaped like ``brute_force_knn_join``
-    with a cell mask: the (query, probed-cell) set is driver-collected and
-    BROADCAST (same enforced small-side cap as the brute-force path — for
-    query batches past the cap use ``blas=False``, whose join never
-    collects), and the corpus streams IN PLACE through one ``mapInPandas``
-    that per Arrow batch computes ``Q_cell @ C.T`` per (cell, dim)
-    subgroup and emits only its local top-k per query — the shuffle into
-    the final window carries |Q|·k rows per partition, never the vectors.
+    """BLAS scoring for the IVF paths: the (query, probed-cell) set is
+    driver-collected and BROADCAST under an enforced cap (for query
+    batches past it use ``blas=False``, whose join never collects), and
+    the corpus streams IN PLACE through one ``mapInPandas`` that per
+    Arrow batch computes ``Q_cell @ C.T`` per (cell, dim) subgroup and
+    keeps its ``_topk_rows`` — the shuffle into the final window carries
+    |Q|·k rows per partition, never the vectors. NULL and empty vectors
+    are skipped (cross-dim cosine is 0 by the reference rule and can't
+    reach a positive top-k).
 
     Two earlier shapes this replaces, both measured at 50k×768: the
     per-pair codegen'd fold interprets every dot at ~32 Mflops, and a
     ``groupBy(cell).applyInPandas`` gram shuffles the corpus vectors
-    (~300 MB) to the kernel — streaming the big side is the whole point.
-    Ragged vectors are grouped by dim (cross-dim cosine is 0 by the
-    reference rule and can't reach a positive top-k); NULL vectors are
-    skipped; self-matches (query_id == neighbor_id) are excluded, as in
-    the exact path; ties break (similarity desc, neighbor_id asc)."""
+    (~300 MB) to the kernel — streaming the big side is the whole point."""
     import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import Window
 
     spark = probes.sparkSession
     # neighbor_id carries the CORPUS/index id type, not the query's: the
@@ -669,68 +677,39 @@ def _ivf_blas_topk(probes: DataFrame, corp_u: DataFrame, k: int,
             f"ivf blas=True probes exceed the driver-collect cap of "
             f"{max_query_rows} (query, cell) rows; use blas=False (the "
             "join-based fold, which never collects) or raise the cap")
-    if not p_rows:
+    # broadcast index: cell -> dim -> (query ids, unit-query matrix); the
+    # vectors are already unit (normalized in Spark), so unit=False
+    by_cell: dict = {}
+    for r in p_rows:
+        by_cell.setdefault(r["cell"], []).append(r)
+    packed = {}
+    for cell, rows in by_cell.items():
+        qids = np.array([r["query_id"] for r in rows])
+        dims = _dim_groups([r["qu"] for r in rows], unit=False)
+        dims.pop(0, None)                                 # NULL / empty
+        if dims:
+            packed[cell] = {d: (qids[i], m) for d, (i, m) in dims.items()}
+    if not packed:
         return spark.createDataFrame(
             [], f"query_id {qt}, neighbor_id {nt}, similarity double, "
                 "rank int")
-    # broadcast index: cell -> dim -> (query ids, unit-query matrix)
-    by_cell: dict = {}
-    for r in p_rows:
-        qu = r["qu"]
-        if qu is None or len(qu) == 0:
-            continue
-        by_cell.setdefault(r["cell"], {}).setdefault(len(qu), []).append(
-            (r["query_id"], np.asarray(qu, dtype=np.float64)))
-    packed = {
-        cell: {d: (np.array([i for i, _ in rows]),
-                   np.stack([v for _, v in rows]))
-               for d, rows in dims.items()}
-        for cell, dims in by_cell.items()}
     bq = spark.sparkContext.broadcast(packed)
     kk = int(k)
 
     def score(batches):
         cells = bq.value
         for pdf in batches:
-            if not len(pdf):
-                continue
             for cell, grp in pdf.groupby("cell"):
                 dims = cells.get(cell)
                 if dims is None:
                     continue
-                cv = [None if x is None else np.asarray(x, dtype=np.float64)
-                      for x in grp["cu2"]]
-                c_groups: dict[int, list[int]] = {}
-                for j, v in enumerate(cv):
-                    if v is not None and v.shape[0] > 0:
-                        c_groups.setdefault(v.shape[0], []).append(j)
+                c_groups = _dim_groups(grp["cu2"], unit=False)
                 cid_all = grp["neighbor_id"].to_numpy()
                 for d, (qids, qmat) in dims.items():
-                    jidx = c_groups.get(d)
-                    if not jidx:
-                        continue
-                    cmat = np.stack([cv[j] for j in jidx])
-                    cid = cid_all[np.asarray(jidx)]
-                    sims = qmat @ cmat.T
-                    sims[qids[:, None] == cid[None, :]] = -np.inf
-                    top = min(kk, sims.shape[1])
-                    # local truncation under the FULL (sim desc,
-                    # neighbor_id asc) tie rule — argpartition alone drops
-                    # boundary ties arbitrarily per Arrow batch (exact
-                    # duplicates, the core dedup workload, would get a
-                    # batch-split-dependent neighbor set the global window
-                    # can't repair)
-                    order = np.lexsort(
-                        (np.broadcast_to(cid, sims.shape), -sims), axis=1)
-                    part = order[:, :top]
-                    rq = np.repeat(np.arange(len(qids)), top)
-                    rc = part.ravel()
-                    sel = sims[rq, rc]
-                    keep = sel > -np.inf
-                    yield pd.DataFrame({
-                        "query_id": qids[rq[keep]],
-                        "neighbor_id": cid[rc[keep]],
-                        "similarity": sel[keep]})
+                    if d in c_groups:
+                        jidx, cmat = c_groups[d]
+                        yield _topk_rows(qids, cid_all[jidx], qmat @ cmat.T,
+                                         kk)
 
     local_top = (corp_u
                  .filter(F.col("cell").isin(list(packed)))
@@ -738,10 +717,7 @@ def _ivf_blas_topk(probes: DataFrame, corp_u: DataFrame, k: int,
                  .mapInPandas(
                      score,
                      f"query_id {qt}, neighbor_id {nt}, similarity double"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("similarity").desc(), F.col("neighbor_id").asc())
-    return (local_top.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _keep_top(local_top, k)
 
 
 def ivf_knn_join(queries: DataFrame, corpus: DataFrame, k: int,
@@ -767,37 +743,10 @@ def ivf_knn_join(queries: DataFrame, corpus: DataFrame, k: int,
     ``ivf_index_probe``, where the at-rest pruned scan feeds Arrow
     directly; that is the path production runs.
     """
-    from pyspark.sql import Window
-
     assigned, centroids = ivf_assign(corpus, n_cells, c_id, vec_col)
-    cent_u = with_unit_vector(centroids, "cvec", "cu").select("cell", "cu")
-    q_u = with_unit_vector(
-        queries.select(F.col(q_id).alias("query_id"), F.col(vec_col).alias("qv")),
-        "qv", "qu")
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("_csim").desc(), F.col("cell").asc())
-    probes = (
-        q_u.join(F.broadcast(cent_u))
-        .select("query_id", "qu", "cell", dot(F.col("qu"), F.col("cu")).alias("_csim"))
-        .withColumn("_crk", F.row_number().over(wq))
-        .filter(F.col("_crk") <= n_probe)
-        .select("query_id", "qu", "cell")
-    )
-    corp_u = with_unit_vector(
-        assigned.select(F.col(c_id).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-                        "cell"), "cv", "cu2")
-    if blas:
-        return _ivf_blas_topk(probes, corp_u, k,
-                              queries.schema[q_id].dataType.simpleString())
-    scored = (
-        probes.join(corp_u, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id",
-                dot(F.col("qu"), F.col("cu2")).alias("similarity"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("similarity").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    probes = _ivf_probes(queries, centroids, n_probe, q_id, vec_col)
+    return _ivf_rank(probes, assigned, k, c_id, vec_col, blas,
+                     queries.schema[q_id].dataType.simpleString())
 
 
 # ---- product quantization (PQ) ANN ----------------------------------------
@@ -1136,13 +1085,11 @@ def ivf_index_probe(spark, path: str, queries: DataFrame, k: int,
     PartitionFilters in the plan) — no reliance on runtime DPP. Returns
     (query_id, neighbor_id, similarity, rank).
 
-    ``blas=True``: Arrow-grouped per-cell gram scoring with in-cell
-    top-k (``_ivf_blas_topk``) instead of the per-pair codegen'd fold —
-    the production setting at real embedding dims (same neighbors and
+    ``blas=True``: the broadcast-probe BLAS kernel (``_ivf_blas_topk``)
+    instead of the per-pair codegen'd fold — the production setting at real embedding dims (same neighbors and
     tie rule; see ``ivf_knn_join``).
     """
     from pyspark.errors import AnalysisException
-    from pyspark.sql import Window
 
     meta = _check_index_version(spark, path)
     qt = queries.schema[q_id].dataType.simpleString()
@@ -1159,20 +1106,8 @@ def ivf_index_probe(spark, path: str, queries: DataFrame, k: int,
         return spark.createDataFrame(
             [], f"query_id {qt}, neighbor_id {nt}, similarity double, "
                 "rank int")
-    cent_u = with_unit_vector(cents, "cvec", "cu").select("cell", "cu")
-    q_u = with_unit_vector(
-        queries.select(F.col(q_id).alias("query_id"),
-                       F.col(vec_col).alias("qv")), "qv", "qu")
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("_csim").desc(), F.col("cell").asc())
-    probes = (
-        q_u.join(F.broadcast(cent_u))
-        .select("query_id", "qu", "cell",
-                dot(F.col("qu"), F.col("cu")).alias("_csim"))
-        .withColumn("_crk", F.row_number().over(wq))
-        .filter(F.col("_crk") <= n_probe)
-        .select("query_id", "qu", "cell"))
-    probes = probes.localCheckpoint(eager=True)
+    probes = _ivf_probes(queries, cents, n_probe, q_id,
+                         vec_col).localCheckpoint(eager=True)
     cells = [r["cell"] for r in probes.select("cell").distinct().collect()]
     try:
         lists = (spark.read.parquet(f"{path}/lists")
@@ -1184,21 +1119,7 @@ def ivf_index_probe(spark, path: str, queries: DataFrame, k: int,
         return spark.createDataFrame(
             [], f"query_id {qt}, neighbor_id {nt}, similarity double, "
                 "rank int")
-    corp_u = with_unit_vector(
-        lists.select(F.col("vec_id").alias("neighbor_id"),
-                     F.col(vec_col).alias("cv"), "cell"), "cv", "cu2")
-    if blas:
-        return _ivf_blas_topk(probes, corp_u, k,
-                              queries.schema[q_id].dataType.simpleString())
-    scored = (
-        probes.join(corp_u, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id",
-                dot(F.col("qu"), F.col("cu2")).alias("similarity")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("similarity").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _ivf_rank(probes, lists, k, "vec_id", vec_col, blas, qt)
 
 
 def ivf_index_append(spark, path: str, new_vectors: DataFrame,

@@ -49,6 +49,14 @@ TAG_BANK_SCHEMA = StructType([StructField("tag", StringType(), False)])
 REQUIRED_NODE_FIELDS = ("title", "author", "subject")
 
 
+def _fits(value: int, bits: int) -> bool:
+    """Whether ``value`` fits a signed ``bits``-bit column (32: course,
+    limit/offset/k; 64: ids). A wider Python int would fail the lazy
+    column cast at every later read (CAST_OVERFLOW under ANSI) or reach
+    the JVM as a type no method accepts."""
+    return -(1 << (bits - 1)) <= value < (1 << (bits - 1))
+
+
 def coerce_course(col: Column) -> Column:
     """String/int -> int with 0 fallback (``src/core/GNode.cpp:10-24``)."""
     return F.coalesce(col.try_cast("int"), F.lit(0))

@@ -2358,12 +2358,6 @@ def sample_video_frames(media: DataFrame, max_frames: int = 16,
     return vid.mapInPandas(run, schema)
 
 
-def media_from_storage(spark: SparkSession, root: str) -> DataFrame:
-    """Read an engine attachment tree (storage.py layout) as media rows."""
-    return with_media_metadata(
-        read_binary_files(spark, os.path.join(root, "*/*/*/*")))
-
-
 AudioDecoder = Callable[[bytes], "tuple[int, list[float]]"]
 
 
