@@ -74,6 +74,8 @@ def test_get_update_delete_errors(engine):
     ("embedding", [None], None),
     ("embedding", [0.5, 1], [0.5, 1.0]),
     ("linked_nodes", [10**30], None),
+    ("embedding", [1e300, 1.0], None),
+    ("embedding", [float("nan"), 1.0], None),
 ])
 def test_update_skips_invalid_array_elements(engine, field, value, stored):
     """An array patch field with any element that fails int()/float() is

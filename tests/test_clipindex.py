@@ -109,16 +109,17 @@ def test_band_hashes_width_meta_roundtrip(spark, tmp_path):
     probes with the same width from meta; a legacy meta without the
     width column reads as 64."""
     from thewhisperdb_spark.operators.hashindex import (
-        _hash_index_meta,
+        HASH_INDEX,
         dhash_index_build,
         dhash_index_probe,
     )
+    from thewhisperdb_spark.operators.indexmeta import open_index
 
     rows = spark.createDataFrame(
         [("a", 0x0ABC), ("b", 0x0ABD)], "path string, dhash long")
     path = str(tmp_path / "w16")
     dhash_index_build(rows, path, max_hamming=2, width=16)
-    assert _hash_index_meta(spark, path)["width"] == 16
+    assert open_index(spark, path, HASH_INDEX)["width"] == 16
     hits = dhash_index_probe(
         spark, path,
         spark.createDataFrame([("q", 0x0ABC)],
@@ -133,7 +134,7 @@ def test_band_hashes_width_meta_roundtrip(spark, tmp_path):
         [(1, 2, 3, "string")],
         "format_version int, max_hamming int, bands int, id_type string"
     ).coalesce(1).write.mode("overwrite").parquet(f"{legacy}/meta")
-    assert _hash_index_meta(spark, legacy)["width"] == 64
+    assert open_index(spark, legacy, HASH_INDEX)["width"] == 64
     with pytest.raises(ValueError, match="exceeds hash width"):
         dhash_index_build(rows, str(tmp_path / "w2"), max_hamming=2,
                           bands=4, width=2)
@@ -212,3 +213,26 @@ def test_stream_clip_dedup_ingest_two_batches(spark, tmp_path):
                   spark.read.parquet(out).select("path")
                   .distinct().collect()}
     assert survivors2 == survivors
+
+
+def test_clip_rebuild_dying_before_clipmeta_refuses_probes(
+        spark, tmp_path, monkeypatch):
+    """A rebuild under new window parameters that dies before writing
+    ``clipmeta`` must leave the index in-progress: a probe must not
+    fingerprint under the OLD (k, bands) against hashes banded for the
+    new ones."""
+    from thewhisperdb_spark.operators import clipindex
+
+    rng = random.Random(5)
+    rows = [r for v in range(4) for r in _mk(rng, f"v{v}")]
+    path = str(tmp_path / "rebuild")
+    clip_index_build(_frames(spark, rows), path, k=3)
+
+    def boom(*_args):
+        raise RuntimeError("clipmeta write died")
+
+    monkeypatch.setattr(clipindex, "_clipmeta_write", boom)
+    with pytest.raises(RuntimeError, match="clipmeta write died"):
+        clip_index_build(_frames(spark, rows), path, k=2)
+    with pytest.raises(ValueError, match="in-progress"):
+        clip_index_probe(spark, path, _frames(spark, rows[:6]))

@@ -1,3 +1,4 @@
+from functools import partial
 from types import SimpleNamespace
 
 import pytest
@@ -6,6 +7,7 @@ from pyspark.sql import functions as F
 from thewhisperdb_spark.operators import broadcast_budget
 from thewhisperdb_spark.operators import dedup as D
 from thewhisperdb_spark.operators import graph as G
+from thewhisperdb_spark.operators.indexmeta import open_index, stamp_meta
 
 
 def test_connected_components_with_singletons(spark, cc_path):
@@ -1024,8 +1026,8 @@ def test_lsh_index_single_writer_claim(spark, tmp_path):
     path = str(tmp_path / "claim_idx")
     D.lsh_index_build(docs.filter(F.col("doc_id") < 30), path,
                       n_hashes=16, bands=4, shingle_n=5)
-    wm = D._lsh_meta_writer(spark, path, 16, 4, 5, True, "md5-min-v2",
-                            "bigint")
+    wm = partial(stamp_meta, spark, path, D.LSH_INDEX,
+                 open_index(spark, path, D.LSH_INDEX))
     delta = docs.filter((F.col("doc_id") >= 30) & (F.col("doc_id") < 35))
     # (a) another writer is inside its -1 bracket -> append refuses loudly
     wm(-1)
@@ -1074,8 +1076,8 @@ def test_lsh_index_probe_serves_during_claim_window(spark, tmp_path):
     path = str(tmp_path / "claim_live_idx")
     D.lsh_index_build(docs.filter(F.col("doc_id") < 30), path,
                       n_hashes=16, bands=4, shingle_n=5)
-    wm = D._lsh_meta_writer(spark, path, 16, 4, 5, True, "md5-min-v2",
-                            "bigint")
+    wm = partial(stamp_meta, spark, path, D.LSH_INDEX,
+                 open_index(spark, path, D.LSH_INDEX))
     batch = docs.filter(F.col("doc_id") < 10)
     meta_dir = f"{path}/meta"
     # writer A claims (as lsh_index_append does before its anti-join)
@@ -1145,8 +1147,8 @@ def test_claim_cannot_unblind_readers_onto_torn_state(spark, tmp_path):
     path = str(tmp_path / "race_idx")
     D.lsh_index_build(docs.filter(F.col("doc_id") < 20), path,
                       n_hashes=16, bands=4, shingle_n=5)
-    wm = D._lsh_meta_writer(spark, path, 16, 4, 5, True, "md5-min-v2",
-                            "bigint")
+    wm = partial(stamp_meta, spark, path, D.LSH_INDEX,
+                 open_index(spark, path, D.LSH_INDEX))
     meta_dir = f"{path}/meta"
     a = claim_sentinel(spark, meta_dir)
     verify_claim(spark, meta_dir, a)            # A passes its verify

@@ -73,8 +73,10 @@ def test_append_is_retry_idempotent_and_claim_gated(spark, tmp_path):
     with pytest.raises(ValueError, match="would corrupt"):
         dhash_index_append(spark, path, bad)
     # torn sentinel (-1): probes fail the loud gate, appends refuse
-    from thewhisperdb_spark.operators.hashindex import _meta_writer
-    _meta_writer(spark, path, 2, 3, "string")(-1)
+    from thewhisperdb_spark.operators.hashindex import HASH_INDEX
+    from thewhisperdb_spark.operators.indexmeta import open_index, stamp_meta
+    stamp_meta(spark, path, HASH_INDEX, open_index(spark, path, HASH_INDEX),
+               -1)
     with pytest.raises(ValueError, match="format_version"):
         dhash_index_probe(spark, path, _mk_hashes(spark, batch))
     # the append's meta read hits the same gate BEFORE it could claim
@@ -139,3 +141,54 @@ def test_build_rejects_bands_over_64(spark, tmp_path):
     # max_hamming >= bands for any non-negative max_hamming)
     with pytest.raises(ValueError, match="pigeonhole"):
         dhash_index_build(h, str(tmp_path / "ix"), max_hamming=0, bands=0)
+
+
+def _gate_index(spark, kind, path):
+    """A tiny index of ``kind`` at ``path``; returns (format version,
+    probe)."""
+    from thewhisperdb_spark.operators import dedup as D
+    from thewhisperdb_spark.operators import hashindex as H
+    from thewhisperdb_spark.operators import vectors as V
+
+    if kind == "lsh":
+        docs = spark.createDataFrame(
+            [(i, f"doc {i} shares these words with every other doc")
+             for i in range(6)], "doc_id long, text string")
+        D.lsh_index_build(docs, path, n_hashes=8, bands=4, shingle_n=2)
+        return (D.LSH_INDEX_FORMAT_VERSION,
+                lambda: D.lsh_index_probe(spark, path, docs))
+    if kind == "ivf":
+        emb = spark.createDataFrame(
+            [(i, [1.0, float(i)]) for i in range(6)],
+            "vec_id long, embedding array<float>")
+        V.ivf_index_build(emb, path, n_cells=2)
+        return (V.INDEX_FORMAT_VERSION,
+                lambda: V.ivf_index_probe(spark, path, emb, k=2))
+    hashes = _mk_hashes(spark, [(f"p{i}", i * 977) for i in range(6)])
+    H.dhash_index_build(hashes, path, max_hamming=2)
+    return (H.HASH_INDEX_FORMAT_VERSION,
+            lambda: H.dhash_index_probe(spark, path, hashes))
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf", "dhash"])
+def test_index_gate_is_shared(spark, tmp_path, kind):
+    """Every persisted index refuses a missing meta, an in-progress -1
+    and a foreign format version with the same ValueError."""
+    import shutil
+
+    path = str(tmp_path / kind)
+    version, probe = _gate_index(spark, kind, path)
+    meta = spark.read.parquet(f"{path}/meta")
+    row = meta.collect()[0].asDict()
+    probe()                                      # a stamped index serves
+    for bad, message in (
+            (-1, r"in-progress/interrupted \(format_version -1\)"),
+            (version + 7,
+             rf"format v{version + 7}, this build reads v{version}")):
+        (spark.createDataFrame([{**row, "format_version": bad}], meta.schema)
+         .write.mode("overwrite").parquet(f"{path}/meta"))
+        with pytest.raises(ValueError, match=message):
+            probe()
+    shutil.rmtree(f"{path}/meta")
+    with pytest.raises(ValueError, match="no meta"):
+        probe()

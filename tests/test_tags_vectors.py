@@ -1,10 +1,12 @@
 import pytest
 import math
+from functools import partial
 
 from pyspark.sql import functions as F
 
 from thewhisperdb_spark.operators import tags as TG
 from thewhisperdb_spark.operators import vectors as V
+from thewhisperdb_spark.operators.indexmeta import open_index, stamp_meta
 
 
 def test_nodes_by_tag(nodes_df):
@@ -599,7 +601,8 @@ def test_ivf_index_single_writer_claim_and_delete_type_gate(spark, tmp_path):
         .select("vec_id", "embedding")
     path = str(tmp_path / "ivf_claim")
     V.ivf_index_build(emb.filter(F.col("vec_id") < 300), path, n_cells=4)
-    wm = V._ivf_meta_writer(spark, path)
+    wm = partial(stamp_meta, spark, path, V.IVF_INDEX,
+                 open_index(spark, path, V.IVF_INDEX))
     delta = emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 320))
     wm(-1)
     with pytest.raises(ValueError, match="in-progress"):
@@ -703,7 +706,8 @@ def test_ivf_rebalance_claims_before_reading(spark, tmp_path):
         .select("vec_id", "embedding").filter(F.col("vec_id") < 100)
     path = str(tmp_path / "reb_ivf")
     V.ivf_index_build(emb, path, n_cells=4)
-    wm = V._ivf_meta_writer(spark, path)
+    wm = partial(stamp_meta, spark, path, V.IVF_INDEX,
+                 open_index(spark, path, V.IVF_INDEX))
     wm(-1)
     with pytest.raises(ValueError, match="in-progress"):
         V.ivf_index_rebalance(spark, path, max_iter=1)

@@ -16,6 +16,7 @@ contiguity is part of the observable contract.
 
 from __future__ import annotations
 
+import math
 import os
 from typing import Any
 
@@ -90,6 +91,21 @@ def _long(x: Any) -> int:
     return v
 
 
+# the smallest magnitude the float32 cast rounds to inf
+_FLOAT32_OVERFLOW = 2.0 ** 128 - 2.0 ** 103
+
+
+def _float32(x: Any) -> float:
+    """float(x) as a finite value inside float32 (the embedding column),
+    else ValueError. Python floats reach 1e308, which the float32 cast
+    turns into inf, and an inf/NaN element makes every cosine against
+    the vector NaN — not valid JSON."""
+    v = float(x)
+    if not math.isfinite(v) or abs(v) >= _FLOAT32_OVERFLOW:
+        raise ValueError(f"{v} does not fit a finite float32")
+    return v
+
+
 def _valid_tags(v: Any) -> list[str] | None:
     """array of strings, or CSV string -> trimmed non-empty list
     (``src/core/GNode.cpp:32-48,170-180``)."""
@@ -127,7 +143,7 @@ _PATCH_RULES = {
     "course": _valid_course,
     "tags": _valid_tags,
     "linked_nodes": _list_of(_long),
-    "embedding": _list_of(float),
+    "embedding": _list_of(_float32),
 }
 
 

@@ -21,9 +21,10 @@ Row identity: one index row per distinct window VALUE, id =
 it; enforced at build/append). Encoding the fp into the id keeps the
 hash index's (index_id, batch_id) dedup per window-value pair, so the
 containment count survives; the vband rides along so cross-band slice
-coincidences are filtered after the verify. Consistency (sentinel,
-claim-v3 single writer, replay-idempotent append) is inherited verbatim
-from the hash index.
+coincidences are filtered after the verify. Consistency (the
+``operators/indexmeta.py`` lifecycle, replay-idempotent append) is the
+hash index's; ``clipmeta`` is written inside its build bracket and read
+behind its gate.
 
 No reference counterpart; north-star extension surface.
 """
@@ -34,12 +35,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from thewhisperdb_spark.operators.hashindex import (
+    HASH_INDEX,
+    _hash_build,
     dhash_index_append,
-    dhash_index_build,
     dhash_index_probe,
 )
 from thewhisperdb_spark.operators.imagededup import (
     video_clip_fingerprints,
+)
+from thewhisperdb_spark.operators.indexmeta import (
+    build_bracket,
+    open_index,
+    read_meta_rows,
+    write_meta_row,
 )
 
 SEP = "\x1f"
@@ -73,16 +81,15 @@ def _check_ids(frames: DataFrame, id_col: str) -> None:
 
 def _clipmeta_write(spark: SparkSession, path: str, k: int,
                     bands: int) -> None:
-    from thewhisperdb_spark.operators.indexmeta import write_meta_row
-
     write_meta_row(spark, f"{path}/clipmeta", "k int, bands int",
                    (k, bands))
 
 
-def _clipmeta(spark: SparkSession, path: str) -> tuple[int, int]:
-    from thewhisperdb_spark.operators.indexmeta import read_meta_rows
+def _clipmeta(spark: SparkSession, path: str) -> tuple[dict, int, int]:
+    """The hash index's gated meta and the frozen window (k, bands)."""
+    m = open_index(spark, path, HASH_INDEX)
     r = read_meta_rows(spark, f"{path}/clipmeta")[0]
-    return int(r["k"]), int(r["bands"])
+    return m, int(r["k"]), int(r["bands"])
 
 
 def clip_index_build(frames: DataFrame, path: str, k: int = 3,
@@ -93,15 +100,19 @@ def clip_index_build(frames: DataFrame, path: str, k: int = 3,
     (``video_frame_dhash`` / ``audio_segment_fingerprints`` output).
     The window parameters (k, bands) are frozen in ``clipmeta`` —
     probes re-fingerprint their batch with the INDEX'S parameters, so
-    drift is impossible by construction."""
+    drift is impossible by construction. ``clipmeta`` is written inside
+    the hash index's build bracket: a rebuild that dies before it is
+    stamped never serves probes under the old window parameters."""
     width = min(63, k * -(-64 // bands))
     _check_ids(frames, id_col)
     rows = _fingerprint_rows(frames, k, bands, id_col, hash_col,
                              idx_col)
-    dhash_index_build(rows, path, max_hamming=max_hamming,
-                      bands=max_hamming + 1, id_col="wid",
-                      hash_col="wfp", width=width)
-    _clipmeta_write(frames.sparkSession, path, k, bands)
+    meta, write = _hash_build(rows, max_hamming, max_hamming + 1, "wid",
+                              "wfp", width)
+    spark = frames.sparkSession
+    with build_bracket(spark, path, HASH_INDEX, meta):
+        write(path)
+        _clipmeta_write(spark, path, k, bands)
 
 
 def clip_index_append(spark: SparkSession, path: str,
@@ -111,7 +122,7 @@ def clip_index_append(spark: SparkSession, path: str,
     """Add a batch's clips under the index's frozen window parameters.
     Replay-idempotent: composite window ids anti-join the at-rest rows
     (inherited from ``dhash_index_append``)."""
-    k, bands = _clipmeta(spark, path)
+    _, k, bands = _clipmeta(spark, path)
     _check_ids(frames, id_col)
     rows = _fingerprint_rows(frames, k, bands, id_col, hash_col,
                              idx_col)
@@ -144,7 +155,7 @@ def clip_index_probe(spark: SparkSession, path: str, frames: DataFrame,
     full id scans, so containment stays a true fraction. Self-pairs
     (a replayed batch whose clips are already indexed match themselves
     at containment 1.0) are excluded here, not left to callers."""
-    k, bands = _clipmeta(spark, path)
+    idx_meta, k, bands = _clipmeta(spark, path)
     rows = _fingerprint_rows(frames, k, bands, id_col, hash_col,
                              idx_col).localCheckpoint(eager=True)
     hits = dhash_index_probe(spark, path, rows, id_col="wid",
@@ -165,8 +176,6 @@ def clip_index_probe(spark: SparkSession, path: str, frames: DataFrame,
     shared = m.groupBy("a", "b").agg(
         F.count_distinct("vband_a", "fp_a").alias("sa"),
         F.count_distinct("vband_b", "fp_b").alias("sb"))
-    from thewhisperdb_spark.operators.indexmeta import read_meta_rows
-    idx_meta = read_meta_rows(spark, f"{path}/meta")[0]
     idx_ids = spark.read.schema(
         f"id {idx_meta['id_type']}, h long").parquet(f"{path}/hashes") \
         .select(_split_wid(F.col("id"), 0).alias("a"))

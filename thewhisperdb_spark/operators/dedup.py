@@ -26,8 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from thewhisperdb_spark.operators.indexmeta import (
-    claim_sentinel, confirm_claim, parquet_row_count, release_claim,
-    verify_claim, write_meta_row)
+    IndexKind, build_bracket, mutate_index, open_index, parquet_row_count)
 from thewhisperdb_spark.operators.text import char_ngrams, tags_of, tokens
 
 
@@ -924,12 +923,20 @@ def repeated_span_scrub(df: DataFrame, k: int = 8, min_count: int = 2,
 # The daily-crawl dedup pattern at 100 TB: signatures for the historical
 # corpus are computed ONCE and persisted; each arriving batch hashes only
 # its own documents and probes the index through the banded bucket join.
-# Mirrors the IVF index protocol (vectors.ivf_index_*): meta sentinel
-# written LAST, loud version/parameter gate on probe/append — a probe
-# against an index built with different banding parameters would silently
-# generate wrong candidates, so parameter drift must fail, not degrade.
+# Meta gate, build bracket and claim-guarded mutations are the shared
+# index lifecycle (``operators/indexmeta.py``). Meta freezes the banding
+# parameters: a probe against an index built with different banding
+# parameters would silently generate wrong candidates, so parameter
+# drift must fail, not degrade.
 
 LSH_INDEX_FORMAT_VERSION = 1
+LSH_INDEX = IndexKind(
+    "LSH", LSH_INDEX_FORMAT_VERSION,
+    "format_version int, n_hashes int, bands int, shingle_n int, "
+    "portable boolean, hash_scheme string, id_type string",
+    "lsh_index_build",
+    # pre-r6 indexes carry no id_type column; they were all long-id builds
+    {"id_type": "bigint"})
 
 
 def _lsh_sig_banded(df: DataFrame, n_hashes: int, bands: int,
@@ -966,52 +973,6 @@ def _lsh_band(sig: DataFrame, n_hashes: int, bands: int) -> DataFrame:
              F.col("bb.bucket").alias("bucket"))
 
 
-def _lsh_index_meta(spark, path: str) -> dict:
-    """Read + gate the index meta; loud errors for missing/in-progress/
-    version-mismatched indexes (same discipline as vectors._check_index_version)."""
-    from pyspark.errors import AnalysisException
-
-    from thewhisperdb_spark.operators.indexmeta import read_meta_rows
-
-    try:
-        rows = read_meta_rows(spark, f"{path}/meta")
-    except AnalysisException as e:
-        raise ValueError(
-            f"LSH index at {path} has no meta marker — not an index, or an "
-            "interrupted build removed it; rebuild with lsh_index_build") from e
-    m = dict(rows[0]) if rows else {}
-    ver = int(m.get("format_version", 0))
-    if ver == -1:
-        raise ValueError(
-            f"LSH index at {path} is marked in-progress/interrupted "
-            "(format_version -1); rebuild with lsh_index_build")
-    if ver != LSH_INDEX_FORMAT_VERSION:
-        raise ValueError(
-            f"LSH index at {path} is format v{ver}, this build reads "
-            f"v{LSH_INDEX_FORMAT_VERSION}; rebuild with lsh_index_build")
-    # pre-r6 indexes carry no id_type column; they were all long-id builds
-    m.setdefault("id_type", "bigint")
-    return m
-
-
-def _lsh_meta_writer(spark, path: str, n_hashes: int, bands: int,
-                     shingle_n: int, portable: bool, hash_scheme: str,
-                     id_type: str):
-    """One meta writer shared by build/append/compact so the sentinel
-    protocol (invalidate with -1 first, stamp the real version last) is
-    spelled identically at every site. Writer claims live in separate
-    uniquely-named files (``indexmeta`` v3) — the sentinel never carries
-    a token, so a claim can never clobber an in-progress ``-1``."""
-    def write_meta(version: int) -> None:
-        write_meta_row(
-            spark, f"{path}/meta",
-            "format_version int, n_hashes int, bands int, shingle_n int, "
-            "portable boolean, hash_scheme string, id_type string",
-            (version, n_hashes, bands, shingle_n, portable, hash_scheme,
-             id_type))
-    return write_meta
-
-
 def lsh_index_build(df: DataFrame, path: str, n_hashes: int = 32,
                     bands: int = 8, shingle_n: int = 5,
                     id_col: str = "doc_id", text_col: str = "text",
@@ -1020,20 +981,18 @@ def lsh_index_build(df: DataFrame, path: str, n_hashes: int = 32,
     ``<path>/buckets`` (bucket, id) hive-partitioned by band, and
     ``<path>/meta`` holding the banding parameters AND the id column's
     data type (probe/compact derive their declared read schemas from it —
-    a string-id index must not be read back as long). Meta is the
-    build-completion sentinel: invalidated first (-1), stamped last."""
+    a string-id index must not be read back as long)."""
     spark = df.sparkSession
     sig, banded = _lsh_sig_banded(df, n_hashes, bands, shingle_n,
                                   id_col, text_col, portable)
-    write_meta = _lsh_meta_writer(
-        spark, path, n_hashes, bands, shingle_n, portable,
-        "md5-min-v2" if portable else "xxhash64-v1",
-        sig.schema["id"].dataType.simpleString())
-    write_meta(-1)
-    sig.write.mode("overwrite").parquet(f"{path}/signatures")
-    (banded.write.mode("overwrite").partitionBy("band")
-     .parquet(f"{path}/buckets"))
-    write_meta(LSH_INDEX_FORMAT_VERSION)
+    meta = {"n_hashes": n_hashes, "bands": bands, "shingle_n": shingle_n,
+            "portable": portable,
+            "hash_scheme": "md5-min-v2" if portable else "xxhash64-v1",
+            "id_type": sig.schema["id"].dataType.simpleString()}
+    with build_bracket(spark, path, LSH_INDEX, meta):
+        sig.write.mode("overwrite").parquet(f"{path}/signatures")
+        (banded.write.mode("overwrite").partitionBy("band")
+         .parquet(f"{path}/buckets"))
 
 
 def lsh_index_append(spark, path: str, new_df: DataFrame,
@@ -1041,36 +1000,17 @@ def lsh_index_append(spark, path: str, new_df: DataFrame,
     """Add a batch to the index with the INDEX'S OWN banding parameters
     (read from meta — caller-supplied params can't drift).
 
-    Retry-idempotent and crash-atomic: incoming ids are anti-joined
-    against the persisted signatures before anything is written, so
+    Retry-idempotent: incoming ids are anti-joined against the persisted
+    signatures under the writer claim, before anything is written, so
     re-running a failed/duplicated batch job (the normal operating
     condition for a daily-crawl index) is a no-op for already-indexed
-    docs; and the two appends are bracketed by the same meta sentinel
-    invalidate/stamp as build/compact, so a crash between the signatures
-    write and the buckets write leaves an index that loudly fails the
-    gate instead of one whose probe silently misses the torn batch.
-    A torn append requires lsh_index_build to recover (documented
-    trade-off: the sentinel makes the tear detectable, not repairable).
-
-    SINGLE-WRITER, ENFORCED: a uniquely-named claim file is PUT
-    (``indexmeta.claim_sentinel``, protocol v3) BEFORE the anti-join reads
-    the at-rest signatures — not merely before the data writes — then the
-    claim is re-verified (``verify_claim``) before the ``-1`` stamp and
-    re-confirmed (``confirm_claim``) after it, immediately before the
-    first data write. Claim-first is what closes the retry-while-running
-    double-write: a retry that fired while the original append was
-    mid-flight either loses the newest-claim check (having written
-    nothing), fails the re-verify/confirm, or — claiming after the
-    original stamped — anti-joins a state that already CONTAINS the
-    original's rows and lands as the intended no-op. If the delta
-    computation itself fails under the claim, the claim file is deleted
-    before re-raising (the sentinel was never touched). Probes are NOT
-    blocked by the claim: it never writes the sentinel (readers keep
-    serving the last stamped state through the shingle + anti-join phase,
-    the long part); only the two delta appends themselves sit inside the
-    in-progress ``-1`` bracket — a crash there still leaves the loud gate
-    failure that makes a torn append detectable."""
-    m = _lsh_index_meta(spark, path)
+    docs, and a retry racing the original either loses the claim or
+    anti-joins a state that already contains the original's rows.
+    Crash-atomic: the two appends sit inside the ``-1`` bracket, so a
+    crash between them leaves an index that loudly fails the gate (a torn
+    append requires lsh_index_build to recover). Probes keep serving
+    through the anti-join phase. Lifecycle: ``indexmeta.mutate_index``."""
+    m = open_index(spark, path, LSH_INDEX)
     n_hashes, bands = int(m["n_hashes"]), int(m["bands"])
     sig, _ = _lsh_sig_banded(new_df, n_hashes, bands, int(m["shingle_n"]),
                              id_col, text_col, bool(m["portable"]))
@@ -1079,40 +1019,29 @@ def lsh_index_append(spark, path: str, new_df: DataFrame,
         raise ValueError(
             f"LSH index at {path} stores {m['id_type']} ids; appending a "
             f"batch with {in_type} ids would corrupt the index")
-    write_meta = _lsh_meta_writer(
-        spark, path, n_hashes, bands, int(m["shingle_n"]),
-        bool(m["portable"]), str(m["hash_scheme"]), str(m["id_type"]))
-    meta_dir = f"{path}/meta"
-    token = claim_sentinel(spark, meta_dir)
-    try:
-        # under the claim: the anti-join must observe every COMMITTED
-        # append (the file listing is resolved here, post-claim), and the
-        # survivors are checkpointed so banding and both writes observe
-        # one fixed computation
+
+    def delta():
+        # the anti-join must observe every COMMITTED append (the file
+        # listing is resolved here, post-claim), and the survivors are
+        # checkpointed so banding and both writes observe one fixed
+        # computation; emptiness rides the checkpoint job (r13)
+        from thewhisperdb_spark.operators import checkpoint_counted
         idx_ids = (spark.read.schema(f"id {m['id_type']}, sig array<long>")
                    .parquet(f"{path}/signatures").select("id"))
-        # emptiness rides the checkpoint job (optimization r13)
-        from thewhisperdb_spark.operators import checkpoint_counted
         new_sig, n_new = checkpoint_counted(
             sig.join(idx_ids, "id", "left_anti"))
         if n_new == 0:
-            # fully-replayed batch: nothing to write — release the claim
-            release_claim(spark, meta_dir, token)
-            return
-        banded = _lsh_band(new_sig, n_hashes, bands).localCheckpoint(
+            return None                          # fully-replayed batch
+        return new_sig, _lsh_band(new_sig, n_hashes, bands).localCheckpoint(
             eager=True)
-    except Exception:
-        release_claim(spark, meta_dir, token)    # nothing written
-        raise
-    # in-progress bracket around ONLY the two state-mutating appends;
-    # confirm AFTER the -1 stamp closes the verify->stamp claim window
-    verify_claim(spark, meta_dir, token)
-    write_meta(-1)
-    confirm_claim(spark, meta_dir, token)
-    new_sig.write.mode("append").parquet(f"{path}/signatures")
-    banded.write.mode("append").partitionBy("band").parquet(f"{path}/buckets")
-    write_meta(LSH_INDEX_FORMAT_VERSION)
-    release_claim(spark, meta_dir, token, sweep=True)
+
+    def write(d):
+        new_sig, banded = d
+        new_sig.write.mode("append").parquet(f"{path}/signatures")
+        (banded.write.mode("append").partitionBy("band")
+         .parquet(f"{path}/buckets"))
+
+    mutate_index(spark, path, LSH_INDEX, m, delta, write)
 
 
 def lsh_index_probe(spark, path: str, batch: DataFrame,
@@ -1130,7 +1059,7 @@ def lsh_index_probe(spark, path: str, batch: DataFrame,
     |batch| × collisions, not by the corpus. To compare two corpus-sized
     splits, use minhash_lsh_pairs directly instead of probing one side
     as a 'batch'."""
-    m = _lsh_index_meta(spark, path)
+    m = open_index(spark, path, LSH_INDEX)
     n_hashes, bands = int(m["n_hashes"]), int(m["bands"])
     sig_b, banded_b = _lsh_sig_banded(batch, n_hashes, bands,
                                       int(m["shingle_n"]), id_col, text_col,
@@ -1179,38 +1108,32 @@ def lsh_index_delete(spark, path: str, ids: DataFrame,
     remove the given doc ids from the persisted index so deleted
     documents stop surfacing as probe candidates. A compact-style
     rewrite: signatures and buckets are anti-joined against the
-    (typically tiny — broadcast) delete set and rewritten under the same
-    meta sentinel as build/compact, so a delete that dies mid-rewrite
-    leaves an index that loudly fails the gate instead of one
-    half-scrubbed. Ids absent from the index are ignored (idempotent:
-    re-running a takedown is a no-op). The id column must match the
-    index's stored type (same gate as append).
+    (typically tiny — broadcast) delete set and rewritten inside the
+    ``-1`` bracket, so a delete that dies mid-rewrite leaves an index
+    that loudly fails the gate instead of one half-scrubbed. Ids absent
+    from the index are ignored (idempotent: re-running a takedown is a
+    no-op). The id column must match the index's stored type (same gate
+    as append).
 
     Before anything is written, the parquet footers must show
     ``bands × n_signatures == n_bucket_rows``; otherwise ``ValueError``,
-    with the claim released and nothing written.
+    with nothing written.
 
     The at-rest state is read and checkpointed UNDER the writer claim
-    (claim first, then read — the append discipline): reading before the
-    claim opens a lost-update window where an append that commits between
-    the checkpoint and the claim is silently erased by the overwrite.
-    The claim keeps the version valid (probes serve through the anti-join
-    phase); only the rewrite itself is bracketed by ``-1``."""
-    m = _lsh_index_meta(spark, path)
+    (``indexmeta.mutate_index``): reading before the claim opens a
+    lost-update window where an append that commits between the
+    checkpoint and the claim is silently erased by the overwrite."""
+    m = open_index(spark, path, LSH_INDEX)
     id_type = str(m["id_type"])
+    n_hashes, bands = int(m["n_hashes"]), int(m["bands"])
     del_ids = ids.select(F.col(id_col).alias("id")).distinct()
     in_type = del_ids.schema["id"].dataType.simpleString()
     if in_type != id_type:
         raise ValueError(
             f"LSH index at {path} stores {id_type} ids; deleting by "
             f"{in_type} ids would silently match nothing")
-    write_meta = _lsh_meta_writer(
-        spark, path, int(m["n_hashes"]), int(m["bands"]),
-        int(m["shingle_n"]), bool(m["portable"]), str(m["hash_scheme"]),
-        id_type)
-    meta_dir = f"{path}/meta"
-    token = claim_sentinel(spark, meta_dir)
-    try:
+
+    def delta():
         # surviving buckets are DERIVED from the surviving signatures
         # (optimization r13): buckets-at-rest == _lsh_band(signatures-at-
         # rest) is an invariant of every mutation (build/append write the
@@ -1222,28 +1145,23 @@ def lsh_index_delete(spark, path: str, ids: DataFrame,
         # counts first, so a damaged index is refused, not re-derived.
         n_sig = parquet_row_count(spark, f"{path}/signatures")
         n_bucket_rows = parquet_row_count(spark, f"{path}/buckets")
-        if int(m["bands"]) * n_sig != n_bucket_rows:
+        if bands * n_sig != n_bucket_rows:
             raise ValueError(
                 f"LSH index at {path} holds {n_sig} signatures but "
                 f"{n_bucket_rows} bucket rows, not bands × signatures; "
                 "rebuild it with lsh_index_build")
-        sig = (spark.read.schema(f"id {id_type}, sig array<long>")
-               .parquet(f"{path}/signatures")
-               .join(F.broadcast(del_ids), "id", "left_anti")
-               .localCheckpoint(eager=True))
-        buckets = _lsh_band(sig, int(m["n_hashes"]), int(m["bands"]))
-    except Exception:
-        release_claim(spark, meta_dir, token)    # nothing written
-        raise
-    verify_claim(spark, meta_dir, token)
-    write_meta(-1)
-    confirm_claim(spark, meta_dir, token)
-    sig.write.mode("overwrite").parquet(f"{path}/signatures")
-    (buckets.repartition(int(m["bands"]), "band")
-     .write.mode("overwrite").partitionBy("band")
-     .parquet(f"{path}/buckets"))
-    write_meta(LSH_INDEX_FORMAT_VERSION)
-    release_claim(spark, meta_dir, token, sweep=True)
+        return (spark.read.schema(f"id {id_type}, sig array<long>")
+                .parquet(f"{path}/signatures")
+                .join(F.broadcast(del_ids), "id", "left_anti")
+                .localCheckpoint(eager=True))
+
+    def write(sig):
+        sig.write.mode("overwrite").parquet(f"{path}/signatures")
+        (_lsh_band(sig, n_hashes, bands).repartition(bands, "band")
+         .write.mode("overwrite").partitionBy("band")
+         .parquet(f"{path}/buckets"))
+
+    mutate_index(spark, path, LSH_INDEX, m, delta, write)
 
 
 def lsh_index_stats(spark, path: str) -> DataFrame:
@@ -1257,7 +1175,7 @@ def lsh_index_stats(spark, path: str) -> DataFrame:
     nothing is re-hashed. Returns (n_docs, n_bucket_rows,
     n_distinct_buckets, max_bucket, p99_bucket, n_sig_files, n_hashes,
     bands, shingle_n)."""
-    m = _lsh_index_meta(spark, path)
+    m = open_index(spark, path, LSH_INDEX)
     id_type = str(m["id_type"])
     sig = spark.read.schema(f"id {id_type}, sig array<long>") \
         .parquet(f"{path}/signatures")
@@ -1298,24 +1216,17 @@ def lsh_index_compact(spark, path: str,
     and bucket-join scan cost at probe time is dominated by file count once
     deltas are frequent. Rewrite signatures and buckets with data-derived
     file counts (textio.write_compacted's rule), preserving the band
-    partitioning. The meta sentinel is invalidated during the rewrite and
-    re-stamped after, so a compaction that dies mid-flight leaves an index
-    that loudly fails the gate instead of one with half-rewritten files."""
+    partitioning. The at-rest state is checkpointed under the writer
+    claim and rewritten inside the ``-1`` bracket
+    (``indexmeta.mutate_index``), so a compaction that dies mid-flight
+    leaves an index that loudly fails the gate instead of one with
+    half-rewritten files."""
     import math as _math
 
-    m = _lsh_index_meta(spark, path)
+    m = open_index(spark, path, LSH_INDEX)
     id_type = str(m["id_type"])
-    write_meta = _lsh_meta_writer(
-        spark, path, int(m["n_hashes"]), int(m["bands"]),
-        int(m["shingle_n"]), bool(m["portable"]), str(m["hash_scheme"]),
-        id_type)
-    # claim first, then read (the append/delete discipline): a compact
-    # that checkpoints before claiming silently erases any append that
-    # commits in between. The claim keeps the version valid; only the
-    # rewrite sits inside the -1 bracket.
-    meta_dir = f"{path}/meta"
-    token = claim_sentinel(spark, meta_dir)
-    try:
+
+    def delta():
         from thewhisperdb_spark.operators import checkpoint_counted
         # the rewrite-sizing count rides the checkpoint job (r13)
         sig, n_sig = checkpoint_counted(
@@ -1323,16 +1234,14 @@ def lsh_index_compact(spark, path: str,
             .parquet(f"{path}/signatures"))
         buckets = (spark.read.schema(f"id {id_type}, bucket long, band int")
                    .parquet(f"{path}/buckets").localCheckpoint(eager=True))
-    except Exception:
-        release_claim(spark, meta_dir, token)    # nothing written
-        raise
-    verify_claim(spark, meta_dir, token)
-    write_meta(-1)
-    confirm_claim(spark, meta_dir, token)
-    (sig.repartition(max(1, _math.ceil(n_sig / target_rows_per_file)))
-     .write.mode("overwrite").parquet(f"{path}/signatures"))
-    (buckets.repartition(int(m["bands"]), "band")
-     .write.mode("overwrite").partitionBy("band")
-     .parquet(f"{path}/buckets"))
-    write_meta(LSH_INDEX_FORMAT_VERSION)
-    release_claim(spark, meta_dir, token, sweep=True)
+        return sig, n_sig, buckets
+
+    def write(d):
+        sig, n_sig, buckets = d
+        (sig.repartition(max(1, _math.ceil(n_sig / target_rows_per_file)))
+         .write.mode("overwrite").parquet(f"{path}/signatures"))
+        (buckets.repartition(int(m["bands"]), "band")
+         .write.mode("overwrite").partitionBy("band")
+         .parquet(f"{path}/buckets"))
+
+    mutate_index(spark, path, LSH_INDEX, m, delta, write)

@@ -1,6 +1,6 @@
 """Persisted perceptual-hash index: incremental near-dup detection for
 media corpora, the third member of the persisted-index family
-(LSH signatures for text, ``operators/dedup.py:939``; IVF lists for
+(LSH signatures for text, ``operators/dedup.py``; IVF lists for
 embeddings, ``operators/vectors.py``).
 
 At 100 TB the crawl arrives daily and the historical corpus must not be
@@ -11,14 +11,11 @@ its multi-index-hamming band rows and hive-partitioned by band, so a
 probe is a band-aligned equi-join of only the BATCH's band rows against
 the at-rest layout — never a re-band of history, never all-pairs.
 
-Consistency contract (shared with the other two indexes, verbatim
-semantics): meta carries the banding parameters and an id-type pin plus
-the ``format_version`` sentinel (invalidated ``-1`` before state writes,
-stamped last — a crash mid-append leaves an index that loudly fails the
-read gate); writers follow the claim protocol v3
-(``operators/indexmeta.py``): uniquely-named claim files, claim BEFORE
-the anti-join reads the at-rest state, re-verify before the ``-1`` stamp,
-confirm after it, sweep on success. Probes are never blocked by claims.
+Consistency (shared with the other two indexes): meta carries the banding
+parameters, an id-type pin and the hash ``width`` next to the
+``format_version`` sentinel; the read gate, the build bracket and the
+claim-guarded append are the one index lifecycle of
+``operators/indexmeta.py``. Probes are never blocked by claims.
 
 No reference counterpart; north-star extension surface.
 """
@@ -31,55 +28,25 @@ from pyspark.sql import functions as F
 from thewhisperdb_spark.operators import checkpoint_counted
 from thewhisperdb_spark.operators.imagededup import band_hashes
 from thewhisperdb_spark.operators.indexmeta import (
-    claim_sentinel,
-    confirm_claim,
-    release_claim,
-    verify_claim,
-    write_meta_row,
+    IndexKind,
+    build_bracket,
+    mutate_index,
+    open_index,
 )
 
 HASH_INDEX_FORMAT_VERSION = 1
+HASH_INDEX = IndexKind(
+    "hash", HASH_INDEX_FORMAT_VERSION,
+    "format_version int, max_hamming int, bands int, id_type string, "
+    "width int",
+    "dhash_index_build",
+    {"width": 64})                   # pre-r11 indexes banded all 64 bits
 
 
-def _meta_writer(spark: SparkSession, path: str, max_hamming: int,
-                 bands: int, id_type: str, width: int = 64):
-    def write(version: int) -> None:
-        write_meta_row(
-            spark, f"{path}/meta",
-            "format_version int, max_hamming int, bands int, "
-            "id_type string, width int",
-            (version, max_hamming, bands, id_type, width))
-    return write
-
-
-def _hash_index_meta(spark: SparkSession, path: str) -> dict:
-    from thewhisperdb_spark.operators.indexmeta import read_meta_rows
-    rows = read_meta_rows(spark, f"{path}/meta")
-    if not rows:
-        raise ValueError(f"hash index at {path} has an empty meta")
-    m = dict(rows[0])
-    m.setdefault("width", 64)        # pre-r11 indexes banded all 64 bits
-    if m["width"] is None:
-        m["width"] = 64
-    if m["format_version"] != HASH_INDEX_FORMAT_VERSION:
-        raise ValueError(
-            f"hash index at {path} has format_version "
-            f"{m['format_version']} (expected {HASH_INDEX_FORMAT_VERSION}):"
-            " either a writer is mid-mutation / crashed mid-mutation "
-            "(in-progress -1) or the layout predates this reader — rebuild "
-            "via dhash_index_build")
-    return m
-
-
-def dhash_index_build(hashes: DataFrame, path: str, max_hamming: int = 4,
-                      bands: int | None = None, id_col: str = "path",
-                      hash_col: str = "dhash", width: int = 64) -> None:
-    """Materialize the hash index: ``<path>/hashes`` (id, h),
-    ``<path>/bands`` (slice, id) hive-partitioned by band, ``<path>/meta``
-    (banding parameters + id type + the completion sentinel, invalidated
-    first / stamped last). ``bands`` defaults to ``max_hamming + 1``
-    (multi-index-hamming optimum — see ``hamming_near_dup_pairs``); rows
-    with a NULL hash (quarantined decodes) are not indexed."""
+def _hash_build(hashes: DataFrame, max_hamming: int, bands: int | None,
+                id_col: str, hash_col: str, width: int):
+    """Validate a build's banding; return its meta and the writes of its
+    hashes and band rows (``write(path)``) for a ``build_bracket``."""
     bands = max_hamming + 1 if bands is None else bands
     if max_hamming >= bands:
         raise ValueError("pigeonhole guarantee needs max_hamming < bands")
@@ -94,17 +61,32 @@ def dhash_index_build(hashes: DataFrame, path: str, max_hamming: int = 4,
         # zero-width band slices frozen into meta = every row collides
         # in those bands on every future probe
         raise ValueError(f"bands={bands} exceeds hash width={width}")
-    spark = hashes.sparkSession
     h = (hashes.filter(F.col(hash_col).isNotNull())
          .select(F.col(id_col).alias("id"), F.col(hash_col).alias("h")))
-    write_meta = _meta_writer(spark, path, max_hamming, bands,
-                              h.schema["id"].dataType.simpleString(),
+    meta = {"max_hamming": max_hamming, "bands": bands,
+            "id_type": h.schema["id"].dataType.simpleString(),
+            "width": width}
+
+    def write(path: str) -> None:
+        h.write.mode("overwrite").parquet(f"{path}/hashes")
+        (band_hashes(h, bands, width=width).write.mode("overwrite")
+         .partitionBy("band").parquet(f"{path}/bands"))
+    return meta, write
+
+
+def dhash_index_build(hashes: DataFrame, path: str, max_hamming: int = 4,
+                      bands: int | None = None, id_col: str = "path",
+                      hash_col: str = "dhash", width: int = 64) -> None:
+    """Materialize the hash index: ``<path>/hashes`` (id, h),
+    ``<path>/bands`` (slice, id) hive-partitioned by band, ``<path>/meta``
+    (banding parameters + id type + the completion sentinel). ``bands``
+    defaults to ``max_hamming + 1`` (multi-index-hamming optimum — see
+    ``hamming_near_dup_pairs``); rows with a NULL hash (quarantined
+    decodes) are not indexed."""
+    meta, write = _hash_build(hashes, max_hamming, bands, id_col, hash_col,
                               width)
-    write_meta(-1)
-    h.write.mode("overwrite").parquet(f"{path}/hashes")
-    (band_hashes(h, bands, width=width).write.mode("overwrite")
-     .partitionBy("band").parquet(f"{path}/bands"))
-    write_meta(HASH_INDEX_FORMAT_VERSION)
+    with build_bracket(hashes.sparkSession, path, HASH_INDEX, meta):
+        write(path)
 
 
 def dhash_index_append(spark: SparkSession, path: str, new_hashes: DataFrame,
@@ -112,11 +94,10 @@ def dhash_index_append(spark: SparkSession, path: str, new_hashes: DataFrame,
                        hash_col: str = "dhash") -> None:
     """Add a batch with the INDEX'S OWN banding parameters (from meta).
     Retry-idempotent (incoming ids anti-joined against the at-rest hashes
-    under the claim, so a replayed batch is a no-op) and crash-atomic
-    (both appends inside the ``-1`` sentinel bracket). Same claim-first
-    single-writer enforcement as ``lsh_index_append`` — claims never
-    block probes."""
-    m = _hash_index_meta(spark, path)
+    under the writer claim, so a replayed batch is a no-op) and
+    crash-atomic (both appends inside the ``-1`` bracket); lifecycle
+    ``indexmeta.mutate_index``, as ``lsh_index_append``."""
+    m = open_index(spark, path, HASH_INDEX)
     h = (new_hashes.filter(F.col(hash_col).isNotNull())
          .select(F.col(id_col).alias("id"), F.col(hash_col).alias("h")))
     in_type = h.schema["id"].dataType.simpleString()
@@ -124,33 +105,26 @@ def dhash_index_append(spark: SparkSession, path: str, new_hashes: DataFrame,
         raise ValueError(
             f"hash index at {path} stores {m['id_type']} ids; appending a "
             f"batch with {in_type} ids would corrupt the index")
-    write_meta = _meta_writer(spark, path, int(m["max_hamming"]),
-                              int(m["bands"]), str(m["id_type"]),
-                              int(m["width"]))
-    meta_dir = f"{path}/meta"
-    token = claim_sentinel(spark, meta_dir)
-    try:
+
+    def delta():
         idx_ids = (spark.read.schema(f"id {m['id_type']}, h long")
                    .parquet(f"{path}/hashes").select("id"))
         # emptiness rides the checkpoint job (optimization r13)
         fresh, n_fresh = checkpoint_counted(h.join(idx_ids, "id",
                                                    "left_anti"))
         if n_fresh == 0:
-            release_claim(spark, meta_dir, token)
-            return
-        banded = band_hashes(fresh, int(m["bands"]),
-                             width=int(m["width"])).localCheckpoint(
+            return None
+        return fresh, band_hashes(fresh, int(m["bands"]),
+                                  width=int(m["width"])).localCheckpoint(
             eager=True)
-    except Exception:
-        release_claim(spark, meta_dir, token)    # nothing written
-        raise
-    verify_claim(spark, meta_dir, token)
-    write_meta(-1)
-    confirm_claim(spark, meta_dir, token)
-    fresh.write.mode("append").parquet(f"{path}/hashes")
-    banded.write.mode("append").partitionBy("band").parquet(f"{path}/bands")
-    write_meta(HASH_INDEX_FORMAT_VERSION)
-    release_claim(spark, meta_dir, token, sweep=True)
+
+    def write(d):
+        fresh, banded = d
+        fresh.write.mode("append").parquet(f"{path}/hashes")
+        (banded.write.mode("append").partitionBy("band")
+         .parquet(f"{path}/bands"))
+
+    mutate_index(spark, path, HASH_INDEX, m, delta, write)
 
 
 def dhash_index_probe(spark: SparkSession, path: str, batch: DataFrame,
@@ -177,7 +151,7 @@ def dhash_index_probe(spark: SparkSession, path: str, batch: DataFrame,
     same df basis as ``video_clip_near_dup_pairs``. Capping makes the
     probe lossy for capped buckets only, exactly like the in-memory
     kernel."""
-    m = _hash_index_meta(spark, path)
+    m = open_index(spark, path, HASH_INDEX)
     if max_hamming is None:
         max_hamming = int(m["max_hamming"])
     if max_hamming >= int(m["bands"]):
@@ -256,7 +230,7 @@ def media_dedup_ingest_batch(hashes: DataFrame, batch_id: int,
     hashes, n_rows = checkpoint_counted(hashes)
     if n_rows == 0:
         return
-    m = _hash_index_meta(spark, index_path)
+    m = open_index(spark, index_path, HASH_INDEX)
     hits = (dhash_index_probe(spark, index_path, hashes,
                               id_col=id_col, hash_col=hash_col)
             .filter(F.col("batch_id") != F.col("index_id"))
@@ -289,11 +263,11 @@ def stream_media_dedup_ingest(stream: DataFrame, index_path: str,
     appended — ``media_dedup_ingest_batch`` per micro-batch under a
     streaming checkpoint. Returns the started StreamingQuery
     (availableNow drains and stops)."""
+    from thewhisperdb_spark.streaming.jobs import start_foreach_batch
+
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         media_dedup_ingest_batch(batch_df, batch_id, index_path,
                                  survivors_dir, id_col=id_col,
                                  hash_col=hash_col)
 
-    return (stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True).start())
+    return start_foreach_batch(stream, write_batch, checkpoint_dir)

@@ -1,8 +1,19 @@
-"""Single-writer claim protocol for persisted-index meta sentinels (v3).
+"""The one lifecycle of every persisted index (LSH, ``operators/dedup.py``;
+IVF, ``operators/vectors.py``; banded hash, ``operators/hashindex.py``).
 
-Both persisted indexes (LSH, ``operators/dedup.py``; IVF,
-``operators/vectors.py``) bracket every mutation with a meta sentinel so a
-crash mid-mutation leaves an index that loudly fails the read gate
+This module owns the whole lifecycle; the index modules hold only their
+own delta computations and writes:
+
+- ``open_index`` — the read gate: reads the meta row, fills in legacy
+  defaults and refuses a missing meta, an in-progress ``-1`` and a
+  foreign format version with one message set;
+- ``build_bracket`` — a build: stamp ``-1``, write, stamp the version;
+- ``mutate_index`` — an append/delete/compact/rebalance: the
+  single-writer claim protocol below around the caller's delta and
+  writes;
+- ``stamp_meta`` — the one meta writer under the kind's DDL.
+
+A crash mid-mutation leaves an index that loudly fails the read gate
 (``format_version -1``) instead of one that silently serves a torn state.
 The claim protocol layered on top enforces the single-writer contract
 WITHOUT blocking readers for the whole mutation.
@@ -20,7 +31,7 @@ uuid as tie-break) — newest-wins is what keeps a crashed writer's
 leftover claim file from deadlocking the index forever: the next claimant
 is newer by construction and simply wins.
 
-Mutation lifecycle (all call sites spell it identically):
+Mutation lifecycle (``mutate_index`` is its one implementation):
 
 1. ``claim_sentinel``: gate on the sentinel (refuse ``-1`` — another
    writer is inside, or crashed inside, its data-write bracket), then PUT
@@ -30,7 +41,8 @@ Mutation lifecycle (all call sites spell it identically):
 2. The writer computes the delta UNDER the claim (at-rest reads resolve
    post-claim, so every committed prior mutation is observed). A failure
    here calls ``release_claim`` (delete own claim file — meta was never
-   touched) and re-raises having written nothing.
+   touched) and re-raises having written nothing; so does a delta with
+   nothing to write (a replayed batch), which returns as a no-op.
 3. ``verify_claim``: immediately before the first state write, re-read
    the sentinel (a ``-1`` means another writer got inside its bracket —
    abort) and re-list the claims (a newer claim, or our file swept by a
@@ -76,6 +88,8 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from contextlib import contextmanager
+from dataclasses import dataclass, field
 
 
 def write_meta_row(spark, path: str, schema_ddl: str, values) -> None:
@@ -331,3 +345,100 @@ def release_claim(spark, meta_dir: str, token: str,
                 _delete_claim(spark, meta_dir, name)
     else:
         _delete_claim(spark, meta_dir, token)
+
+
+@dataclass(frozen=True)
+class IndexKind:
+    """One persisted-index family: the name its errors use, the format
+    version this build reads and writes, the meta row's DDL (first column
+    ``format_version``), the function that rebuilds it, and the values
+    that metas written before a column existed read as."""
+    name: str
+    version: int
+    ddl: str
+    builder: str
+    legacy: dict = field(default_factory=dict)
+
+
+def open_index(spark, path: str, kind: IndexKind) -> dict:
+    """The read gate of every probe, stats call and mutation: the meta
+    row of the index at ``path`` as a dict, legacy columns filled in.
+    Raises ``ValueError`` for a missing meta, an in-progress ``-1``
+    (a writer is inside, or died inside, its data-write bracket) and a
+    format version other than ``kind.version``. Only a MISSING meta is
+    translated — IO/permission/corruption errors propagate with their
+    real cause."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        rows = read_meta_rows(spark, f"{path}/meta")
+    except AnalysisException as e:
+        raise ValueError(
+            f"{kind.name} index at {path} has no meta marker — not an "
+            "index, built before format versioning, or an interrupted "
+            f"build removed it; rebuild with {kind.builder}") from e
+    m = dict(rows[0]) if rows else {}
+    ver = int(m.get("format_version") or 0)
+    if ver == -1:
+        raise ValueError(
+            f"{kind.name} index at {path} is marked in-progress/interrupted "
+            "(format_version -1): a writer died inside its data-write "
+            f"bracket, or is still in it; rebuild with {kind.builder}")
+    if ver != kind.version:
+        raise ValueError(
+            f"{kind.name} index at {path} is format v{ver}, this build "
+            f"reads v{kind.version}; rebuild with {kind.builder}")
+    for col, default in kind.legacy.items():
+        if m.get(col) is None:
+            m[col] = default
+    return m
+
+
+def stamp_meta(spark, path: str, kind: IndexKind, meta: dict,
+               version: int) -> None:
+    """Write ``meta`` (as ``open_index`` returns it, or a build's fresh
+    parameters) as the meta row of the index at ``path`` under
+    ``kind.ddl``, with ``format_version`` = ``version``."""
+    from pyspark.sql.types import StructType
+
+    names = StructType.fromDDL(kind.ddl).fieldNames()
+    write_meta_row(spark, f"{path}/meta", kind.ddl,
+                   [version if n == "format_version" else meta.get(n)
+                    for n in names])
+
+
+@contextmanager
+def build_bracket(spark, path: str, kind: IndexKind, meta: dict):
+    """A (re)build: meta is stamped ``-1`` before the body's writes and
+    the version after them, so a build that dies anywhere in between —
+    over an existing index too — leaves one that loudly fails the gate
+    instead of one serving mixed-generation data."""
+    stamp_meta(spark, path, kind, meta, -1)
+    yield
+    stamp_meta(spark, path, kind, meta, kind.version)
+
+
+def mutate_index(spark, path: str, kind: IndexKind, meta: dict,
+                 delta, write) -> None:
+    """One mutation of the index at ``path`` (``meta`` from
+    ``open_index``) under the claim protocol above: claim, ``delta()``
+    under the claim (``None`` = nothing to write: the claim is released
+    and the call is a no-op; an exception releases it and re-raises),
+    verify, stamp ``-1``, confirm, ``write(delta)``, stamp the version,
+    sweep the claims."""
+    meta_dir = f"{path}/meta"
+    token = claim_sentinel(spark, meta_dir)
+    try:
+        d = delta()
+    except Exception:
+        release_claim(spark, meta_dir, token)    # nothing written
+        raise
+    if d is None:
+        release_claim(spark, meta_dir, token)
+        return
+    verify_claim(spark, meta_dir, token)
+    stamp_meta(spark, path, kind, meta, -1)
+    confirm_claim(spark, meta_dir, token)
+    write(d)
+    stamp_meta(spark, path, kind, meta, kind.version)
+    release_claim(spark, meta_dir, token, sweep=True)

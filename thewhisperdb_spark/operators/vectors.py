@@ -20,6 +20,9 @@ Dense cosine in numpy (Arrow batches) has one implementation per kernel:
   and the IVF BLAS path, merged by one global window (``_keep_top``);
 - ``_ivf_probes`` and ``_ivf_rank`` are the IVF probe head and scoring
   tail of ``ivf_knn_join`` and ``ivf_index_probe``.
+
+The persisted IVF index (``ivf_index_*``) follows the shared index
+lifecycle of ``operators/indexmeta.py``.
 """
 
 from __future__ import annotations
@@ -28,8 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from thewhisperdb_spark.operators.indexmeta import (
-    claim_sentinel, confirm_claim, release_claim, verify_claim,
-    write_meta_row)
+    IndexKind, build_bracket, mutate_index, open_index, parquet_row_count)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -978,69 +980,21 @@ def ann_lsh_pairs(embeddings: DataFrame, threshold: float, dim: int,
 # md5-min subsampling (engine-portable); v1 used xxhash64. Mixed-version
 # probe/append against a stale index would silently mis-assign cells, so the
 # build stamps this into <path>/meta and probe/append refuse a mismatch
-# (see CHANGELOG.md).
+# (see CHANGELOG.md). Meta's ``id_type`` (recorded by build since r8) lets
+# the probe's cold-start empty frames carry the CORPUS id type; pre-r8
+# metas lack it.
 INDEX_FORMAT_VERSION = 2
+IVF_INDEX = IndexKind(
+    "IVF", INDEX_FORMAT_VERSION,
+    "format_version int, hash_scheme string, id_type string",
+    "ivf_index_build")
 
 
-def _check_index_version(spark, path: str) -> dict:
-    """Raise loudly when probing/appending an index whose on-disk format
-    version doesn't match this module (or that predates versioning).
-    Only a MISSING meta is translated into the rebuild message — transient
-    IO/permission/corruption errors propagate with their real cause, so a
-    healthy index never gets misdiagnosed as pre-versioning. Returns the
-    meta row as a dict (``id_type`` may be absent on pre-r8 metas)."""
-    from pyspark.errors import AnalysisException
-
-    from thewhisperdb_spark.operators.indexmeta import read_meta_rows
-
-    try:
-        meta = read_meta_rows(spark, f"{path}/meta")
-    except AnalysisException as e:
-        raise ValueError(
-            f"IVF index at {path} has no meta/format marker — it was built "
-            f"by a pre-v{INDEX_FORMAT_VERSION} build whose hash scheme is "
-            "incompatible, or an interrupted build removed it; rebuild "
-            "with ivf_index_build") from e
-    ver = int(meta[0]["format_version"]) if meta else 0
-    if ver == -1:
-        raise ValueError(
-            f"IVF index at {path} is marked in-progress/interrupted "
-            "(format_version -1): a rebuild died before completing; "
-            "rebuild with ivf_index_build")
-    if ver != INDEX_FORMAT_VERSION:
-        raise ValueError(
-            f"IVF index at {path} is format v{ver}, this build writes "
-            f"v{INDEX_FORMAT_VERSION}; sketches across versions do not "
-            "compare equal — rebuild with ivf_index_build")
-    return dict(meta[0]) if meta else {}
-
-
-def _ivf_meta_writer(spark, path: str, id_type: str | None = None):
-    """One meta writer shared by build/append/delete/rebalance so the
-    sentinel protocol is spelled identically at every site; writer claims
-    live in separate uniquely-named files (``indexmeta`` v3) — the
-    sentinel never carries a token, so a claim can never clobber an
-    in-progress ``-1``. ``id_type``
-    (recorded by build since r8) lets the probe's cold-start empty frames
-    carry the CORPUS id type — without it an empty index would type
-    neighbor_id from the query side, flipping the probe's output schema
-    between cold and warm states. None preserves whatever the at-rest
-    meta already records (or omits, on pre-r8 metas)."""
-    if id_type is None:
-        try:
-            from thewhisperdb_spark.operators.indexmeta import (
-                read_meta_rows)
-            rows = read_meta_rows(spark, f"{path}/meta")
-            id_type = rows[0].get("id_type") if rows else None
-        except Exception:
-            id_type = None
-
-    def write_meta(version: int) -> None:
-        write_meta_row(
-            spark, f"{path}/meta",
-            "format_version int, hash_scheme string, id_type string",
-            (version, "md5-min-v2", id_type))
-    return write_meta
+def _ivf_write(path: str, assigned: DataFrame, cents: DataFrame) -> None:
+    """Overwrite an index's centroids and cell-partitioned lists."""
+    cents.write.mode("overwrite").parquet(f"{path}/centroids")
+    (assigned.write.mode("overwrite").partitionBy("cell")
+     .parquet(f"{path}/lists"))
 
 
 def ivf_index_build(corpus: DataFrame, path: str, n_cells: int = 16,
@@ -1056,21 +1010,10 @@ def ivf_index_build(corpus: DataFrame, path: str, n_cells: int = 16,
     """
     assigned, cents = ivf_assign(corpus, n_cells, id_col, vec_col,
                                  centroids=centroids)
-    spark = corpus.sparkSession
-    write_meta = _ivf_meta_writer(
-        spark, path,
-        id_type=corpus.schema[id_col].dataType.simpleString())
-    # meta is the build-completion sentinel: invalidate it FIRST (version
-    # -1), write the data, then stamp the real version LAST — a build that
-    # dies anywhere in between leaves an index that loudly FAILS the
-    # version gate instead of one that passes it with mixed-generation
-    # centroids/lists (this covers rebuilds over an existing same-version
-    # index too, where ordering alone wouldn't)
-    write_meta(-1)
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
-    (assigned.write.mode("overwrite").partitionBy("cell")
-     .parquet(f"{path}/lists"))
-    write_meta(INDEX_FORMAT_VERSION)
+    meta = {"hash_scheme": "md5-min-v2",
+            "id_type": corpus.schema[id_col].dataType.simpleString()}
+    with build_bracket(corpus.sparkSession, path, IVF_INDEX, meta):
+        _ivf_write(path, assigned, cents)
 
 
 def ivf_index_probe(spark, path: str, queries: DataFrame, k: int,
@@ -1091,7 +1034,7 @@ def ivf_index_probe(spark, path: str, queries: DataFrame, k: int,
     """
     from pyspark.errors import AnalysisException
 
-    meta = _check_index_version(spark, path)
+    meta = open_index(spark, path, IVF_INDEX)
     qt = queries.schema[q_id].dataType.simpleString()
     # cold-start empty frames carry the CORPUS id type from meta (r8):
     # the probe's output schema must not flip between the empty and
@@ -1134,29 +1077,15 @@ def ivf_index_append(spark, path: str, new_vectors: DataFrame,
     is the knob — ``ivf_index_rebalance``).
 
     Retry-idempotent and crash-atomic (same discipline as
-    lsh_index_append): already-indexed ids are anti-joined away before
-    writing, so a replayed batch job is a no-op, and the write is
-    bracketed by the meta sentinel so a crash mid-append leaves an index
-    that loudly fails the gate rather than one with a partially-written
-    delta. Single-writer per index, ENFORCED: a uniquely-named claim
-    file is PUT (``indexmeta.claim_sentinel``, protocol v3) BEFORE the
-    anti-join reads the at-rest lists, re-verified (``verify_claim``)
-    before the ``-1`` stamp and re-confirmed (``confirm_claim``) after
-    it — a racing second appender either loses the newest-claim check
-    having written nothing, fails the re-verify/confirm, or claims after
-    the original stamped and anti-joins a state that already contains
-    its rows (the intended no-op). Readers are NOT blocked by the claim:
-    it never writes the sentinel (probes keep serving the last stamped
-    state through the whole anti-join/assignment phase); only the data
-    write itself is
-    bracketed by the in-progress ``-1`` — a window sized by one delta's
-    parquet append, not by the delta computation."""
+    lsh_index_append, lifecycle ``indexmeta.mutate_index``):
+    already-indexed ids are anti-joined away under the writer claim, so a
+    replayed batch job is a no-op, and only the data write sits inside
+    the ``-1`` bracket — probes keep serving through the whole
+    anti-join/assignment phase."""
     from pyspark.errors import AnalysisException
 
-    _check_index_version(spark, path)
+    m = open_index(spark, path, IVF_INDEX)
     try:
-        from thewhisperdb_spark.operators.indexmeta import (
-            parquet_row_count)
         cents = spark.read.parquet(f"{path}/centroids")
         n_cells = parquet_row_count(spark, f"{path}/centroids")
     except AnalysisException:
@@ -1198,45 +1127,32 @@ def ivf_index_append(spark, path: str, new_vectors: DataFrame,
                     f"IVF index at {path} stores {col} as {at_rest}; "
                     f"appending {incoming} would corrupt the index "
                     "(cast the batch first)")
-    write_meta = _ivf_meta_writer(spark, path)
-    # claim BEFORE the anti-join (the LSH append's discipline): the
-    # at-rest file listing is resolved under the claim, so a retry that
-    # raced the original append either loses the claim/re-verify or
-    # anti-joins a state already containing the original's rows (lands as
-    # the intended no-op). The claim keeps the version VALID — probes keep
-    # serving through this whole phase. A failure during the delta
-    # computation releases the claim before re-raising (nothing written).
-    meta_dir = f"{path}/meta"
-    token = claim_sentinel(spark, meta_dir)
-    try:
+
+    def delta():
+        # the at-rest file listing is resolved under the claim, so a retry
+        # that raced the original append anti-joins a state already
+        # containing the original's rows (the intended no-op); emptiness
+        # rides the checkpoint job (optimization r13)
         from thewhisperdb_spark.operators import checkpoint_counted
         try:
             at_rest_ids = (spark.read.parquet(f"{path}/lists")
                            .select(F.col(id_col)))
-            # emptiness rides the checkpoint job (optimization r13)
             fresh, n_fresh = checkpoint_counted(
                 new_vectors.join(at_rest_ids, id_col, "left_anti"))
         except AnalysisException:
             # partless lists dir (total takedown): this append re-seeds it
             fresh, n_fresh = checkpoint_counted(new_vectors)
         if n_fresh == 0:
-            release_claim(spark, meta_dir, token)  # replayed batch: no-op
-            return
+            return None                              # replayed batch
         assigned, _ = ivf_assign(fresh, n_cells, id_col, vec_col,
                                  centroids=cents)
-        assigned = assigned.localCheckpoint(eager=True)
-    except Exception:
-        release_claim(spark, meta_dir, token)      # nothing written
-        raise
-    # in-progress bracket around ONLY the state-mutating write; confirm
-    # AFTER the -1 stamp closes the verify->stamp claim window
-    verify_claim(spark, meta_dir, token)
-    write_meta(-1)
-    confirm_claim(spark, meta_dir, token)
-    (assigned.write.mode("append").partitionBy("cell")
-     .parquet(f"{path}/lists"))
-    write_meta(INDEX_FORMAT_VERSION)
-    release_claim(spark, meta_dir, token, sweep=True)
+        return assigned.localCheckpoint(eager=True)
+
+    def write(assigned):
+        (assigned.write.mode("append").partitionBy("cell")
+         .parquet(f"{path}/lists"))
+
+    mutate_index(spark, path, IVF_INDEX, m, delta, write)
 
 
 def ivf_index_delete(spark, path: str, ids: DataFrame,
@@ -1246,29 +1162,23 @@ def ivf_index_delete(spark, path: str, ids: DataFrame,
     are untouched (they are statistics, not documents — the next
     ``ivf_index_rebalance`` re-fits them over the survivors); the lists
     are anti-joined against the (broadcast) delete set and rewritten
-    under the meta sentinel, preserving the cell partitioning. Idempotent
-    for absent ids. No-op on a cold (empty) index.
+    inside the ``-1`` bracket, preserving the cell partitioning.
+    Idempotent for absent ids. No-op on a cold (empty) index.
 
     The at-rest lists are read and checkpointed UNDER the writer claim
-    (claim first, then read — the append discipline): reading before the
-    claim opens a lost-update window where an append that commits between
-    the checkpoint and the claim is silently erased by the overwrite.
-    The claim keeps the version valid (probes serve through the anti-join
-    phase); only the rewrite itself is bracketed by ``-1``."""
+    (``indexmeta.mutate_index``): reading before the claim opens a
+    lost-update window where an append that commits between the
+    checkpoint and the claim is silently erased by the overwrite."""
     from pyspark.errors import AnalysisException
 
-    _check_index_version(spark, path)
-    write_meta = _ivf_meta_writer(spark, path)
+    m = open_index(spark, path, IVF_INDEX)
     del_ids = ids.select(F.col(id_col).alias(id_col)).distinct()
-    meta_dir = f"{path}/meta"
-    token = claim_sentinel(spark, meta_dir)
-    try:
+
+    def delta():
         try:
             lists = spark.read.parquet(f"{path}/lists")
         except AnalysisException:
-            # cold start: nothing to delete
-            release_claim(spark, meta_dir, token)
-            return
+            return None                              # cold start
         # id-type gate (the LSH delete discipline): a delete set whose id
         # type differs from the at-rest lists silently matches NOTHING in
         # the anti-join — the takedown would "succeed" removing zero rows
@@ -1279,22 +1189,17 @@ def ivf_index_delete(spark, path: str, ids: DataFrame,
                 f"IVF index at {path} stores {id_col} as {at_rest}; a "
                 f"delete set with {incoming} ids would silently match "
                 "nothing (cast the ids first)")
-        lists = (lists.join(F.broadcast(del_ids), id_col, "left_anti")
-                 .localCheckpoint(eager=True))
-        from thewhisperdb_spark.operators.indexmeta import (
-            parquet_row_count)
-        n_cells = parquet_row_count(spark, f"{path}/centroids")
-    except Exception:
-        release_claim(spark, meta_dir, token)      # nothing written
-        raise
-    verify_claim(spark, meta_dir, token)
-    write_meta(-1)
-    confirm_claim(spark, meta_dir, token)
-    (lists.repartition(max(int(n_cells), 1), "cell")
-     .write.mode("overwrite").partitionBy("cell")
-     .parquet(f"{path}/lists"))
-    write_meta(INDEX_FORMAT_VERSION)
-    release_claim(spark, meta_dir, token, sweep=True)
+        return (lists.join(F.broadcast(del_ids), id_col, "left_anti")
+                .localCheckpoint(eager=True),
+                parquet_row_count(spark, f"{path}/centroids"))
+
+    def write(d):
+        lists, n_cells = d
+        (lists.repartition(max(int(n_cells), 1), "cell")
+         .write.mode("overwrite").partitionBy("cell")
+         .parquet(f"{path}/lists"))
+
+    mutate_index(spark, path, IVF_INDEX, m, delta, write)
 
 
 def ivf_index_stats(spark, path: str) -> DataFrame:
@@ -1307,10 +1212,8 @@ def ivf_index_stats(spark, path: str) -> DataFrame:
     max_cell, median_cell, skew, n_empty_cells)."""
     from pyspark.errors import AnalysisException
 
-    _check_index_version(spark, path)
+    open_index(spark, path, IVF_INDEX)
     try:
-        from thewhisperdb_spark.operators.indexmeta import (
-            parquet_row_count)
         n_cents = parquet_row_count(spark, f"{path}/centroids")
         per_cell = (spark.read.parquet(f"{path}/lists")
                     .groupBy("cell").agg(F.count(F.lit(1)).alias("n")))
@@ -1351,28 +1254,21 @@ def ivf_index_rebalance(spark, path: str, max_iter: int = 3,
     Refines the centroids with ``max_iter`` Lloyd steps over the CURRENT
     corpus, warm-started from the existing centroids (cell ids are
     preserved — no re-init, so a mild drift converges in 1-2 cheap
-    rounds), then rewrites the inverted lists under the refreshed
-    assignment via ``ivf_index_build`` — inheriting its meta-sentinel
-    protocol, so a rebalance that dies mid-rewrite leaves an index that
-    loudly fails the version gate. The corpus is localCheckpointed first
-    (the rewrite cannot stream from the files it overwrites). Ids and
-    row count are preserved exactly; only cell membership moves.
+    rounds), then rewrites centroids and inverted lists under the
+    refreshed assignment. The corpus is localCheckpointed first (the
+    rewrite cannot stream from the files it overwrites). Ids and row
+    count are preserved exactly; only cell membership moves.
 
-    CLAIM-FIRST like every other mutation (code-review r8): the corpus
-    read/checkpoint and the multi-iteration Lloyd refinement — the
-    LONGEST delta window of any index mutation — run under the writer
-    claim, so an append committing mid-rebalance either loses its own
-    claim or makes this rebalance lose its re-verify; a rebalance that
-    read before claiming would silently erase that append in its
-    overwrite. Probes keep serving throughout (the claim keeps the
-    version valid; only ivf_index_build's rewrite brackets with -1)."""
+    The corpus read and the Lloyd refinement — the LONGEST delta window
+    of any index mutation — run under the writer claim
+    (``indexmeta.mutate_index``), so an append committing mid-rebalance
+    is never silently erased by the overwrite; probes keep serving until
+    the rewrite's ``-1`` bracket."""
     from pyspark.errors import AnalysisException
 
-    _check_index_version(spark, path)
-    write_meta = _ivf_meta_writer(spark, path)
-    meta_dir = f"{path}/meta"
-    token = claim_sentinel(spark, meta_dir)
-    try:
+    m = open_index(spark, path, IVF_INDEX)
+
+    def delta():
         try:
             cents = spark.read.parquet(f"{path}/centroids")
             init = [(int(r["cell"]), list(r["cvec"]))
@@ -1380,21 +1276,14 @@ def ivf_index_rebalance(spark, path: str, max_iter: int = 3,
             corpus = (spark.read.parquet(f"{path}/lists")
                       .select(id_col, vec_col).localCheckpoint(eager=True))
         except AnalysisException:
-            # cold start: nothing to rebalance, index left untouched
-            release_claim(spark, meta_dir, token)
-            return
+            return None        # cold start: nothing to rebalance
         refreshed = kmeans_fit(corpus, k=len(init), max_iter=max_iter,
                                id_col=id_col, vec_col=vec_col, init=init)
-        refreshed = refreshed.localCheckpoint(eager=True)
-    except Exception:
-        release_claim(spark, meta_dir, token)      # nothing written
-        raise
-    # stamp -1 HERE (ivf_index_build re-stamps it, harmlessly) so the
-    # confirm runs after the invalidate — same verify->stamp->confirm
-    # discipline as every other mutation
-    verify_claim(spark, meta_dir, token)
-    write_meta(-1)
-    confirm_claim(spark, meta_dir, token)
-    ivf_index_build(corpus, path, n_cells=len(init), id_col=id_col,
-                    vec_col=vec_col, centroids=refreshed)
-    release_claim(spark, meta_dir, token, sweep=True)
+        return corpus, refreshed.localCheckpoint(eager=True), len(init)
+
+    def write(d):
+        corpus, refreshed, n_cells = d
+        _ivf_write(path, *ivf_assign(corpus, n_cells, id_col, vec_col,
+                                     centroids=refreshed))
+
+    mutate_index(spark, path, IVF_INDEX, m, delta, write)

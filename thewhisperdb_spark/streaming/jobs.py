@@ -259,6 +259,18 @@ def dedup_stream(events: DataFrame, keys: list[str] | None = None,
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
 
 
+def start_foreach_batch(stream_df: DataFrame, write_batch,
+                        checkpoint_dir: str):
+    """Start ``write_batch(batch_df, batch_id)`` over ``stream_df`` under
+    the streaming checkpoint ``checkpoint_dir`` (exactly-once batch
+    tracking; a replayed batch is re-delivered with its batch_id). The
+    availableNow trigger drains all current input, then stops. Returns
+    the started StreamingQuery."""
+    return (stream_df.writeStream.foreachBatch(write_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True).start())
+
+
 def run_to_memory(stream_df: DataFrame, name: str,
                   output_mode: str = "update") -> DataFrame:
     """Drive a streaming DataFrame over all currently-available input and
@@ -298,9 +310,7 @@ def idempotent_parquet_sink(stream_df: DataFrame, out_dir: str,
         df.write.mode("overwrite").parquet(
             os.path.join(out_dir, f"batch_id={batch_id}"))
 
-    return (stream_df.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True).start())
+    return start_foreach_batch(stream_df, write_batch, checkpoint_dir)
 
 
 def daily_active_users(events: DataFrame, watermark: str = "2 days") -> DataFrame:
@@ -338,9 +348,7 @@ def stream_append_to_ivf(stream: DataFrame, index_path: str,
         ivf_index_append(batch_df.sparkSession, index_path, batch_df,
                          id_col=id_col, vec_col=vec_col)
 
-    return (stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True).start())
+    return start_foreach_batch(stream, write_batch, checkpoint_dir)
 
 
 def stream_append_to_lsh(stream: DataFrame, index_path: str,
@@ -364,9 +372,7 @@ def stream_append_to_lsh(stream: DataFrame, index_path: str,
         lsh_index_append(batch_df.sparkSession, index_path, batch_df,
                          id_col=id_col, text_col=text_col)
 
-    return (stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True).start())
+    return start_foreach_batch(stream, write_batch, checkpoint_dir)
 
 
 def dedup_ingest_batch(df: DataFrame, batch_id: int, index_path: str,
@@ -405,8 +411,9 @@ def dedup_ingest_batch(df: DataFrame, batch_id: int, index_path: str,
     the whole batch replays identically (the checkpoint guarantees
     that)."""
     from thewhisperdb_spark.operators.dedup import (
-        _lsh_index_meta, lsh_index_append, lsh_index_probe,
-        minhash_lsh_pairs, near_dup_groups, pick_survivors)
+        LSH_INDEX, lsh_index_append, lsh_index_probe, minhash_lsh_pairs,
+        near_dup_groups, pick_survivors)
+    from thewhisperdb_spark.operators.indexmeta import open_index
     from thewhisperdb_spark.operators.text import word_ngrams
 
     # emptiness probe fused INTO the barrier (optimization r13): the old
@@ -418,7 +425,7 @@ def dedup_ingest_batch(df: DataFrame, batch_id: int, index_path: str,
     df, n_rows = checkpoint_counted(df)
     if n_rows == 0:
         return
-    m = _lsh_index_meta(spark, index_path)
+    m = open_index(spark, index_path, LSH_INDEX)
     hits = (lsh_index_probe(spark, index_path, df, threshold=threshold,
                             id_col=id_col, text_col=text_col)
             .filter(F.col("batch_id") != F.col("index_id"))
@@ -466,9 +473,7 @@ def stream_dedup_ingest(stream: DataFrame, index_path: str,
                            threshold=threshold, id_col=id_col,
                            text_col=text_col, quality_col=quality_col)
 
-    return (stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True).start())
+    return start_foreach_batch(stream, write_batch, checkpoint_dir)
 
 
 def embedding_dedup_ingest_batch(df: DataFrame, batch_id: int,
@@ -560,9 +565,7 @@ def stream_embedding_dedup_ingest(stream: DataFrame, index_path: str,
             threshold=threshold, n_probe=n_probe, id_col=id_col,
             vec_col=vec_col, quality_col=quality_col, blas=blas)
 
-    return (stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True).start())
+    return start_foreach_batch(stream, write_batch, checkpoint_dir)
 
 
 def compact_ingest_survivors(spark, survivors_dir: str, id_col: str,
@@ -657,9 +660,7 @@ def stream_shards_sink(stream_df: DataFrame, out_dir: str,
          .option("partitionOverwriteMode", "dynamic")
          .parquet(out_dir))
 
-    return (stream_df.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True).start())
+    return start_foreach_batch(stream_df, write_batch, checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -774,9 +775,7 @@ def stream_crawl_curation(stream: DataFrame, survivors_dir: str,
                              psl=resolve(psl, spark),
                              min_chars=min_chars, quality=quality)
 
-    return (stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True).start())
+    return start_foreach_batch(stream, write_batch, checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -864,9 +863,7 @@ def stream_clip_dedup_ingest(stream: DataFrame, index_path: str,
                                 id_col=id_col, hash_col=hash_col,
                                 idx_col=idx_col)
 
-    return (stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True).start())
+    return start_foreach_batch(stream, write_batch, checkpoint_dir)
 
 
 def frontier_schedule_batch(batch_df: DataFrame, batch_id: int,
@@ -971,6 +968,4 @@ def stream_frontier_schedule(stream: DataFrame, schedule_dir: str,
                                 default_delay_s=default_delay_s,
                                 priority_col=priority_col)
 
-    return (stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True).start())
+    return start_foreach_batch(stream, write_batch, checkpoint_dir)
