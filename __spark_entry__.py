@@ -348,7 +348,7 @@ def cosine_similarity(spark, sf_dir):
     return (e.filter(F.col("vec_id").between(1, 20))
             .join(F.broadcast(probe))
             .select("vec_id",
-                    F.round(V.cosine(F.col("embedding"), F.col("_q")), 6)
+                    F.round(V.cosine("embedding", "_q"), 6)
                     .alias("similarity")))
 
 
@@ -4694,7 +4694,7 @@ def hybrid_search_rrf(spark, sf_dir):
     sims = (emb.filter(F.col("vec_id") != 0)
             .join(F.broadcast(probe))
             .select(F.col("vec_id").alias("doc_id"),
-                    F.round(V.cosine(F.col("embedding"), F.col("_qvec")), 6)
+                    F.round(V.cosine("embedding", "_qvec"), 6)
                     .alias("sim")))
     v_cand = sims.orderBy(F.col("sim").desc(), "doc_id").limit(100)
     wv = Window.orderBy(F.col("sim").desc(), "doc_id")

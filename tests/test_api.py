@@ -391,9 +391,11 @@ def test_similar_error_precedence(engine):
 
 def test_point_request_job_budget(spark, engine, tmp_path, jobs_of):
     """Request-path probes are single CollectLimit actions: on a loaded and
-    checkpointed graph, exists and get cost one Spark job each, listing a
-    node's files after an upload two (probe + read), and generating an
-    embedding one (the lookup that also decides the 404)."""
+    checkpointed graph, exists and get cost one Spark job each, and
+    generating an embedding one (the lookup that also decides the 404).
+    Listing a node's files, adding files and deleting a node each cost one
+    (the union scan of ``files_of``); similar two (the embedding probe and
+    one top-k over it); a create none (the engine knows its highest id)."""
     engine.save(str(tmp_path / "db"))
     eng = GraphEngine.load(spark, str(tmp_path / "db"))
     eng.checkpoint()
@@ -401,12 +403,48 @@ def test_point_request_job_budget(spark, engine, tmp_path, jobs_of):
     budget = {
         "exists": (lambda: eng.exists(2), 1),
         "get": (lambda: api.dispatch(eng, "GET", "/api/nodes/2"), 1),
-        "files": (lambda: api.dispatch(eng, "GET", "/api/nodes/1/files"), 2),
+        "files": (lambda: api.dispatch(eng, "GET", "/api/nodes/1/files"), 1),
         "gen_embedding": (
             lambda: api.dispatch(eng, "POST", "/api/nodes/3/embedding"), 1),
+        "similar": (
+            lambda: api.dispatch(eng, "GET", "/api/nodes/3/similar"), 2),
+        "add_files": (lambda: api.dispatch(
+            eng, "POST", "/api/nodes/2/files", files=[("a.txt", b"a")],
+            storage_root=str(tmp_path / "files")), 1),
+        "create": (lambda: api.dispatch(
+            eng, "POST", "/api/nodes",
+            body={"title": "T", "author": "a", "subject": "s"}), 0),
+        "delete": (lambda: api.dispatch(
+            eng, "DELETE", "/api/nodes/2",
+            storage_root=str(tmp_path / "files")), 1),
     }
     got = {k: jobs_of(f"budget-{k}", fn)
            for k, (fn, _) in budget.items()}
     assert got == {k: want for k, (_, want) in budget.items()}
     assert api.dispatch(eng, "GET", "/api/nodes/1/files")[1]["files"] == \
         ["notes.txt"]
+    assert api.dispatch(eng, "GET", "/api/nodes/4")[1]["node"]["title"] == "T"
+    assert api.dispatch(eng, "GET", "/api/nodes/2")[0] == 404
+
+
+def test_dispatch_names_its_spark_jobs(spark, engine):
+    """Every Spark job of a routed request is described as "{METHOD}
+    {route pattern}" in the status store; the caller's own description and
+    job group are left as they were."""
+    sc = spark.sparkContext
+    sc.setJobDescription("outer")
+    sc.setLocalProperty("spark.jobGroup.id", "described")
+    try:
+        api.dispatch(engine, "GET", "/api/nodes/2")
+        api.dispatch(engine, "GET", "/api/nodes/count")
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+        assert sc.getLocalProperty("spark.jobGroup.id") == "described"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    descs = set()
+    for jid in sc.statusTracker().getJobIdsForGroup("described"):
+        descs.add(store.job(jid).description().get())
+    assert descs == {"GET /api/nodes/:id", "GET /api/nodes/count"}

@@ -406,6 +406,65 @@ def test_next_id_reuses_a_deleted_highest_id(engine):
     assert engine.ingest_node({"title": "e", "author": "a", "subject": "s"}) == 4
 
 
+def _outside_assignment(eng) -> int:
+    from pyspark.sql import functions as F
+
+    eng.nodes = eng.nodes.unionByName(
+        eng.nodes.filter("id = 1").withColumn("id", F.lit(10).cast("long")))
+    return 11
+
+
+def _merge_insert(eng) -> int:
+    from pyspark.sql import functions as F
+
+    eng.merge_nodes(
+        eng.nodes.filter("id = 2").withColumn("id", F.lit(20).cast("long")))
+    return 21
+
+
+def _cluster_job(eng) -> int:
+    from thewhisperdb_spark import api
+
+    assert api.dispatch(eng, "POST", "/api/cluster")[0] == 200
+    return 4
+
+
+def _link_all(eng) -> int:
+    from thewhisperdb_spark import api
+
+    assert api.dispatch(eng, "POST", "/api/tags/link-all")[0] == 200
+    return 4
+
+
+@pytest.mark.parametrize("write", [_outside_assignment, _merge_insert,
+                                   _cluster_job, _link_all])
+def test_next_id_after_writes_the_engine_does_not_own(engine, write):
+    """The engine keeps its highest id across its own writes; any other
+    assignment to ``nodes`` drops it, so the next create still gets
+    max(id)+1."""
+    for t in ("a", "b", "c"):
+        engine.ingest_node({"title": t, "author": "a", "subject": "s",
+                            "tags": ["x", t]})
+    engine.checkpoint()
+    want = write(engine)
+    assert engine.ingest_node({"title": "n", "author": "a",
+                               "subject": "s"}) == want
+    assert engine.ingest_node({"title": "m", "author": "a",
+                               "subject": "s"}) == want + 1
+
+
+def test_next_id_on_a_loaded_unchecked_engine(engine, spark, tmp_path):
+    """A loaded engine that never checkpointed reads its highest id from
+    the table."""
+    for t in ("a", "b", "c", "d"):
+        engine.ingest_node({"title": t, "author": "a", "subject": "s"})
+    engine.delete_node(2)
+    engine.save(str(tmp_path / "db"))
+    loaded = GraphEngine.load(spark, str(tmp_path / "db"))
+    assert loaded.ingest_node({"title": "e", "author": "a",
+                               "subject": "s"}) == 5
+
+
 def test_writes_leave_no_python_rdd_leaf(engine, tmp_path):
     """Write deltas are JVM literal relations: after creates, uploads, tag
     bank additions and id-list deletes, no state table's plan reads a

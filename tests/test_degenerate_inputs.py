@@ -157,7 +157,7 @@ def test_vector_ops_survive_zero_and_mismatched(spark):
          (4, [0.6, 0.8])],
         "vec_id long, embedding array<double>")
     row = (emb.alias("a").crossJoin(emb.alias("b"))
-           .select(V.cosine(F.col("a.embedding"), F.col("b.embedding"))
+           .select(V.cosine("a.embedding", "b.embedding")
                    .alias("c")).collect())
     vals = [r["c"] for r in row]
     assert all(v == v for v in vals)             # no NaN

@@ -47,6 +47,18 @@ def test_sniff_decode_cascade():
                         "charset=x-sjis")[:2] == (jp, "shift_jis")
 
 
+def test_sniff_decode_utf16le_leading_nul_keeps_bom_verdict():
+    """FF FE 00 00 is the UTF-16LE BOM + U+0000, not a UTF-32LE BOM that
+    would swallow the NUL; the UTF-32BE BOM is unambiguous and stays."""
+    import codecs
+
+    for text in ("\x00", "\x00a\x00", "\x00\x00\x00"):
+        assert sniff_decode(codecs.BOM_UTF16_LE + text.encode("utf-16-le"),
+                            None) == (text, "utf-16-le", "bom", False)
+    assert sniff_decode(codecs.BOM_UTF32_BE + "hé".encode("utf-32-be"),
+                        None) == ("hé", "utf-32-be", "bom", False)
+
+
 def codecs_utf8_sig(s: str) -> bytes:
     import codecs
 

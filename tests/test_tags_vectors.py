@@ -85,7 +85,7 @@ def test_cosine_edge_rules(spark):
         [([1.0, 0.0], [1.0, 0.0]), ([1.0, 0.0], [0.0, 1.0]),
          ([1.0, 0.0], [0.0, 0.0]), ([1.0, 0.0], [1.0, 0.0, 0.0])],
         "a array<double>, b array<double>")
-    got = [r["c"] for r in df.select(V.cosine(F.col("a"), F.col("b")).alias("c")).collect()]
+    got = [r["c"] for r in df.select(V.cosine("a", "b").alias("c")).collect()]
     assert got[0] == 1.0
     assert got[1] == 0.0
     assert got[2] == 0.0  # zero-norm -> 0 (src/embedding/Clustering.cpp:22-24)

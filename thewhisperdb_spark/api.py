@@ -28,6 +28,13 @@ services being configured (OPENAI_API_KEY / DEEPSEEK_API_KEY env,
 deterministic fallback clients (``functions/llm.py``) play always-initialized
 services, so those routes never 500 on configuration — inject a real client
 via the ``embedder``/``tagger`` parameters to call out.
+
+Every plan a request builds is SQL text (``filter(str)``, ``selectExpr``,
+``F.expr``), so building it takes a few JVM calls whatever its field count
+or vector length; request values enter that text only through
+``schemas.sql_literal``. Each decision is at most one Spark action: a
+handler takes its 404/400 from the read it needs anyway. ``dispatch``
+describes the request's Spark jobs as "{METHOD} {route pattern}".
 """
 
 from __future__ import annotations
@@ -35,11 +42,17 @@ from __future__ import annotations
 from typing import Any
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, FloatType, LongType
 
 from thewhisperdb_spark.crud import GraphEngine
-from thewhisperdb_spark.operators.filters import find_nodes, has_embedding
-from thewhisperdb_spark.operators.sorting import paginate, sort_nodes
-from thewhisperdb_spark.schemas import _fits
+from thewhisperdb_spark.operators.filters import (
+    find_nodes,
+    has_embedding,
+    point_lookup,
+)
+from thewhisperdb_spark.operators.sorting import paginate, sort_nodes, top_k
+from thewhisperdb_spark.operators.vectors import cosine
+from thewhisperdb_spark.schemas import _fits, sql_literal
 
 
 class ApiError(Exception):
@@ -143,28 +156,26 @@ def count_nodes(engine: GraphEngine, filters: dict[str, str] | None = None) -> d
 
 def similar_nodes(engine: GraphEngine, node_id: Any, k: Any = 10) -> dict:
     """GET /api/nodes/:id/similar: cosine top-k among embedded nodes, each
-    result row carrying its similarity (``src/main.cpp:518-577``)."""
-    from thewhisperdb_spark.operators.vectors import topk_similar
-
+    result row carrying its similarity (``src/main.cpp:518-577``). Two
+    actions: the probe that reads the embedding, then one top-k over it as
+    a literal vector that returns the full rows in (similarity desc, id)
+    order."""
     nid = _parse_int(node_id, "id")
     k_i = _parse_int(k, "k", 32)
     if k_i < 0:
         raise ApiError(400, "k must be non-negative")
     # one probe decides both errors: no row -> 404, no embedding -> 400
-    probe = (engine.nodes.filter(F.col("id") == nid)
-             .select("embedding").take(1))
+    probe = point_lookup(engine.nodes, nid).selectExpr("embedding").take(1)
     if not probe:
         raise ApiError(404, f"node {nid} not found")
-    if not probe[0]["embedding"]:
+    query = probe[0]["embedding"]
+    if not query:
         raise ApiError(400, f"node {nid} has no embedding")
-    embedded = engine.nodes.filter(has_embedding("embedding"))
-    top = topk_similar(embedded.select("id", "embedding"), nid, k=k_i,
-                       id_col="id")
-    sims = {r["id"]: r["similarity"] for r in top.collect()}
-    rows = _node_rows(engine.nodes.filter(F.col("id").isin(list(sims))))
-    for d in rows:
-        d["similarity"] = sims[d["id"]]
-    rows.sort(key=lambda d: (-d["similarity"], d["id"]))
+    q = sql_literal(query, ArrayType(FloatType()))
+    scored = (engine.nodes.filter(has_embedding("embedding"))
+              .filter(f"id != {sql_literal(nid, LongType())}")
+              .withColumn("similarity", cosine("embedding", q)))
+    rows = _node_rows(top_k(scored, "similarity", k_i, tie_col="id"))
     return {"status": "success", "count": len(rows), "nodes": rows}
 
 
@@ -195,12 +206,10 @@ def node_files(engine: GraphEngine, node_id: Any) -> dict:
     """GET /api/nodes/:id/files (``src/main.cpp:330-348``): 404 on unknown
     node, else the node's file paths in insertion order."""
     nid = _parse_int(node_id, "id")
-    if not engine.exists(nid):
+    files = engine.files_of(nid)
+    if files is None:
         raise ApiError(404, f"Node not found: {nid}")
-    rows = (engine.node_files.filter(F.col("node_id") == nid)
-            .select("file_path").collect())
-    return {"status": "success", "nodeId": nid,
-            "files": [r["file_path"] for r in rows]}
+    return {"status": "success", "nodeId": nid, "files": files}
 
 
 def add_files_to_node(engine: GraphEngine, node_id: Any,
@@ -385,6 +394,9 @@ _ROUTES: list[tuple[str, str]] = [
     ("POST", "/api/cluster"),
 ]
 
+_JOB_DESCRIPTION = "spark.job.description"
+
+
 def _match(pattern: str, path: str) -> dict[str, str] | None:
     pseg = pattern.strip("/").split("/")
     seg = path.strip("/").split("/")
@@ -442,59 +454,77 @@ def dispatch(engine: GraphEngine, method: str, path: str,
         if m == method:
             matched = (pattern, params)
             break
+    if matched is None:
+        return ((405, _error("Method not allowed")) if path_exists
+                else (404, _error("Endpoint not found")))
+    pattern, params = matched
+    # the request's Spark jobs carry its route in the status store; the job
+    # group is left alone (callers that count jobs own it)
+    sc = engine.spark.sparkContext
+    prev = sc.getLocalProperty(_JOB_DESCRIPTION)
+    sc.setJobDescription(f"{method} {pattern}")
     try:
-        if matched is None:
-            if path_exists:
-                raise ApiError(405, "Method not allowed")
-            raise ApiError(404, "Endpoint not found")
-        pattern, params = matched
-        if pattern == "/health":
-            return 200, {"status": "ok", "service": "TheWhisperDB",
-                         "nodes_count": engine.count()}
-        if pattern == "/api/nodes/count":
-            return 200, count_nodes(engine, query)
-        if pattern == "/api/nodes/:id/similar":
-            return 200, similar_nodes(engine, params["id"],
-                                      k=query.get("k", 10))
-        if pattern == "/api/nodes/:id/files":
-            if method == "GET":
-                return 200, node_files(engine, params["id"])
-            return 201, add_files_to_node(engine, params["id"], files,
-                                          storage_root)
-        if pattern == "/api/nodes/:id/embedding":
-            return 200, generate_node_embedding(engine, params["id"],
-                                                embedder=embedder)
-        if pattern == "/api/nodes/:id/tags":
-            return 200, generate_node_tags(engine, params["id"],
-                                           tagger=tagger)
-        if pattern == "/api/tags/link-all":
-            return 200, link_all_tags(engine,
-                                      query.get("threshold", 0.3))
-        if pattern == "/api/tags/:tag/nodes":
-            return 200, tag_nodes(engine, params["tag"])
-        if pattern == "/api/tags":
-            return 200, tag_bank(engine)
-        if pattern == "/api/clusters":
-            return 200, clusters(engine)
-        if pattern == "/api/nodes/:id":
-            if method == "GET":
-                return 200, get_node(engine, params["id"])
-            if method == "PUT":
-                return 200, update_node(engine, params["id"],
-                                        _parse_body(body))
-            return 200, delete_node(engine, params["id"], storage_root)
-        if pattern == "/api/nodes":
-            if method == "GET":
-                return 200, list_nodes(
-                    engine, query,
-                    sort=query.get("sort", "id"),
-                    order=query.get("order", "asc"),
-                    limit=query.get("limit", 0),
-                    offset=query.get("offset", 0))
-            return 201, create_node(engine, _parse_body(body), files,
-                                    storage_root)
-        # POST /api/cluster
-        b = _parse_body(body) if body not in (None, "") else {}
-        return 200, run_cluster_job(engine, b.get("threshold", 0.75))
+        return _handle(engine, method, pattern, params, query, body, files,
+                       storage_root, embedder, tagger)
     except ApiError as e:
-        return e.status, {"status": "error", "message": str(e)}
+        return e.status, _error(str(e))
+    finally:
+        sc.setLocalProperty(_JOB_DESCRIPTION, prev)
+
+
+def _error(message: str) -> dict:
+    return {"status": "error", "message": message}
+
+
+def _handle(engine: GraphEngine, method: str, pattern: str,
+            params: dict[str, str], query: dict[str, str], body, files,
+            storage_root: str | None, embedder, tagger) -> tuple[int, dict]:
+    """Run the handler of the matched route; ApiError propagates."""
+    if pattern == "/health":
+        return 200, {"status": "ok", "service": "TheWhisperDB",
+                     "nodes_count": engine.count()}
+    if pattern == "/api/nodes/count":
+        return 200, count_nodes(engine, query)
+    if pattern == "/api/nodes/:id/similar":
+        return 200, similar_nodes(engine, params["id"],
+                                  k=query.get("k", 10))
+    if pattern == "/api/nodes/:id/files":
+        if method == "GET":
+            return 200, node_files(engine, params["id"])
+        return 201, add_files_to_node(engine, params["id"], files,
+                                      storage_root)
+    if pattern == "/api/nodes/:id/embedding":
+        return 200, generate_node_embedding(engine, params["id"],
+                                            embedder=embedder)
+    if pattern == "/api/nodes/:id/tags":
+        return 200, generate_node_tags(engine, params["id"],
+                                       tagger=tagger)
+    if pattern == "/api/tags/link-all":
+        return 200, link_all_tags(engine,
+                                  query.get("threshold", 0.3))
+    if pattern == "/api/tags/:tag/nodes":
+        return 200, tag_nodes(engine, params["tag"])
+    if pattern == "/api/tags":
+        return 200, tag_bank(engine)
+    if pattern == "/api/clusters":
+        return 200, clusters(engine)
+    if pattern == "/api/nodes/:id":
+        if method == "GET":
+            return 200, get_node(engine, params["id"])
+        if method == "PUT":
+            return 200, update_node(engine, params["id"],
+                                    _parse_body(body))
+        return 200, delete_node(engine, params["id"], storage_root)
+    if pattern == "/api/nodes":
+        if method == "GET":
+            return 200, list_nodes(
+                engine, query,
+                sort=query.get("sort", "id"),
+                order=query.get("order", "asc"),
+                limit=query.get("limit", 0),
+                offset=query.get("offset", 0))
+        return 201, create_node(engine, _parse_body(body), files,
+                                storage_root)
+    # POST /api/cluster
+    b = _parse_body(body) if body not in (None, "") else {}
+    return 200, run_cluster_job(engine, b.get("threshold", 0.75))

@@ -11,7 +11,12 @@ O(DB-size) synchronous rewrite per write: persistence is an explicit
 Single-writer semantics throughout (the reference is a single-threaded server,
 ``src/server/wserver.cpp:112-293``): id generation is ``max(id)+1``
 (``src/core/GraphDB.cpp:485-491``), NOT ``monotonically_increasing_id`` —
-contiguity is part of the observable contract.
+contiguity is part of the observable contract. The engine keeps the highest
+id itself, so a create runs no Spark job once it is known.
+
+Deltas, single-row writes, links and lookups are built as SQL text with
+values from ``schemas.sql_literal``: a write costs a few JVM calls, not one
+or more per column and vector element.
 """
 
 from __future__ import annotations
@@ -20,7 +25,7 @@ import math
 import os
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -30,7 +35,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from thewhisperdb_spark.operators.filters import exists
+from thewhisperdb_spark.operators.filters import exists, point_lookup
 from thewhisperdb_spark.operators.graph import links_view
 from thewhisperdb_spark.schemas import (
     NODE_FILES_SCHEMA,
@@ -38,6 +43,8 @@ from thewhisperdb_spark.schemas import (
     REQUIRED_NODE_FIELDS,
     TAG_BANK_SCHEMA,
     _fits,
+    sql_literal,
+    sql_name,
 )
 
 # state tables in constructor order, with the schema JSON is read under
@@ -59,15 +66,15 @@ def _read_table(spark: SparkSession, path: str, table: str,
 def _literal_rows(spark: SparkSession, schema: StructType,
                   rows: list[tuple]) -> DataFrame:
     """``rows`` (tuples in ``schema`` field order) as a one-partition JVM
-    literal relation cast to ``schema``. ``spark.createDataFrame(list)``
-    would leave a Python-RDD leaf in every later plan over the table, so
-    each scan of it would start Python workers; a literal over
-    ``spark.range`` is planned and read in the JVM alone."""
-    structs = [F.struct(*[F.lit(v).cast(f.dataType).alias(f.name)
-                          for v, f in zip(row, schema.fields)])
-               for row in rows]
-    return spark.range(1, numPartitions=1).select(
-        F.inline(F.array(*structs).cast(ArrayType(schema))))
+    literal relation cast to ``schema``: one ``sql_literal`` array of
+    structs, inlined. ``spark.createDataFrame(list)`` would leave a
+    Python-RDD leaf in every later plan over the table, so each scan of it
+    would start Python workers; a literal over ``spark.range`` is planned
+    and read in the JVM alone."""
+    names = schema.fieldNames()
+    values = [dict(zip(names, row)) for row in rows]
+    return spark.range(1, numPartitions=1).selectExpr(
+        f"inline({sql_literal(values, ArrayType(schema))})")
 
 
 def _valid_course(v: Any) -> int | None:
@@ -152,6 +159,12 @@ class GraphEngine:
 
     ``nodes`` carries ``linked_nodes`` (adjacency embedded per row, like the
     reference's ``LinkedNodes``); ``edges()`` derives the normalized view.
+
+    The engine owns the highest live id (``_max_id``, None when unknown):
+    ``checkpoint`` reads it on its own job, creates advance it, and an
+    assignment to ``nodes`` from outside the engine's single-row writers,
+    or a delete of the highest id, drops it, so ``next_id`` aggregates
+    again only then.
     """
 
     def __init__(self, spark: SparkSession, nodes: DataFrame | None = None,
@@ -164,6 +177,15 @@ class GraphEngine:
             _literal_rows(spark, NODE_FILES_SCHEMA, [])
         self.tag_bank = tag_bank if tag_bank is not None else \
             _literal_rows(spark, TAG_BANK_SCHEMA, [])
+
+    @property
+    def nodes(self) -> DataFrame:
+        return self._nodes
+
+    @nodes.setter
+    def nodes(self, df: DataFrame) -> None:
+        """A new node table may hold any ids: the known maximum is dropped."""
+        self._nodes, self._max_id = df, None
 
     # ---- S1-S3 persistence -------------------------------------------------
 
@@ -260,7 +282,7 @@ class GraphEngine:
 
     def find(self, node_id: int) -> dict:
         """F7 PK lookup; raises KeyError if missing (``GraphDB.cpp:30-38``)."""
-        rows = self.nodes.filter(F.col("id") == node_id).limit(1).collect()
+        rows = point_lookup(self.nodes, node_id).limit(1).collect()
         if not rows:
             raise KeyError(node_id)
         return rows[0].asDict()
@@ -273,18 +295,34 @@ class GraphEngine:
         """A1 (``GraphDB.cpp:195-197``)."""
         return self.nodes.count()
 
+    def files_of(self, node_id: int) -> list[str] | None:
+        """The node's file paths in insertion order, or None when the node
+        does not exist: one job, a union scan of ``nodes`` (the existence
+        probe) and ``node_files``."""
+        probe = point_lookup(self.nodes, node_id).selectExpr(
+            "true AS node", "CAST(NULL AS STRING) AS file_path")
+        files = point_lookup(self.node_files, node_id, "node_id").selectExpr(
+            "false AS node", "file_path")
+        rows = probe.union(files).collect()
+        if not any(r["node"] for r in rows):
+            return None
+        return [r["file_path"] for r in rows if not r["node"]]
+
     def next_id(self) -> int:
-        """M1 id generation: ``max(id) + 1`` over the live nodes — one
-        scalar aggregate, single-writer. Ids in a gap (a deleted node below
-        the current maximum) are never handed out again, but deleting the
-        node that holds the highest id frees that id: the next create gets
-        it back. The reference (``GraphDB.cpp:485-491``) differs the other
-        way: its static counter restarts at 1 per process and re-fills
-        every gap after a restart. Callers that keep ids in external
-        references must not delete the newest node and expect its id to
-        stay retired."""
-        row = self.nodes.agg(F.max("id").alias("m")).collect()[0]
-        return int(row["m"] or 0) + 1
+        """M1 id generation: ``max(id) + 1`` over the live nodes,
+        single-writer. The maximum is the engine's own (see the class
+        docstring); when unknown it is one scalar aggregate, kept for the
+        next call. Ids in a gap (a deleted node below the current maximum)
+        are never handed out again, but deleting the node that holds the
+        highest id frees that id: the next create gets it back. The
+        reference (``GraphDB.cpp:485-491``) differs the other way: its
+        static counter restarts at 1 per process and re-fills every gap
+        after a restart. Callers that keep ids in external references must
+        not delete the newest node and expect its id to stay retired."""
+        if self._max_id is None:
+            row = self.nodes.selectExpr("max(id) AS m").collect()[0]
+            self._max_id = int(row["m"] or 0)
+        return self._max_id + 1
 
     # ---- M1/M6 ingest ------------------------------------------------------
 
@@ -316,8 +354,9 @@ class GraphEngine:
                description if isinstance(description, str) else "",
                date, tags if tags is not None else [],
                paths[0] if paths else None, [], None)
-        self.nodes = self.nodes.unionByName(
+        self._nodes = self.nodes.unionByName(
             _literal_rows(self.spark, NODE_SCHEMA, [row]))
+        self._max_id = new_id
         return new_id
 
     # ---- M2 partial update -------------------------------------------------
@@ -339,16 +378,16 @@ class GraphEngine:
 
     def set_fields(self, node_id: int, values: dict[str, Any]) -> None:
         """Write already-validated ``values`` (column -> Python value, None
-        for NULL) into the row ``node_id``: one ``select`` over every
+        for NULL) into the row ``node_id``: one ``selectExpr`` over every
         column, so a write adds one Project to the plan whatever its field
         count. The single-row write path of every handler."""
         if not values:
             return
-        hit = F.col("id") == node_id
-        self.nodes = self.nodes.select(*[
-            F.when(hit, F.lit(values[c]).cast(_NODE_TYPES[c]))
-            .otherwise(F.col(c)).alias(c) if c in values else F.col(c)
-            for c in self.nodes.columns])
+        hit = f"id = {sql_literal(node_id, LongType())}"
+        self._nodes = self.nodes.selectExpr(*[
+            f"CASE WHEN {hit} THEN {sql_literal(values[c], _NODE_TYPES[c])} "
+            f"ELSE {sql_name(c)} END AS {sql_name(c)}" if c in values
+            else sql_name(c) for c in self.nodes.columns])
 
     def link(self, node_id: int, partners: list[int]) -> None:
         """Merge-link ``node_id`` with ``partners`` on both sides,
@@ -357,14 +396,14 @@ class GraphEngine:
         node."""
         if not partners:
             return
-        links = F.coalesce(F.col("linked_nodes"), F.array().cast("array<long>"))
-        self.nodes = self.nodes.withColumn(
-            "linked_nodes",
-            F.when(F.col("id") == node_id,
-                   F.array_union(links, F.lit(partners).cast("array<long>")))
-            .when(F.col("id").isin(partners),
-                  F.array_union(links, F.lit([node_id]).cast("array<long>")))
-            .otherwise(F.col("linked_nodes")))
+        ids = ArrayType(LongType())
+        links = "coalesce(linked_nodes, CAST(array() AS array<bigint>))"
+        self._nodes = self.nodes.withColumn("linked_nodes", F.expr(
+            f"CASE WHEN id = {sql_literal(node_id, LongType())} "
+            f"THEN array_union({links}, {sql_literal(partners, ids)}) "
+            f"WHEN array_contains({sql_literal(partners, ids)}, id) "
+            f"THEN array_union({links}, {sql_literal([node_id], ids)}) "
+            "ELSE linked_nodes END"))
 
     def merge_nodes(self, updates, delete_ids=None) -> None:
         """Batch MERGE INTO: one full-outer join on id — matched rows are
@@ -417,16 +456,21 @@ class GraphEngine:
     # ---- M3 delete ---------------------------------------------------------
 
     def delete_node(self, node_id: int, storage_root: str | None = None) -> None:
-        """M3: remove node + cascade its files (``GraphDB.cpp:392-414``)."""
-        if not self.exists(node_id):
+        """M3: remove node + cascade its files (``GraphDB.cpp:392-414``).
+        One job: ``files_of`` decides the 404 and lists the files."""
+        files = self.files_of(node_id)
+        if files is None:
             raise KeyError(node_id)
         if storage_root:
             from thewhisperdb_spark.storage import delete_file
 
-            for r in self.node_files.filter(F.col("node_id") == node_id).collect():
-                delete_file(storage_root, r["file_path"])
-        self.nodes = self.nodes.filter(F.col("id") != node_id)
-        self.node_files = self.node_files.filter(F.col("node_id") != node_id)
+            for p in files:
+                delete_file(storage_root, p)
+        nid = sql_literal(node_id, LongType())
+        self._nodes = self.nodes.filter(f"id != {nid}")
+        if node_id == self._max_id:
+            self._max_id = None
+        self.node_files = self.node_files.filter(f"node_id != {nid}")
 
     # ---- M4/M5 file attachment --------------------------------------------
 
@@ -440,10 +484,10 @@ class GraphEngine:
         """M4 (``GraphDB.cpp:416-448``): save each file's bytes (S5), append
         their path rows in order, and let the first file of a node that had
         none set its ``storage_path``. Raises KeyError if the node is absent.
-        Returns the stored paths."""
-        if not self.exists(node_id):
+        Returns the stored paths. One job: ``files_of``."""
+        had_files = self.files_of(node_id)
+        if had_files is None:
             raise KeyError(node_id)
-        had_files = exists(self.node_files, node_id, id_col="node_id")
         paths = self._store_files(node_id, files, storage_root)
         if paths and not had_files:
             self.set_fields(node_id, {"storage_path": paths[0]})
@@ -474,7 +518,8 @@ class GraphEngine:
 
             delete_file(storage_root, rel_path)
         self.node_files = self.node_files.filter(
-            ~((F.col("node_id") == node_id) & (F.col("file_path") == rel_path)))
+            f"NOT (node_id = {sql_literal(node_id, LongType())} "
+            f"AND file_path = {sql_literal(rel_path)})")
         if not exists(self.node_files, node_id, id_col="node_id"):
             self.set_fields(node_id, {"storage_path": None})
 
@@ -495,8 +540,12 @@ class GraphEngine:
         """Cut lineage after a mutation burst: long withColumn/union chains
         grow the logical plan; localCheckpoint keeps planning O(1) per op.
         ALL state tables are checkpointed — tag_bank included, so a
-        checkpointed engine can save back to its own load path."""
-        self.nodes = self.nodes.localCheckpoint(eager=True)
+        checkpointed engine can save back to its own load path. The highest
+        id is observed on the nodes checkpoint's own job."""
+        obs = Observation()
+        self._nodes = (self.nodes.observe(obs, F.expr("max(id)").alias("m"))
+                       .localCheckpoint(eager=True))
+        self._max_id = int(obs.get["m"] or 0)
         self.node_files = self.node_files.localCheckpoint(eager=True)
         self.tag_bank = self.tag_bank.localCheckpoint(eager=True)
 

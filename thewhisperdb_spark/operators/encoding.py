@@ -3,7 +3,9 @@ between a WARC response body (bytes) and ``html_extract`` (text). Web
 bytes lie about their encoding constantly; the WET-generation rule this
 module implements is the standard cascade:
 
-1. a Unicode BOM wins outright (UTF-8 / UTF-16LE/BE / UTF-32LE/BE);
+1. a Unicode BOM wins outright (UTF-8 / UTF-16LE/BE / UTF-32BE);
+   ``FF FE 00 00`` reads as UTF-16LE + U+0000, as the WHATWG BOM sniff
+   does, never as UTF-32LE: the two readings collide byte for byte;
 2. else the transport charset (Content-Type ``charset=`` parameter);
 3. else an HTML ``<meta charset=...>`` / ``http-equiv`` declaration
    scanned in the first 1024 bytes (ASCII superset assumption, the
@@ -36,8 +38,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
+# No UTF-32LE entry: its BOM is the UTF-16LE BOM followed by U+0000, so
+# claiming it would drop a leading NUL from UTF-16LE text
 _BOMS = (
-    (codecs.BOM_UTF32_LE, "utf-32-le"), (codecs.BOM_UTF32_BE, "utf-32-be"),
+    (codecs.BOM_UTF32_BE, "utf-32-be"),
     (codecs.BOM_UTF8, "utf-8-sig"),
     (codecs.BOM_UTF16_LE, "utf-16-le"), (codecs.BOM_UTF16_BE, "utf-16-be"),
 )

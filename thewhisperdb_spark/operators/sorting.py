@@ -6,14 +6,24 @@ partition top-k + single merge, no global sort shuffle — which is the plan we
 want at 100 TB. The reference's std::sort is non-stable, so ties are
 unspecified; we always append ``id`` as the final key for determinism (both
 here and in every oracle query).
+
+Sort keys are SQL text (``F.expr`` of a quoted column name), one JVM call
+each however the key is spelled.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from thewhisperdb_spark.schemas import sql_name
+
 SORTABLE_KEYS = ("id", "title", "author", "subject", "course", "date")
+
+
+def _key(col: str, ascending: bool) -> Column:
+    c = F.expr(sql_name(col))
+    return c.asc() if ascending else c.desc()
 
 
 def sort_nodes(df: DataFrame, key: str, ascending: bool = True,
@@ -27,10 +37,10 @@ def sort_nodes(df: DataFrame, key: str, ascending: bool = True,
     whitelist = set(allowed if allowed is not None else SORTABLE_KEYS) | {id_col}
     if key not in whitelist or key not in df.columns:
         key = id_col
-    primary = F.col(key).asc() if ascending else F.col(key).desc()
+    primary = _key(key, ascending)
     if key == id_col:
         return df.orderBy(primary)
-    return df.orderBy(primary, F.col(id_col).asc())
+    return df.orderBy(primary, _key(id_col, True))
 
 
 def paginate(df: DataFrame, offset: int = 0, limit: int = 0) -> DataFrame:
@@ -47,6 +57,5 @@ def top_k(df: DataFrame, order_col: str, k: int, ascending: bool = False,
           tie_col: str | None = None) -> DataFrame:
     """O3/J7 support: top-k by a measure -> TakeOrderedAndProject physical op
     (vs the reference's full sort then slice, ``src/main.cpp:552-561``)."""
-    primary = F.col(order_col).asc() if ascending else F.col(order_col).desc()
-    keys = [primary] + ([F.col(tie_col).asc()] if tie_col else [])
+    keys = [_key(order_col, ascending)] + ([_key(tie_col, True)] if tie_col else [])
     return df.orderBy(*keys).limit(k)

@@ -15,6 +15,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
+
+from thewhisperdb_spark.schemas import sql_literal, sql_name
 
 
 def tag_index(nodes: DataFrame, id_col: str = "id", tags_col: str = "tags") -> DataFrame:
@@ -26,8 +29,9 @@ def tag_index(nodes: DataFrame, id_col: str = "id", tags_col: str = "tags") -> D
 
 
 def nodes_by_tag(nodes: DataFrame, tag: str, tags_col: str = "tags") -> DataFrame:
-    """J1 ``findNodesByTag`` (``src/core/GraphDB.cpp:508-517``)."""
-    return nodes.filter(F.array_contains(F.col(tags_col), tag))
+    """J1 ``findNodesByTag`` (``src/core/GraphDB.cpp:508-517``), one
+    ``filter`` of SQL text."""
+    return nodes.filter(f"array_contains({sql_name(tags_col)}, {sql_literal(tag)})")
 
 
 def shared_tag_partners(nodes: DataFrame, node_id: int,
@@ -196,23 +200,21 @@ def jaccard_partners(nodes: DataFrame, node_id: int, threshold: float = 0.3,
     set is broadcast and every other tagged node is scored against it in one
     scan, so the cost is O(n) per call. The arithmetic is ``jaccard_pairs``'
     (distinct tag sets, ``inter.cast("double") / union``, ``inter > 0``), so
-    both return the same partners and scores. An untagged node has none."""
-    def tag_set(c: str):
-        return F.array_sort(F.array_distinct(F.col(c)))
-
-    probe = nodes.filter(F.col(id_col) == node_id).select(
-        tag_set(tags_col).alias("_pts"))
-    others = nodes.filter((F.col(id_col) != node_id)
-                          & (F.size(F.col(tags_col)) > 0)).select(
-        F.col(id_col).alias("id"), tag_set(tags_col).alias("_ts"))
-    inter = F.size(F.array_intersect(F.col("_ts"), F.col("_pts")))
-    union = F.size(F.col("_ts")) + F.size(F.col("_pts")) - inter
-    return (others.join(F.broadcast(probe),
-                        F.arrays_overlap(F.col("_ts"), F.col("_pts")))
-            .select("id", inter.alias("_inter"),
-                    (inter.cast("double") / union).alias("jaccard"))
-            .filter((F.col("_inter") > 0) & (F.col("jaccard") >= threshold))
-            .select("id", "jaccard"))
+    both return the same partners and scores. An untagged node has none.
+    Built as SQL text: a few JVM calls per operator."""
+    idc, tags = sql_name(id_col), sql_name(tags_col)
+    nid = sql_literal(node_id, LongType())
+    tag_set = f"array_sort(array_distinct({tags}))"
+    probe = nodes.filter(f"{idc} = {nid}").selectExpr(f"{tag_set} AS _pts")
+    others = nodes.filter(f"{idc} != {nid} AND size({tags}) > 0").selectExpr(
+        f"{idc} AS id", f"{tag_set} AS _ts")
+    inter = "size(array_intersect(_ts, _pts))"
+    union = f"size(_ts) + size(_pts) - {inter}"
+    return (others.join(F.broadcast(probe), F.expr("arrays_overlap(_ts, _pts)"))
+            .selectExpr("id", f"{inter} AS _inter",
+                        f"CAST({inter} AS double) / ({union}) AS jaccard")
+            .filter(f"_inter > 0 AND jaccard >= {sql_literal(float(threshold))}")
+            .selectExpr("id", "jaccard"))
 
 
 def tag_bank_union(bank: DataFrame, new_tags: DataFrame) -> DataFrame:

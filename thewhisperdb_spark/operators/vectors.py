@@ -6,7 +6,10 @@ The reference computes cosine in a hand loop and joins by O(n²) nested loops
 (``src/embedding/Clustering.cpp:7-53``; k-NN ``src/main.cpp:518-577``).
 Spark-first shape: cosine as a codegen'd higher-order-function expression over
 double arrays (no Python), pre-normalized vectors so the join predicate is a
-plain dot product, and top-k via TakeOrderedAndProject. The exact pair join is
+plain dot product, and top-k via TakeOrderedAndProject. ``dot``, ``cosine``
+and ``with_unit_vector`` are one SQL kernel over one fold (``_dot_sql``):
+they take SQL expressions (column names, or a ``schemas.sql_literal``
+vector) and build SQL text, one JVM call however long the vector. The exact pair join is
 a block cross-join — correct at oracle scale; the 100 TB path is the LSH
 bucketing in ``ann_lsh_*`` which turns the cross product into an equi-join on
 bucket ids.
@@ -32,53 +35,58 @@ from pyspark.sql import functions as F
 
 from thewhisperdb_spark.operators.indexmeta import (
     IndexKind, build_bracket, mutate_index, open_index, parquet_row_count)
+from thewhisperdb_spark.schemas import sql_name
 
 
-def dot(a: Column, b: Column) -> Column:
+# Lambda variables of the SQL kernel carry a ``__v`` prefix so they never
+# shadow a column the argument expressions name.
+
+def _dot_sql(a: str, b: str) -> str:
+    return (f"aggregate(zip_with({a}, {b}, (__vx, __vy) -> __vx * __vy), "
+            "0D, (__vacc, __vx) -> __vacc + __vx)")
+
+
+def _norm_sql(a: str) -> str:
+    return f"sqrt({_dot_sql(a, a)})"
+
+
+def _f64(a: str) -> str:
+    return f"CAST({a} AS array<double>)"
+
+
+def dot(a: str, b: str) -> Column:
     """Σ aᵢ·bᵢ as a left-fold — deterministic order, double precision."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, x: acc + x)
+    return F.expr(_dot_sql(a, b))
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """J5 cosine with the reference's edge rules: 0.0 on dimension mismatch or
-    zero norm (``src/embedding/Clustering.cpp:7-27``).
+def cosine(a: str, b: str) -> Column:
+    """J5 cosine of the SQL expressions ``a`` and ``b`` with the reference's
+    edge rules: 0.0 on dimension mismatch or zero norm
+    (``src/embedding/Clustering.cpp:7-27``).
 
     The three folds (dot, both norms) are bound once through a single-element
     ``transform`` lambda: referencing a fold expression twice in the output
     expression would re-evaluate it after projection collapse."""
-    a = a.cast("array<double>")
-    b = b.cast("array<double>")
-
-    def _cos(s: Column) -> Column:
-        return (
-            F.when((F.size(a) != F.size(b)) | (s["na"] == 0.0) | (s["nb"] == 0.0),
-                   F.lit(0.0))
-            .otherwise(s["d"] / (s["na"] * s["nb"]))
-        )
-
-    parts = F.struct(dot(a, b).alias("d"), norm(a).alias("na"), norm(b).alias("nb"))
-    return F.element_at(F.transform(F.array(parts), _cos), 1)
+    a, b = _f64(a), _f64(b)
+    parts = (f"named_struct('d', {_dot_sql(a, b)}, 'na', {_norm_sql(a)}, "
+             f"'nb', {_norm_sql(b)})")
+    return F.expr(
+        f"element_at(transform(array({parts}), __vs -> CASE WHEN "
+        f"size({a}) != size({b}) OR __vs.na = 0D OR __vs.nb = 0D THEN 0D "
+        "ELSE __vs.d / (__vs.na * __vs.nb) END), 1)")
 
 
 def with_unit_vector(df: DataFrame, vec_col: str = "embedding",
                      out_col: str = "unit") -> DataFrame:
     """Pre-normalize once so every downstream pair computation is a single dot
     product — at n² pair scale this halves the flops and lets the norm be
-    computed in the scan stage instead of inside the join."""
-    v = F.col(vec_col).cast("array<double>")
-
-    # bind the norm once via a lambda variable: referencing the norm fold
-    # inside the per-element division would re-evaluate it |v| times per row
-    def _unit(n: Column) -> Column:
-        return F.when(n == 0.0, v).otherwise(F.transform(v, lambda x: x / n))
-
-    unit = F.element_at(F.transform(F.array(norm(v)), _unit), 1)
-    return df.withColumn(out_col, unit)
+    computed in the scan stage instead of inside the join. The norm is bound
+    once via a lambda variable: referencing the norm fold inside the
+    per-element division would re-evaluate it |v| times per row."""
+    v = _f64(sql_name(vec_col))
+    return df.withColumn(out_col, F.expr(
+        f"element_at(transform(array({_norm_sql(v)}), __vn -> CASE WHEN "
+        f"__vn = 0D THEN {v} ELSE transform({v}, __vx -> __vx / __vn) END), 1)"))
 
 
 _BLOCK_ROW_BYTES = 528   # planning estimate: 64-dim double vector + id
@@ -245,7 +253,8 @@ def topk_similar(embeddings: DataFrame, query_id: int, k: int = 10,
     scored = (
         embeddings.filter(F.col(id_col) != query_id)
         .join(F.broadcast(probe))
-        .select(F.col(id_col), cosine(F.col(vec_col), F.col("_qvec")).alias("similarity"))
+        .select(F.col(id_col),
+                cosine(sql_name(vec_col), "_qvec").alias("similarity"))
     )
     return scored.orderBy(F.col("similarity").desc(), F.col(id_col).asc()).limit(k)
 
@@ -430,7 +439,7 @@ def ivf_assign(embeddings: DataFrame, n_cells: int,
     scored = emb_u.join(F.broadcast(cent_u))
     best = (
         scored.groupBy(id_col)
-        .agg(F.max(F.struct(dot(F.col("_u"), F.col("cu")).alias("sim"),
+        .agg(F.max(F.struct(dot("_u", "cu").alias("sim"),
                             F.col("cell"))).alias("_best"))
         .select(F.col(id_col), F.col("_best.cell").alias("cell"))
     )
@@ -624,7 +633,7 @@ def _ivf_probes(queries: DataFrame, cents: DataFrame, n_probe: int,
         F.col("_csim").desc(), F.col("cell").asc())
     return (q_u.join(F.broadcast(cent_u))
             .select("query_id", "qu", "cell",
-                    dot(F.col("qu"), F.col("cu")).alias("_csim"))
+                    dot("qu", "cu").alias("_csim"))
             .withColumn("_crk", F.row_number().over(wq))
             .filter(F.col("_crk") <= n_probe)
             .select("query_id", "qu", "cell"))
@@ -646,7 +655,7 @@ def _ivf_rank(probes: DataFrame, lists: DataFrame, k: int, c_id: str,
         probes.join(corp_u, "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id",
-                dot(F.col("qu"), F.col("cu2")).alias("similarity")), k)
+                dot("qu", "cu2").alias("similarity")), k)
 
 
 def _ivf_blas_topk(probes: DataFrame, corp_u: DataFrame, k: int,
@@ -943,7 +952,7 @@ def pq_knn_join(queries: DataFrame, corpus: DataFrame, k: int,
     scored = (cand.join(cvec, "neighbor_id")
               .join(F.broadcast(qdf), "query_id")
               .select("query_id", "neighbor_id",
-                      cosine(F.col("_qv"), F.col("_cv")).alias("similarity")))
+                      cosine("_qv", "_cv").alias("similarity")))
     w = Window.partitionBy("query_id").orderBy(
         F.col("similarity").desc(), F.col("neighbor_id").asc())
     return (scored.withColumn("rank", F.row_number().over(w))
@@ -967,7 +976,7 @@ def ann_lsh_pairs(embeddings: DataFrame, threshold: float, dim: int,
         p = lhs.join(rhs, ["bucket"]).filter(F.col("a") < F.col("b")).drop("bucket")
         cand = p if cand is None else cand.union(p)
     cand = cand.dropDuplicates(["a", "b"])
-    sim = cosine(F.col("va"), F.col("vb"))
+    sim = cosine("va", "vb")
     return (
         cand.select("a", "b", sim.alias("similarity"))
         .filter(F.col("similarity") >= threshold)
